@@ -200,9 +200,10 @@ def main() -> None:
     # probe with LSTORE_SPARK_SCRATCH_ROOT pointed at an empty dir).
     from lstore_spark import catalog as _catalog
     layouts: dict[str, str] = {}
+    # one stat-scan of the fixture for every family's reuse check
+    fp = _catalog.fixture_fingerprint(SF_DIR)
     for fam, fcfg in _catalog.BUCKET_FAMILIES.items():
         try:
-            fp = _catalog.fixture_fingerprint(SF_DIR)
             reused = all(
                 _catalog.scratch_dir(f"{fcfg['tag']}_{t}", SF_DIR, key=fp)[1]
                 for t in fcfg["keys"])

@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..numerics import DEC, dsum9, sql_dsum9
 from ..registry import query
-from .similarity import _norm, cosine, cosine_with_norms, partitioned_topk
+from .similarity import (_norm, cosine, cosine_with_norms, evaluate_once,
+                         partitioned_topk)
 
 
 @query(
@@ -213,7 +214,14 @@ def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     r11): at real scale the scan already carries ≥ that many splits and
     the unconditional form added a full-corpus round-robin exchange at
     exactly the volume where it costs; the partition-count probe is
-    plan metadata, no job."""
+    plan metadata, no job.
+
+    The UDF over the spread rows must be built with ``evaluate_once``.
+    A deterministic UDF whose output is filtered (the PQ keys drop NULL
+    codes) is evaluated a second time under the pushed-down filter,
+    and that copy lands BELOW this exchange: a stage at the scan's split
+    width (one task on the fixture) running the whole encode before
+    the all-core copy above the exchange runs it again."""
     p = spark.sparkContext.defaultParallelism
     return df.repartition(p) if df.rdd.getNumPartitions() < p else df
 
@@ -801,35 +809,11 @@ def q_llm_emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     3.4 s warm there (14.8 s when the invocation also pays the
     once-per-fixture codebook train).  At 100 TB you train the codebook
     on a sample batch job and encode with exactly this plan."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    import numpy as np
-
     em = load_table(spark, sf_dir, "embeddings")
-    C = pq_codebook(spark, sf_dir)
-    m_, d_ = _PQ_M, _PQ_D
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def codes_of(vec):
-        vals = vec.to_numpy()
-        dim = m_ * d_
-        # NULL-element vectors must also drop: astype turns None into
-        # nan and the argmin over nan distances returns code 0 — a
-        # valid-looking but arbitrary code (review r12)
-        ok = np.array([
-            v is not None and len(v) == dim
-            and not np.isnan(np.asarray(v, dtype=np.float64)).any()
-            for v in vals])
-        out = [None] * len(vals)
-        if ok.any():
-            codes = pq_code_rows(np.stack(vals[ok]).astype(np.float64), C)
-            for i, j in zip(np.nonzero(ok)[0], range(len(codes))):
-                out[i] = codes[j]
-        return pd.Series(out)
+    pq_codes = pq_codes_udf(pq_codebook(spark, sf_dir))
 
     return (_spread(em, spark)
-            .select("vec_id", codes_of("embedding").alias("codes"))
+            .select("vec_id", pq_codes("embedding").alias("codes"))
             .filter(F.col("codes").isNotNull())
             .select("vec_id",
                     F.array_join(F.expr(
@@ -939,6 +923,39 @@ def pq_code_rows(V, C, m_: int = _PQ_M, d_: int = _PQ_D):
     return codes.astype(np.int32)
 
 
+def pq_codes_udf(C):
+    """Arrow-batched corpus encoder shared by q_llm_emb_pq_encode and
+    q_llm_emb_pq_adc: embedding → array<int> of the M sub-codes against
+    codebook ``C`` (``pq_code_rows``).  NULL, ragged and NULL-element
+    vectors map to NULL.  Both callers filter those rows out, which is
+    why the UDF is built with ``evaluate_once``."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import ArrayType, IntegerType
+
+    dim = _PQ_M * _PQ_D
+
+    @evaluate_once
+    @F.pandas_udf(ArrayType(IntegerType()))
+    def pq_codes(vec):
+        vals = vec.to_numpy()
+        # NULL-element vectors must also drop: astype turns None into
+        # nan and the argmin over nan distances returns code 0 — a
+        # valid-looking but arbitrary code (review r12)
+        ok = np.array([
+            v is not None and len(v) == dim
+            and not np.isnan(np.asarray(v, dtype=np.float64)).any()
+            for v in vals])
+        out = [None] * len(vals)
+        if ok.any():
+            codes = pq_code_rows(np.stack(vals[ok]).astype(np.float64), C)
+            for i, j in zip(np.nonzero(ok)[0], range(len(codes))):
+                out[i] = codes[j]
+        return pd.Series(out)
+
+    return pq_codes
+
+
 @query(
     "q_llm_emb_pq_adc",
     oracle="""
@@ -1025,8 +1042,13 @@ def q_llm_emb_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
       CAST(x AS DECIMAL(30,8)): both round the exact binary expansion),
       including the (d, label) tie order.
     - The QUERY LUT (|queries| × M × k values) is computed driver-side
-      with exact Python decimals and shipped as INT64 scaled by 1e8 —
-      a decimal(30,8) IS an int64 at this magnitude.
+      with exact Python decimals, scaled by 1e8 to INT64 (a
+      decimal(30,8) IS an int64 at this magnitude), and shipped as a
+      JVM-local relation: one literal inlined over a one-row Range.
+      Its broadcast runs a single JVM task; no pickled Python RDD, no
+      Python tasks, no extra Python workers.
+    - The corpus encode UDF runs once, above the _spread exchange
+      (``evaluate_once``): the codes filter is never pushed below it.
     - The PAIR stage sums 8 int64 LUT entries per (candidate, query) in
       whole-stage codegen (long adds — it was decimal adds) and divides
       by 1e8: double(S)/1e8 is correctly rounded, which equals Spark's
@@ -1041,11 +1063,10 @@ def q_llm_emb_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     old semantics.)  NULL/ragged vectors degrade to dropped candidates
     (pytest-pinned), as in the IVF/LSH paths.  Top-k via the same
     (dist, cand_id) total order as the exact searches."""
+    import json
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, IntegerType
 
     em = load_table(spark, sf_dir, "embeddings")
     # Trained quantizer, persisted train-once/search-many (VERDICT r8
@@ -1075,33 +1096,22 @@ def q_llm_emb_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
                     s_int += int(Decimal(float(sq[c, m * d_ + j]))
                                  .quantize(Q8, ROUND_HALF_UP).scaleb(8))
                 flat.append(s_int)
-        lut_rows.append((int(qid), flat))
-    qlut = spark.createDataFrame(lut_rows, "query_id long, lut array<long>")
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def pq_codes(vec):
-        vals = vec.to_numpy()
-        dim = m_ * d_
-        # NULL-element vectors must also drop: astype turns None into
-        # nan and the argmin over nan distances returns code 0 — a
-        # valid-looking but arbitrary code (review r12)
-        ok = np.array([
-            v is not None and len(v) == dim
-            and not np.isnan(np.asarray(v, dtype=np.float64)).any()
-            for v in vals])
-        out = [None] * len(vals)
-        if ok.any():
-            codes = pq_code_rows(np.stack(vals[ok]).astype(np.float64), C)
-            for i, j in zip(np.nonzero(ok)[0], range(len(codes))):
-                out[i] = codes[j]
-        return pd.Series(out)
+        lut_rows.append({"query_id": int(qid), "lut": flat})
+    # JVM-local relation: one literal inlined over a one-row Range, so
+    # the broadcast runs one JVM task.  spark.createDataFrame(<list>)
+    # would pickle the rows into a Python RDD (Scan ExistingRDD) whose
+    # broadcast job runs Python tasks and grows the worker pool.  JSON
+    # integers parse into bigint exactly, and "[]" is a typed empty LUT.
+    qlut = spark.range(1, numPartitions=1).select(F.inline(F.from_json(
+        F.lit(json.dumps(lut_rows)),
+        "array<struct<query_id: bigint, lut: array<bigint>>>")))
 
     # Spread the single-split fixture scan so the Arrow batches run
-    # 32-way (conditional — see _spread).
+    # all-core (conditional — see _spread).
     codes_df = (
         _spread(em.filter(F.col("vec_id") >= 10), spark)
         .select(F.col("vec_id").alias("cand_id"),
-                pq_codes("embedding").alias("codes"))
+                pq_codes_udf(C)("embedding").alias("codes"))
         .filter(F.col("codes").isNotNull())
     )
     adc_terms = " + ".join(f"lut[{m} * {k} + codes[{m}]]" for m in range(m_))

@@ -98,6 +98,21 @@ def partitioned_topk(scored: DataFrame, key: str, k: int,
     )
 
 
+def evaluate_once(udf):
+    """Mark a corpus-wide pandas UDF nondeterministic, so that Catalyst
+    evaluates it in exactly one Python-eval node.
+
+    A filter on the UDF's output (an explicit ``isNotNull``, or the
+    ``isnotnull`` Catalyst infers for an inner-join key) is pushed below
+    a deterministic projection by inlining the UDF call into it.
+    ExtractPythonUDFs then plans the UDF twice over the same input: once
+    under the filter and once in the projection above it, a full extra
+    pass over the corpus.  A nondeterministic projection is never
+    inlined, so the filter stays above the one evaluation.  The UDFs
+    remain pure functions of their input; results do not change."""
+    return udf.asNondeterministic()
+
+
 def read_query_slice(sf_dir: str, bound: int = 10):
     """Query batch (vec_id < bound) via a driver-side pyarrow read, not
     a Spark job: it is a handful of rows of a local parquet file, and
@@ -969,6 +984,9 @@ def q_llm_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     norms[norms == 0.0] = np.inf  # zero centroid scores 0, never NaN-wins
     Cn = (C / norms).T.copy()
 
+    # evaluate_once: the probe join infers isnotnull(list_id) on the
+    # UDF's output, which would otherwise evaluate it a second time
+    @evaluate_once
     @F.pandas_udf("int")
     def nearest_list(vec):
         vals = vec.to_numpy()

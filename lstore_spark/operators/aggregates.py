@@ -492,6 +492,9 @@ def q_agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     set.  A true streaming sketch (Misra–Gries) would cap memory per
     task, but the exact two-phase form is already shuffle-bounded by
     vocabulary size."""
+    # function-local: a module-level import would register llm.text's
+    # keys ahead of this module's and reorder the registry
+    from ..llm.text import _SPARK_TOKENS
     from ..registry import pin
 
     docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
@@ -499,10 +502,7 @@ def q_agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpinned, Spark re-runs the scan+explode+shuffle once per branch
     # (no CSE across branches; the global_row_number lesson; review r13)
     cnt = pin(
-        docs.select(F.explode(
-            # codegen'd twin of filter(split(...), x -> x <> '') — the
-            # _SPARK_TOKENS swap (r14 session 2), same literal here
-            F.expr("array_remove(split(text, ' '), '')")).alias("token"))
+        docs.select(F.explode(F.expr(_SPARK_TOKENS)).alias("token"))
         .groupBy("token").agg(F.count(F.lit(1)).alias("n_occurrences"))
     )
     tot = cnt.agg(F.sum("n_occurrences").alias("t"))

@@ -636,3 +636,65 @@ def test_time_range_twin_matches_native_window(spark, sf_dir):
                                   .cast("double").alias("sum_1h"))
                           .collect()))
         assert got == want, f"twin diverges from native window at {d}"
+
+
+# Keys allowed to evaluate one Python UDF in two Python-eval nodes.  All
+# three find candidates with hyperplane_candidate_pairs, whose (band,
+# bkt) self-join evaluates band_buckets once per side; sharing one
+# evaluation needs pinning or exchange reuse, a design trade-off rather
+# than a pushed-down filter.
+_SELF_JOIN_UDF_REPEATS = {"q_llm_sim_lsh_topk", "q_llm_sim_threshold_pairs",
+                          "q_llm_dedup_embcos"}
+# Corpus-wide pandas UDFs behind a filter on their own output (an
+# isNotNull, or the isnotnull a join key infers): evaluate_once keeps
+# Catalyst from evaluating them a second time under the filter.
+_CORPUS_UDF_KEYS = ["q_llm_emb_pq_adc", "q_llm_emb_pq_encode",
+                    "q_llm_sim_ivf_topk"]
+
+
+def test_no_key_evaluates_a_python_udf_twice(spark, sf_dir):
+    """Across every registered key, the same Python UDF over the same
+    input columns sits in at most one Python-eval node — each extra node
+    is another pass of the rows through Python workers."""
+    from scripts.plan_audit import repeated_udfs
+
+    repeats = {}
+    for key in sorted(QUERIES):
+        rep = repeated_udfs(_plan(spark, sf_dir, key))
+        if rep:
+            repeats[key] = rep
+    assert set(repeats) == _SELF_JOIN_UDF_REPEATS, repeats
+    for key, rep in repeats.items():
+        assert rep == {"band_buckets(embedding)"}, (key, rep)
+
+
+@pytest.mark.parametrize("key", _CORPUS_UDF_KEYS)
+def test_corpus_udf_in_one_python_eval_node(spark, sf_dir, key):
+    from scripts.plan_audit import python_evals
+
+    nodes = python_evals(_plan(spark, sf_dir, key))
+    assert len(nodes) == 1 and len(nodes[0]) == 1, nodes
+
+
+@pytest.mark.parametrize("key", ["q_llm_emb_pq_adc", "q_llm_emb_pq_encode"])
+def test_pq_udf_runs_above_spread_exchange(spark, sf_dir, key):
+    """_spread widens the single-split fixture scan with a round-robin
+    exchange; the encode UDF must run above it, at session parallelism,
+    not at the scan's split width below it."""
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("one-core session: _spread adds no exchange")
+    lines = _plan(spark, sf_dir, key).splitlines()
+    udf = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
+    rr = [i for i, ln in enumerate(lines) if "RoundRobinPartitioning" in ln]
+    assert len(udf) == 1 and len(rr) == 1, lines
+    depth = [len(ln) - len(ln.lstrip(" :|+-")) for ln in lines]
+    assert udf[0] < rr[0] and depth[udf[0]] < depth[rr[0]], "\n".join(lines)
+
+
+def test_pq_adc_lut_is_jvm_local(spark, sf_dir):
+    """The query LUT is a literal inlined over a one-row Range: no
+    pickled Python RDD (Scan ExistingRDD), whose broadcast job would run
+    Python tasks and grow the worker pool."""
+    p = _plan(spark, sf_dir, "q_llm_emb_pq_adc")
+    assert "Scan ExistingRDD" not in p, p
+    assert "Generate inline(" in p and "Range (0, 1" in p, p
