@@ -5,6 +5,13 @@ data-processing capabilities of the reference event-stream store
 Architecture (SURVEY.md §3.2/§4.2): a curated, tested, scale-hardened
 operator library over stock Catalyst — every operator is a DataFrame
 constructor; Spark's optimizer is the only planner.
+
+Importing the package is light: it loads the catalog, the session
+profile and the registry, not the key modules.  ``QUERIES`` and
+``ORACLE`` import every key module on their first read
+(``registry.load_all``), so a Python worker that unpickles one package
+object — a UDF, a data source, the streaming-source runner — imports
+only the module it needs.
 """
 
 from __future__ import annotations
@@ -13,8 +20,6 @@ from . import registry
 from .catalog import SCHEMAS, load_table, load_tables, register_views
 from .registry import ORACLE, QUERIES
 from .session import get_spark, tune
-
-registry.load_all()
 
 __all__ = [
     "SCHEMAS", "QUERIES", "ORACLE",

@@ -20,7 +20,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, spread_rows, table_rows
+from ..catalog import load_documents, load_table, table_rows
 from ..registry import query
 from .similarity import _DUCK_PAIRS, cosine, duck_pair_cosine
 from .text import _DUCK_TOKENS, _ORACLE_MAX_TOKENS, _SPARK_TOKENS
@@ -736,7 +736,7 @@ def q_llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle can verify bit-for-bit; the 64-bit production variant uses
     xxhash64 and Hamming-ball bucketing).  Near-dups = small Hamming
     distance between simhash16 values."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     tok = docs.select("doc_id", F.explode(F.expr(_SPARK_TOKENS)).alias("tok"))
     bits = tok.groupBy("doc_id").agg(
         # the bit-sum SQL text is deliberately engine-identical — no
@@ -1723,7 +1723,7 @@ def q_llm_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-wide at the 100× fixture; with the spread the span-runs form
     reads 7.8 s there vs 66.5 s unspread, scripts/ab_repart_r14.json).
     No-op below ~64k docs, so the sf0.1 bench plan is unchanged."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     return substring_dedup(docs, w=_SUBSTR_W, hashed_keys=False,
                            span_runs=table_rows(sf_dir, "documents")
                            >= _SPAN_RUNS_MIN_DOCS)

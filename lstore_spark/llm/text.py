@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, spread_rows, table_rows
+from ..catalog import load_documents, load_table, table_rows
 from ..numerics import DEC, round9_dec, sql_dec2dbl, sql_round9_dec
 from ..registry import query
 from .hashing import sql_md5_long
@@ -76,7 +76,7 @@ GROUP BY t.tok
 )
 def q_llm_text_tokenize_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus term/document frequencies (word-count shape: explode+agg)."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     return (
         docs.select("doc_id", F.explode(tokens_col()).alias("term"))
         .groupBy("term")
@@ -121,7 +121,7 @@ def _tfidf_scored(spark: SparkSession, sf_dir: str, bound: int) -> DataFrame:
     scan (pushed filter, plan-asserted), so only the df branch pays
     the full corpus scan — once, through one Exchange.
     """
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     df = (
         docs.select(F.explode(F.array_distinct(tokens_col())).alias("term"))
         .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -203,7 +203,7 @@ HAVING COUNT(*) >= 20
 )
 def q_llm_text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram extraction: sequence+transform HOF (no UDF), explode, count."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     return (
         docs.select(tokens_col().alias("ts"))
         .select(F.explode(F.expr(_SPARK_BIGRAMS_TS)).alias("bigram"))
@@ -243,7 +243,7 @@ def q_llm_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     English-ish, so the production n-gram-profile model is represented by
     its plumbing: per-language marker scores → argmax).  Pure column ops —
     no UDF, scales as a scan."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     en_score = sum(
         (F.size(F.expr(f"filter({_SPARK_TOKENS}, x -> x = '{m}')"))
          for m in _EN_MARKERS),
@@ -282,7 +282,7 @@ FROM feat
 def q_llm_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality score (length + stopword-ratio components), the
     standard pretraining-data filter shape; pure column arithmetic."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     stop_list = ", ".join(f"'{s}'" for s in _STOPWORDS)
     n_tok = F.size(tokens_col())
     n_stop = F.size(F.expr(
@@ -320,7 +320,7 @@ FROM documents
 def q_llm_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting three ways: whitespace, regex word-split (the
     BPE-ish pretokenizer), and the chars/4 BPE budget estimate."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     return docs.select(
         "doc_id",
         F.size(tokens_col()).alias("ws_tokens"),
@@ -454,7 +454,7 @@ def q_llm_text_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing: regex redaction of emails and digit runs (synthetic
     PII is appended since the fixture corpus has none — the operator is
     the point).  Plain regexp_replace: JVM-side, streams with the scan."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     dirty = F.concat(
         F.col("text"), F.lit(" contact: user"), F.col("doc_id").cast("string"),
         F.lit("@example.com code 1234"))
@@ -497,7 +497,7 @@ def q_llm_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliding chunks with 8-token overlap (stride 24).  Pure HOF pipeline —
     sequence of chunk starts → slice → join; one scan, output rows ∝
     corpus tokens / stride."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     # max chunk_id: largest i with 1 + i*stride <= n_tokens, i.e.
     # floor((n-1)/stride) — identical to the oracle's WHERE predicate.
     chunks = F.expr(f"""
@@ -566,7 +566,7 @@ def q_llm_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     the HOF form wins 5.4 s vs 9.9 s — the per-span Python md5 call
     overhead loses to interpreted-but-parallel JVM md5
     (scripts/ab_textproj_arrow_r14.py)."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     return _fingerprint_hof(docs)
 
 
@@ -733,7 +733,7 @@ def q_llm_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: unigram table aggregates small (vocab-sized) and broadcasts;
     the doc-side explode feeds one partial-combinable aggregate."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     tok = docs.select("doc_id", F.explode(tokens_col()).alias("term"))
     uni = tok.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
     tot = uni.agg(F.sum("tf").cast("double").alias("n"))
@@ -823,7 +823,7 @@ def q_llm_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-combine map-side and broadcast here (at 100 TB they would
     be Zipf-truncated to top-K or shuffle-joined on the term key — the
     scoring side streams either way)."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     toks = docs.select("doc_id", tokens_col().alias("ts"))
     bg = toks.select(
         "doc_id",
@@ -942,7 +942,7 @@ def q_llm_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     built and parity-verified but REJECTED: with the spread in place
     the HOF stats win 3.1 s vs 5.8 s
     (scripts/ab_textproj_arrow_r14.py)."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     return _repetition_from_stats(_repetition_stats_hof(docs))
 
 
@@ -1177,7 +1177,7 @@ def q_llm_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage table.  Spark cascades at 100 TB run this exact shape with
     ``observed()`` attached so the audit rides the write action for
     free — asserted equal to this relation in tests/test_registry.py."""
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     agg = cascade_flags(docs).agg(
         F.count(F.lit(1)).alias("n0"),
         F.sum(F.col("f1").cast("long")).alias("k1"),
@@ -1229,7 +1229,7 @@ def q_llm_text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture; the exploded twin is retained below and pinned
     bit-identical by ``test_char_entropy_vectorized_matches_exploded``,
     including empty/null/non-BMP degenerate docs)."""
-    return _char_entropy_vectorized(spread_rows(load_table(spark, sf_dir, "documents"), sf_dir))
+    return _char_entropy_vectorized(load_documents(spark, sf_dir))
 
 
 def _char_entropy_exploded(docs: DataFrame) -> DataFrame:

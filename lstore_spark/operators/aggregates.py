@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, spread_rows
+from ..catalog import load_documents, load_table
 from ..llm.hashing import sql_md5_long
 from ..numerics import (DEC, davg, dsum, dsum9, sql_davg, sql_dec2dbl,
                         sql_dsum, sql_dsum9)
@@ -492,12 +492,12 @@ def q_agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     set.  A true streaming sketch (Misra–Gries) would cap memory per
     task, but the exact two-phase form is already shuffle-bounded by
     vocabulary size."""
-    # function-local: a module-level import would register llm.text's
-    # keys ahead of this module's and reorder the registry
+    # function-local: importing this module (e.g. in a Python worker)
+    # must not import the llm.text key module
     from ..llm.text import _SPARK_TOKENS
     from ..registry import pin
 
-    docs = spread_rows(load_table(spark, sf_dir, "documents"), sf_dir)
+    docs = load_documents(spark, sf_dir)
     # pin: cnt feeds BOTH the grand total and the final projection —
     # unpinned, Spark re-runs the scan+explode+shuffle once per branch
     # (no CSE across branches; the global_row_number lesson; review r13)

@@ -10,12 +10,16 @@ module's job is the *cluster-scale* config profile:
 - Arrow for any Python<->JVM data movement (pandas UDFs),
 - broadcast threshold sized so dimension tables broadcast,
 - shuffle partitions sized to cores locally (on a real cluster this is
-  overridden by AQE coalescing from a higher initial number).
+  overridden by AQE coalescing from a higher initial number),
+- the package shipped to the executors' Python workers as a zip, so UDFs
+  and data sources import it whatever the workers' PYTHONPATH and cwd.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -64,8 +68,48 @@ _RUNTIME_CONFS = {
 _STOCK_SHUFFLE = "200"
 
 
+def _package_zip() -> str:
+    pkg_root = os.path.dirname(os.path.abspath(__file__))
+    repo = os.path.dirname(pkg_root)
+    zpath = os.path.join(tempfile.gettempdir(), "lstore_spark_pkg.zip")
+    # build under a unique name, publish by atomic rename: concurrent
+    # sessions (driver sweep + bench) may ship at once, and a
+    # half-written zip must never be visible under the shared path —
+    # same tmp+rename discipline as the segment sink.
+    fd, tmp = tempfile.mkstemp(suffix=".zip", dir=tempfile.gettempdir())
+    os.close(fd)
+    with zipfile.ZipFile(tmp, "w") as z:
+        for dirpath, _dirnames, filenames in os.walk(pkg_root):
+            if "__pycache__" in dirpath:
+                continue
+            for fn in filenames:
+                if fn.endswith(".py"):
+                    full = os.path.join(dirpath, fn)
+                    z.write(full, os.path.relpath(full, repo))
+    os.replace(tmp, zpath)
+    return zpath
+
+
+_SHIPPED_APPS: set = set()  # applicationIds this process shipped the zip to
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Ship the package zip to the executors at most once per Spark
+    application (review r12: rebuilding + re-shipping the identical zip
+    paid an os.walk + zip + addPyFile per query).  The memo keys on
+    applicationId — stable for the context's lifetime, fresh after a
+    restart.  ``tune()`` calls it, so every UDF-bearing key finds the
+    package in its Python workers; the Python data sources' ``register()``
+    call it too."""
+    app = spark.sparkContext.applicationId
+    if app not in _SHIPPED_APPS:
+        spark.sparkContext.addPyFile(_package_zip())  # workers import this
+        _SHIPPED_APPS.add(app)
+
+
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (e.g. the driver's)."""
+    """Apply runtime confs to an existing session (e.g. the driver's) and
+    ship the package to its executors."""
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -79,6 +123,7 @@ def tune(spark: SparkSession) -> SparkSession:
                            os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     except Exception:
         pass
+    ship_package(spark)
     return spark
 
 

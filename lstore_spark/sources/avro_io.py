@@ -51,6 +51,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from ..catalog import fresh_scratch_dir, load_table
 from ..registry import query
+from ..session import ship_package
 
 MAGIC = b"Obj\x01"
 
@@ -584,7 +585,6 @@ def register(spark: SparkSession) -> None:
     # ship_package memoizes per applicationId (review r13: this rebuilt
     # and re-shipped the zip on every call — twice per roundtrip key —
     # the exact cost lstore_log.register memoized in r12)
-    from .lstore_log import ship_package
     ship_package(spark)
     spark.dataSource.register(AvroSource)
 

@@ -13,16 +13,18 @@ Segment framing (little-endian):
               n_blobs:int32  (blob_len:int32 blob_bytes)*n_blobs
 
 Worker importability: the DataSource class is pickled by reference, so
-``register()`` ships the whole package to workers as a zip via
-``SparkContext.addPyFile`` — no assumptions about worker PYTHONPATH.
+``register()`` ships the whole package to workers as a zip
+(``session.ship_package``, once per application; ``tune()`` does the
+same) — no assumptions about worker PYTHONPATH.  A planner worker that
+unpickles the class imports this module, the catalog, the registry and
+the session profile only: the package loads its key modules on the
+first registry read, which no worker makes.
 """
 
 from __future__ import annotations
 
 import os
 import struct
-import tempfile
-import zipfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +41,7 @@ from pyspark.sql.datasource import (
 
 from ..catalog import fresh_scratch_dir, load_table
 from ..registry import query
+from ..session import ship_package
 
 SCHEMA_DDL = "offset bigint, ints array<bigint>, blobs array<binary>, key string"
 
@@ -833,45 +836,6 @@ class LstoreLogStreamReader(DataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         pass  # the store is the source of truth; nothing to acknowledge
-
-
-def _package_zip() -> str:
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    repo = os.path.dirname(pkg_root)
-    zpath = os.path.join(tempfile.gettempdir(), "lstore_spark_pkg.zip")
-    # build under a unique name, publish by atomic rename: concurrent
-    # sessions (driver sweep + bench) may call register() at once, and a
-    # half-written zip must never be visible under the shared path —
-    # same tmp+rename discipline as the segment sink.
-    fd, tmp = tempfile.mkstemp(suffix=".zip", dir=tempfile.gettempdir())
-    os.close(fd)
-    with zipfile.ZipFile(tmp, "w") as z:
-        for dirpath, _dirnames, filenames in os.walk(pkg_root):
-            if "__pycache__" in dirpath:
-                continue
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    z.write(full, os.path.relpath(full, repo))
-    os.replace(tmp, zpath)
-    return zpath
-
-
-_SHIPPED_APPS: set = set()  # applicationIds this process shipped the zip to
-
-
-def ship_package(spark: SparkSession) -> None:
-    """Ship the package zip to the executors at most once per Spark
-    application (review r12: every query key registers a source, and
-    rebuilding + re-shipping the identical zip paid an os.walk + zip +
-    addPyFile per query).  The memo keys on applicationId — stable for
-    the context's lifetime, fresh after a restart.  Shared by every
-    Python data source in the package (avro_io routes here too,
-    review r13)."""
-    app = spark.sparkContext.applicationId
-    if app not in _SHIPPED_APPS:
-        spark.sparkContext.addPyFile(_package_zip())  # workers import this
-        _SHIPPED_APPS.add(app)
 
 
 def register(spark: SparkSession) -> None:

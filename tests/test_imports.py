@@ -1,0 +1,114 @@
+"""Import footprint and worker importability.
+
+Python workers unpickle one package object at a time — a UDF, a data
+source, the streaming-source runner's reader — so importing one module
+must not import the key modules it does not use, and the package must
+reach the workers whatever the driver's working directory.  Each check
+runs in a fresh interpreter, where nothing has been imported yet."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# module -> the package modules importing it may load, besides what
+# ``import lstore_spark`` itself loads (_PACKAGE)
+_DEPENDENCIES = {
+    "lstore_spark.sources.lstore_log": {"sources", "sources.lstore_log"},
+    "lstore_spark.sources.avro_io": {"sources", "sources.avro_io"},
+    "lstore_spark.llm.text": {"llm", "llm.hashing", "llm.text", "numerics"},
+}
+_PACKAGE = {"", "catalog", "registry", "session"}
+
+
+def _fresh(code: str, cwd: str = ROOT, env: dict | None = None,
+           timeout: int = 120) -> str:
+    """stdout of ``code`` run by a fresh interpreter."""
+    r = subprocess.run([sys.executable, "-c", code], cwd=cwd, env=env,
+                       capture_output=True, text=True, timeout=timeout)
+    assert r.returncode == 0, r.stderr[-4000:]
+    return r.stdout
+
+
+@pytest.mark.parametrize("module", sorted(_DEPENDENCIES))
+def test_module_import_loads_only_its_dependencies(module):
+    loaded = json.loads(_fresh(
+        f"import json, sys, {module}\nprint(json.dumps(sorted(sys.modules)))"))
+    ours = {m.removeprefix("lstore_spark").removeprefix(".") for m in loaded
+            if m.split(".")[0] == "lstore_spark"}
+    assert ours == _PACKAGE | _DEPENDENCIES[module]
+    heavy = [m for m in loaded if m.split(".")[0] in ("pandas", "pyarrow")]
+    assert not heavy, f"{module} imports {heavy[:3]}"
+
+
+def test_key_order_does_not_depend_on_prior_imports():
+    """The registry loads on its first read; a key module imported before
+    that (perfbench imports llm.embeddings and llm.ann_index first) must
+    not move its keys ahead of the others."""
+    code = ("import json\n{pre}"
+            "from lstore_spark.registry import ORACLE, QUERIES\n"
+            "print(json.dumps([list(QUERIES), list(ORACLE)]))")
+    plain = json.loads(_fresh(code.format(pre="")))
+    early = json.loads(_fresh(code.format(
+        pre="import lstore_spark.llm.embeddings, lstore_spark.llm.ann_index,"
+            " lstore_spark.sources.sinks\n")))
+    assert early == plain
+    assert (len(plain[0]), len(plain[1])) == (256, 253)
+
+
+def test_concurrent_first_reads_see_one_whole_registry():
+    """Threads racing on the first read all wait for the one load and see
+    every key, in the same order."""
+    out = _fresh(
+        "import json, sys, threading\n"
+        "from lstore_spark.registry import QUERIES\n"
+        "sys.setswitchinterval(1e-6)\n"
+        "seen = []\n"
+        "ts = [threading.Thread(target=lambda: seen.append(list(QUERIES)))\n"
+        "      for _ in range(16)]\n"
+        "for t in ts: t.start()\n"
+        "for t in ts: t.join(60)\n"
+        "print(json.dumps([any(t.is_alive() for t in ts), seen]))\n")
+    alive, seen = json.loads(out)
+    assert not alive and len(seen) == 16
+    assert len(seen[0]) == 256 and all(s == seen[0] for s in seen)
+
+
+def test_duplicate_key_check_does_not_load_the_registry():
+    out = _fresh(
+        "import sys\n"
+        "import lstore_spark.sources.lstore_log\n"
+        "from lstore_spark import registry\n"
+        "try:\n"
+        "    registry.query('q_source_lstore_log')(lambda spark, sf_dir: None)\n"
+        "except ValueError as e:\n"
+        "    print(e)\n"
+        "print(sorted(m for m in sys.modules\n"
+        "             if m.startswith('lstore_spark.operators')))\n")
+    assert out.splitlines() == ["duplicate query key: q_source_lstore_log",
+                                "[]"]
+
+
+def test_udf_key_runs_from_any_cwd(tmp_path, sf_dir):
+    """``tune()`` ships the package to the executors: a pandas-UDF key
+    run by a driver whose working directory is elsewhere, with no
+    PYTHONPATH, still finds lstore_spark in its Python workers."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = _fresh(
+        f"import sys\nsys.path.insert(0, {ROOT!r})\n"
+        "from lstore_spark import QUERIES, get_spark\n"
+        "spark = get_spark('any-cwd', cpus=2, shuffle_partitions=4)\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "df = QUERIES['q_llm_dedup_minhash'](spark, "
+        f"{os.path.abspath(sf_dir)!r})\n"
+        "print('rows', df.count())\n"
+        "spark.stop()\n",
+        cwd=str(tmp_path), env=env, timeout=600)
+    assert out.splitlines()[-1].startswith("rows ")

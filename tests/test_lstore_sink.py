@@ -1170,12 +1170,13 @@ def test_stream_reader_survives_segment_deletion(tmp_path):
 def test_register_ships_zip_once_per_application(spark, monkeypatch):
     """review r12: every key calls register(); the zip walk+ship must be
     memoized per application while dataSource.register still runs."""
+    from lstore_spark import session
     from lstore_spark.sources import lstore_log as mod
 
     calls = []
-    monkeypatch.setattr(mod, "_package_zip",
+    monkeypatch.setattr(session, "_package_zip",
                         lambda: calls.append(1) or mod.__file__)
-    mod._SHIPPED_APPS.discard(spark.sparkContext.applicationId)
+    session._SHIPPED_APPS.discard(spark.sparkContext.applicationId)
     mod.register(spark)
     mod.register(spark)
     assert len(calls) == 1, "zip rebuilt/re-shipped on a repeat register"

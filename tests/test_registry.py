@@ -5,6 +5,8 @@ starve keys of driver evidence (the exact failure modes of rounds 2-4)."""
 
 from __future__ import annotations
 
+import pytest
+
 from lstore_spark import registry
 
 registry.load_all()
@@ -301,3 +303,15 @@ def test_fixture_token_counts_within_oracle_lateral_caps():
             "the range(1, 256) lateral caps in the DuckDB oracles — "
             "raise every capped oracle lateral in lockstep (grep "
             "'range(1, 256)') before accepting this fixture")
+
+
+def test_registry_counts_and_duplicate_key_rejected():
+    """256 keys, 253 with a DuckDB oracle; registering a taken key name
+    raises rather than silently replacing the registered query."""
+    assert len(registry.QUERIES) == 256
+    assert len(registry.ORACLE) == 253
+    key = next(iter(registry.QUERIES))
+    before = registry.QUERIES[key]
+    with pytest.raises(ValueError, match="duplicate query key"):
+        registry.query(key)(lambda spark, sf_dir: None)
+    assert registry.QUERIES[key] is before
