@@ -81,107 +81,51 @@ def q_llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_signatures_hof(docs: DataFrame, k: int = _MINHASH_K) -> DataFrame:
-    """doc_id → k minhashes over 3-word shingles: ONE murmur3 over each
-    *token* string (native hash(): JVM codegen), int-mixed into shingle
-    hashes, then k int-input murmur3 re-hashes ``hash(h, p)`` as the
-    permutations.  Hashing variable-length strings is the dominant cost
-    of signature building (int mixes are a handful of ALU ops), so the
-    pipeline hashes each token's bytes exactly once — not once per
-    shingle via concat (3× the string bytes + an allocation per
-    shingle), and not k times per shingle.  (A multiply-add-mod
-    universal hash of the base value is NOT a valid permutation family
-    here: with a·h < 2^61 the Mersenne modulus almost never wraps, every
-    "permutation" preserves the base ordering, and all bands pick the
-    same argmin shingle — measured 7× candidate-pair inflation.)
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """doc_id → (mhs, bkts): the k = r·b minhashes over 3-word shingles
+    and the b LSH band buckets ``bkts[bnd] = hash(slice(mhs, bnd·r+1,
+    r))`` that :func:`lsh_candidate_pairs` joins on.
 
-    Computed entirely with array HOFs — one ``aggregate`` pass producing
-    the packed k-minima array — so signatures are a pure projection over
-    the doc scan: no explode, no shuffle, no 100×-row intermediate.
-    (The original explode+groupBy formulation spent 4.6 s of the sf0.1
-    bench on the 485k-row shuffle this avoids.)  Returns
-    (doc_id, mhs: array<int> of length k)."""
-    # Each token's string is murmur3-hashed ONCE; a 3-shingle hash is then
-    # pure int mixing hash(th_i, th_i+1, th_i+2) — vs concat'ing the three
-    # tokens into a new string and hashing that, this does a third of the
-    # string hashing and zero string allocation.  try_element_at: ANSI
-    # mode makes plain element_at throw past the end, so docs with <3
-    # tokens pad with 0 (the '' pad of the string form, re-expressed).
-    shingle_hashes = F.expr("""
-        transform(
-          sequence(1, greatest(size(th) - 2, 1)),
-          i -> hash(coalesce(try_element_at(th, i), 0),
-                    coalesce(try_element_at(th, i + 1), 0),
-                    coalesce(try_element_at(th, i + 2), 0))
-        )""")
-    doc_sh = (docs.select("doc_id", F.expr(_SPARK_TOKENS).alias("ts"))
-              .select("doc_id", F.expr("transform(ts, t -> hash(t))").alias("th"))
-              .select("doc_id", shingle_hashes.alias("hs")))
-    # All k minima in ONE aggregate HOF pass (packed array output): vs k
-    # separate array_min(transform(...)) expressions this is the same
-    # arithmetic but ~1/k the generated code — measured 2.5s → 0.4s on
-    # the first (codegen-compiling) run at sf0.1, identical results.
-    return doc_sh.select(
-        "doc_id",
-        F.expr(f"""
-            aggregate(hs, array_repeat(2147483647, {k}),
-                      (acc, h) -> zip_with(acc, sequence(0, {k - 1}),
-                                           (m, p) -> least(m, hash(h, p))))
-        """).alias("mhs"),
-    )
-
-
-def minhash_signatures(docs: DataFrame, k: int = _MINHASH_K,
-                       with_buckets: bool = False) -> DataFrame:
-    """doc_id → k minhashes, bit-identical to ``_minhash_signatures_hof``
-    but with the shingle-hash + k-minima stages vectorized in ONE
-    Arrow-batched pandas UDF (the hyperplane-LSH precedent: higher-order
-    functions never enter codegen, so the k·|shingles| interpreted evals
-    — ~28 s of the 36 s signature stage at the 100× fixture — become a
-    handful of numpy passes; measured 35.8 → ~7 s there, sf0.1
-    unchanged).  The JVM still does what it is fastest at: tokenizing
-    and murmur3-hashing each token string ONCE (native codegen); the
+    The JVM does what it is fastest at: tokenizing and murmur3-hashing
+    each token string ONCE (native codegen).  ONE Arrow-batched pandas
     UDF receives only the packed int token-hash arrays (~4 B/token over
-    Arrow) and computes shingle hashes + per-permutation minima with
-    ``spark_murmur3_int`` — the numpy re-implementation of Spark's
-    ``hash(int, int)`` whose JVM parity is elementwise-pinned in
-    tests/test_llm.py, extended there by a full signature-equality pin
-    against the HOF form (including 0/1/2-token degenerate docs).
-    Still a pure projection over the scan: no shuffle, no explode, no
-    100×-row intermediate — the plan-shape test asserts no Exchange.
+    Arrow) and computes shingle hashes, per-permutation minima and band
+    buckets with ``spark_murmur3_int`` — the numpy re-implementation of
+    Spark's ``hash(int, int)``.  The same arithmetic as array HOFs never
+    enters codegen: its k·|shingles| interpreted evals were ~28 s of the
+    36 s signature stage at the 100× fixture (~7 s vectorized), and the
+    interpreted hash(slice) banding re-ran on each of the banding
+    stage's three scans of the checkpointed signatures.
 
-    ``with_buckets=True`` (r14, opt-in so every other caller's plan
-    stays byte-identical) additionally emits the b LSH band buckets
-    ``bkts[bnd] = hash(slice(mhs, bnd·r+1, r))`` — the same signed-int
-    values the banding HOF in :func:`lsh_candidate_pairs` derives,
-    via the array-hash fold law (hash(arr) folds hashInt over the
-    elements from seed 42; the law the hash-green DuckDB oracle
-    re-implements).  Cost in the UDF is b·r extra ``spark_murmur3_int``
-    passes over |docs|-length vectors (microseconds); the payoff is
-    that the banding stage's three scans of the checkpointed
-    signatures stop re-paying the interpreted hash(slice) +
-    struct-transform HOFs per scan (measured at the 100× fixture:
-    the pairs stage is ~8.5 s of the 17 s key with ZERO surviving
-    pairs — almost all interpreted per-doc banding work)."""
+    Each token hash seeds its 3-shingle int mix (no string concat), and
+    ``hash(h, p)`` over the shingle hash h is permutation p; a
+    multiply-add-mod universal hash is NOT a valid permutation family
+    here (with a·h < 2^61 the Mersenne modulus almost never wraps, every
+    "permutation" preserves the base ordering, and all bands pick the
+    same argmin shingle — measured 7× candidate-pair inflation).  Band
+    buckets follow the array-hash fold law: hash(arr) folds hashInt
+    over the elements from seed 42, the law the hash-green DuckDB
+    oracle re-implements.
+
+    Pinned bit-identical to the interpreted HOF reference forms in
+    tests/reference_forms.py, including 0/1/2-token and null-text docs.
+    A pure projection over the scan: no shuffle, no explode, no
+    100×-row intermediate — the plan-shape test asserts no Exchange."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
     from .similarity import spark_murmur3_int
 
-    r_rows, n_bands = _MINHASH_R, _BANDS
-    if with_buckets and k != r_rows * n_bands:
-        raise ValueError(f"with_buckets requires k == r*b "
-                         f"({r_rows}*{n_bands}); got k={k}")
-    out_type = (StructType([StructField("mhs", ArrayType(IntegerType())),
-                            StructField("bkts", ArrayType(IntegerType()))])
-                if with_buckets else ArrayType(IntegerType()))
+    r_rows, n_bands, k = _MINHASH_R, _BANDS, _MINHASH_K
+    out_type = StructType([StructField("mhs", ArrayType(IntegerType())),
+                           StructField("bkts", ArrayType(IntegerType()))])
 
     @F.pandas_udf(out_type)
     def mh_sig(th_col):
         vals = th_col.to_numpy()
         n = len(vals)
-        # A NULL token array behaves as zero tokens — the HOF twin's
+        # A NULL token array behaves as zero tokens — the HOF form's
         # greatest(size(null) - 2, 1) SKIPS the null (Spark's greatest
         # ignores null args), so null-text docs get the same one
         # zero-padded shingle an empty-token doc gets.
@@ -225,8 +169,6 @@ def minhash_signatures(docs: DataFrame, k: int = _MINHASH_K,
         for p in range(k):
             hp = spark_murmur3_int(one * np.uint32(p), s1).view(np.int32)
             sig[:, p] = np.minimum.reduceat(hp, sh_starts)
-        if not with_buckets:
-            return pd.Series(list(sig))
         # Band buckets by the array-hash fold law: per band, chain
         # hashInt over the r signature minima from seed 42 — the exact
         # ints hash(slice(mhs, bnd*r+1, r)) yields JVM-side.
@@ -238,45 +180,42 @@ def minhash_signatures(docs: DataFrame, k: int = _MINHASH_K,
             bk[:, bnd] = h.view(np.int32)
         return pd.DataFrame({"mhs": list(sig), "bkts": list(bk)})
 
-    toks = (docs.select("doc_id", F.expr(_SPARK_TOKENS).alias("ts"))
-            .select("doc_id", F.expr("transform(ts, t -> hash(t))").alias("th")))
-    if not with_buckets:
-        return toks.select("doc_id", mh_sig("th").alias("mhs"))
-    return toks.select("doc_id", mh_sig("th").alias("_s")) \
-               .select("doc_id", F.col("_s.mhs").alias("mhs"),
-                       F.col("_s.bkts").alias("bkts"))
+    return (docs.select("doc_id", F.expr(_SPARK_TOKENS).alias("ts"))
+            .select("doc_id", F.expr("transform(ts, t -> hash(t))").alias("th"))
+            .select("doc_id", mh_sig("th").alias("_s"))
+            .select("doc_id", F.col("_s.mhs").alias("mhs"),
+                    F.col("_s.bkts").alias("bkts")))
 
 
 def lsh_candidate_pairs(sig: DataFrame,
                         min_est_jaccard: float = 0.0,
                         max_bucket_width: int | None = 64) -> DataFrame:
-    """LSH banding over minhash signatures → (id_a, id_b, est_jaccard).
+    """LSH banding over :func:`minhash_signatures` output (doc_id, mhs,
+    bkts) → (id_a, id_b, est_jaccard).
 
-    The packed signature array rides THROUGH the banding self-join, so
-    the whole operator is ONE equi shuffle on (band, bucket): agreement
-    count and first-colliding-band both compute from the two arrays
-    already present on the joined row — no signature-table rejoins (the
-    previous narrow-rows formulation paid two extra joins and evaluated
-    the signature projection on three plan branches; at k=18×4B the
-    array adds ~80B per banded row, a wash against re-shuffling the
-    signature relation twice, and two fewer stages end-to-end).
+    ``posexplode("bkts")`` emits one (band, bkt) row per doc and band —
+    a codegen'd generator, so none of the three scans of the
+    signatures (hot-width aggregate + both self-join sides) evaluates
+    an interpreted HOF.  The packed ``mhs`` and ``bkts`` arrays ride
+    THROUGH the banding self-join, so the whole operator is ONE equi
+    shuffle on (band, bucket): agreement count and first-colliding band
+    both compute from the arrays already on the joined row, with no
+    signature-table rejoin (at k=18×4B the arrays add ~80B per banded
+    row, a wash against re-shuffling the signature relation twice).
 
     Pair dedup does NOT use a global ``.distinct()`` (a full extra
     shuffle of the candidate set — 3.35 s of the r1 bench): a pair that
     collides in several bands is instead kept only on its FIRST
     colliding band — the joined band is by construction a colliding one,
     so each pair survives exactly once.  "Colliding" here means BUCKET
-    equality (``hash(slice)`` — the same equality the join key uses),
-    tested over a per-doc 9-int ``bkts`` array precomputed before the
-    explode: the original formulation re-derived true SLICE equality
-    per joined row (9 bands × two 2-int slice allocations, interpreted
-    — HOFs never enter codegen), which was ~15 s of the 18.5 s pair
-    stage at the 10× fixture; the ``zip_with`` over two packed int
-    arrays is the same test modulo 32-bit murmur3 collisions (a band
-    whose slices differ but hash equal — P≈2⁻³² per band) and measured
-    row-identical output at the 1×/10×/100× fixtures (321,900 pairs at
-    10× both ways).  est_jaccard = fraction of agreeing minhashes,
-    computed only on the surviving (post-dedup) rows.
+    equality (the same equality the join key uses), a ``zip_with`` over
+    the two packed ``bkts`` arrays.  It equals true slice equality
+    modulo 32-bit murmur3 collisions (a band whose slices differ but
+    hash equal — P≈2⁻³² per band); re-deriving slice equality per joined
+    row was ~15 s of the 18.5 s pair stage at the 10× fixture, with
+    row-identical output at the 1×/10×/100× fixtures.  est_jaccard =
+    fraction of agreeing minhashes, computed only on the surviving
+    (post-dedup) rows.
 
     Hot-bucket cap (VERDICT r5 #2): the banding self-join is O(f²) in
     bucket width f, so one boilerplate mega-bucket (license headers,
@@ -296,33 +235,8 @@ def lsh_candidate_pairs(sig: DataFrame,
     boilerplate signal, and re-deriving "first SURVIVING band" would
     reintroduce the per-pair shuffle the first-band trick exists to
     avoid.  Pass ``None`` to disable (test/debug only)."""
-    r, b, k = _MINHASH_R, _BANDS, _MINHASH_K
-    if "bkts" in sig.columns:
-        # Buckets precomputed in the signature UDF
-        # (minhash_signatures(with_buckets=True)) — identical ints by
-        # the array-hash fold law.  posexplode is a codegen'd
-        # generator, so the three scans of the checkpointed signatures
-        # below (hot-width aggregate + both self-join sides) run ZERO
-        # interpreted HOF evals; pos is exactly the 0-based band index
-        # the sequence(0, b-1) form produced.
-        banded = sig.select("doc_id", "mhs", "bkts",
-                            F.posexplode("bkts").alias("band", "bkt"))
-    else:
-        # slice() is 1-based; hash(array) hashes the r-row band as one
-        # value.  The b band buckets are computed ONCE per doc into a
-        # packed array (b slice+hash evals per doc, not per joined row)
-        # and ride through the banding shuffle (+36 B/row) so the
-        # first-band dedup below is a zip_with over two int arrays
-        # instead of re-slicing signatures.
-        bkts = F.expr(
-            f"transform(sequence(0, {b - 1}), "
-            f"bnd -> hash(slice(mhs, bnd * {r} + 1, {r})))")
-        bands = F.expr(
-            f"transform(sequence(0, {b - 1}), "
-            f"bnd -> struct(bnd AS band, bkts[bnd] AS bkt))")
-        banded = (sig.select("doc_id", "mhs", bkts.alias("bkts"))
-                  .select("doc_id", "mhs", "bkts", F.explode(bands).alias("bb"))
-                  .select("doc_id", "mhs", "bkts", "bb.band", "bb.bkt"))
+    banded = sig.select("doc_id", "mhs", "bkts",
+                        F.posexplode("bkts").alias("band", "bkt"))
     if max_bucket_width is not None:
         hot = (banded.groupBy("band", "bkt")
                .agg(F.count(F.lit(1)).alias("bw"))
@@ -346,7 +260,7 @@ def lsh_candidate_pairs(sig: DataFrame,
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(F.col("band") == first_band)
         .select("id_a", "id_b",
-                (agree / F.lit(float(k))).alias("est_jaccard"))
+                (agree / F.lit(float(_MINHASH_K))).alias("est_jaccard"))
     )
     if min_est_jaccard > 0:
         pairs = pairs.filter(F.col("est_jaccard") >= min_est_jaccard)
@@ -581,11 +495,9 @@ def q_llm_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (both sides of the banding self-join + the final doc roster) and
     # Spark does no CSE across branches, so without this the token-hash
     # projection ran 3× over the corpus — measured 1.8 s → 1.1 s at
-    # sf0.1.  ~80 B/doc of executor storage, linear in the corpus.
-    # with_buckets: band buckets ride in the checkpoint (+36 B/doc) so
-    # the banding stage's three scans skip the interpreted hash(slice)
-    # HOFs entirely (r14; A/B in scripts/ab_minhash_buckets_r14.json).
-    sig = minhash_signatures(docs, with_buckets=True).localCheckpoint()
+    # sf0.1.  ~116 B/doc of executor storage (signature + band
+    # buckets), linear in the corpus.
+    sig = minhash_signatures(docs).localCheckpoint()
     pairs = lsh_candidate_pairs(sig)
     # explode, not union-of-two-projections: Spark does no CSE across
     # union branches, so the union form executed the entire banding join
@@ -981,10 +893,7 @@ def q_llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedupes the twin exchanges but not the aggregate branch, so
     # without this the Arrow minhash UDF re-runs over the
     # representative corpus
-    # with_buckets (r14): same win as q_llm_dedup_minhash — the three
-    # consumers skip the interpreted banding HOFs (bucket ints identical
-    # by the fold law, so clusters are unchanged).
-    sig = minhash_signatures(rep_docs, with_buckets=True).localCheckpoint()
+    sig = minhash_signatures(rep_docs).localCheckpoint()
     pairs = lsh_candidate_pairs(sig, min_est_jaccard=0.5).select("id_a", "id_b")
     labels = dedup_clusters(rep_docs.select("doc_id"), pairs)
     return (hashed.join(reps, "_h")
@@ -1195,19 +1104,12 @@ def semantic_dedup(em: DataFrame, n_clusters: int,
         asg = assign_nearest(em, cvecs, "ck", carry=("embedding",))
     src = asg.select("vec_id", "cluster", "embedding",
                      _norm("embedding").alias("_n"))
-    # Pairwise + roster, FUSED (r14, VERDICT r13 #8): the per-cluster
-    # Gram stage now emits every member's keep flag directly
-    # (_keep_flags_vectorized) instead of returning dup ids that were
-    # left-joined back onto a localCheckpoint'ed roster.  Plan delta at
-    # sf0.1: 3 shuffle Exchanges + localCheckpoint materialization →
-    # ONE Exchange (the cluster group shuffle) and no materialization;
-    # the Gram arithmetic is byte-identical code to
-    # _dup_ids_vectorized (BIT-EXACT with the salted-join HOF reference
-    # _dup_ids_joined — parity pinned in tests/test_llm.py), so the
-    # oracle hash is unchanged (re-verified at sf0.001/0.01/0.1).
-    # The exact assignment stage stays on assign_nearest — its
-    # degenerate-vector and tie semantics are the oracle-certified
-    # contract shared with the kmeans family.
+    # Pairwise + roster in ONE per-cluster group stage: the Gram
+    # stage emits every member's keep flag (_keep_flags_vectorized), so
+    # the plan has one Exchange (the cluster group shuffle) and no
+    # roster join-back.  The exact assignment stage stays on
+    # assign_nearest — its degenerate-vector and tie semantics are the
+    # oracle-certified contract shared with the kmeans family.
     if max_cluster_width is None:
         return _keep_flags_vectorized(src, tau)
     # Capped path: wide clusters must NOT enter the group shuffle (a
@@ -1228,49 +1130,18 @@ def semantic_dedup(em: DataFrame, n_clusters: int,
     return _keep_flags_vectorized(narrow, tau).unionByName(wide_members)
 
 
-def _dup_ids_joined(pairs_src: DataFrame, tau: float,
-                    n_clusters: int) -> DataFrame:
-    """Near-twin ids via the salted within-cluster self-join with JVM
-    HOF cosines — the oracle-certified form (every expression
-    evaluates engine-portably, so q_llm_dedup_semantic hash-matches
-    DuckDB end-to-end).
+def _keep_flags_vectorized(src: DataFrame, tau: float) -> DataFrame:
+    """Within-cluster near-twin pruning → (vec_id, cluster, keep), keep
+    = "no earlier (lower vec_id) near-twin in my cluster", via ONE numpy
+    Gram matrix per cluster (applyInPandas).  One shuffle by cluster;
+    the caller's max_cluster_width cap bounds the group width, so the
+    w×w Gram is bounded too.  Single-member (and empty) groups emit
+    keep=true without touching the vectors.
 
-    Low-k salt (the k < cores regime): the pair join's key has only
-    n_clusters distinct values, so at the oracle-twin's fixed k=8 the
-    shuffle lands on 8 reduce tasks no matter how many cores exist.
-    Salting id_a into S sub-keys and replicating the b side S× gives
-    k·S-way parallelism at the cost of an S× replica of the (already
-    cluster-bounded) b rows in the shuffle — each (id_a, id_b) pair
-    still meets exactly once, at salt = id_a % S, so the result is
-    identical.  Production k ∝ n makes the salt unnecessary (and its
-    replication unwelcome), so it engages only when k is small."""
-    from .similarity import cosine_with_norms
-
-    psalt = 8 if n_clusters < 32 else 1
-    a = pairs_src.select("cluster", F.col("vec_id").alias("id_a"),
-                         F.col("embedding").alias("a_emb"),
-                         F.col("_n").alias("na"),
-                         F.pmod(F.col("vec_id"), F.lit(psalt)).alias("psalt"))
-    b = (pairs_src.select("cluster", F.col("vec_id").alias("id_b"),
-                          F.col("embedding").alias("b_emb"),
-                          F.col("_n").alias("nb"))
-         .withColumn("psalt", F.explode(F.sequence(F.lit(0),
-                                                   F.lit(psalt - 1)))))
-    return (a.join(b, ["cluster", "psalt"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(cosine_with_norms("a_emb", "b_emb", "na", "nb") >= tau)
-            .select(F.col("id_b").alias("vec_id"))
-            .distinct())
-
-
-def _dup_ids_vectorized(pairs_src: DataFrame, tau: float) -> DataFrame:
-    """Near-twin ids via ONE numpy Gram matrix per cluster
-    (applyInPandas) — the scale path's pairwise stage.  The join form
-    evaluates ~Σcᵢ² interpreted ``aggregate(zip_with(...))`` cosines
-    (HOFs never enter codegen): at the 100× adaptive fixture that was
-    ~12M interpreted evals and most of the remaining wall.
-
-    BIT-EXACT with the join form (parity pinned by
+    BIT-EXACT with the salted within-cluster self-join over JVM HOF
+    cosines (``cosine_with_norms`` — the engine-portable form the DuckDB
+    oracle mirrors; the reference is ``dup_ids_joined`` in
+    tests/reference_forms.py, parity pinned by
     ``test_semantic_pairwise_vectorized_bit_identical``):
 
     - the dot is the same LEFT-TO-RIGHT fold — the Gram accumulates
@@ -1278,65 +1149,12 @@ def _dup_ids_vectorized(pairs_src: DataFrame, tau: float) -> DataFrame:
       IEEE adds (no BLAS, no pairwise summation, no FMA), which equals
       Spark's ``aggregate(zip_with(...))`` fold bit-for-bit;
     - na·nb and the divide are the same single correctly-rounded ops
-      on the SAME JVM-computed ``_n`` norms carried in pairs_src;
+      on the SAME JVM-computed ``_n`` norms carried in ``src``;
     - the ROUND-6 ≥ tau predicate uses a guarded compare: direct
       except within 1e-9 of the half-up rounding boundary
       (tau − 5e-7), exact-Decimal HALF_UP there (Decimal(float(c))
       quantizes the exact binary expansion — bit-equal to Spark's
-      ROUND).
-
-    One shuffle by cluster (the same key the join form shuffled on);
-    group width is bounded by the caller's max_cluster_width cap, so
-    the w×w Gram is bounded too.  Cross-cluster id duplicates cannot
-    occur (each vector lives in one cluster), so no distinct pass is
-    needed."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
-    import pandas as pd
-
-    q6 = Decimal("1E-6")
-    tau_dec = Decimal(str(tau))
-    boundary = tau - 5e-7
-
-    def find(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"vec_id": pd.Series([], dtype="int64")})
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order]
-        V = np.stack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
-        nrm = pdf["_n"].to_numpy()[order].astype(np.float64)
-        w = V.shape[0]
-        G = np.zeros((w, w))
-        for j in range(V.shape[1]):  # ascending dim = the HOF fold order
-            G += np.multiply.outer(V[:, j], V[:, j])
-        C = G / np.multiply.outer(nrm, nrm)
-        ia, ib = np.triu_indices(w, k=1)  # ids ascending → id_a < id_b
-        c = C[ia, ib]
-        dup = c >= boundary + 1e-9
-        amb = np.abs(c - boundary) <= 1e-9
-        for idx in np.nonzero(amb)[0]:
-            dup[idx] = Decimal(float(c[idx])).quantize(
-                q6, ROUND_HALF_UP) >= tau_dec
-        out = np.unique(ids[ib[dup]])
-        return pd.DataFrame({"vec_id": pd.Series(out, dtype="int64")})
-
-    return (pairs_src.select("cluster", "vec_id", "embedding", "_n")
-            .groupBy("cluster").applyInPandas(find, "vec_id long"))
-
-
-def _keep_flags_vectorized(src: DataFrame, tau: float) -> DataFrame:
-    """The FUSED form of ``_dup_ids_vectorized`` (r14): one per-cluster
-    applyInPandas that runs the IDENTICAL Gram/boundary arithmetic (see
-    that function's bit-parity contract — left-to-right per-dim outer
-    products, same JVM ``_n`` norms, guarded HALF_UP compare at the
-    rounding boundary) and emits EVERY member's ``keep`` flag directly:
-    (vec_id, cluster, keep) with keep = "no earlier near-twin in my
-    cluster".  This folds the old dup-ids → left-join-back-onto-roster
-    tail into the group stage itself, removing the roster join and the
-    checkpoint the two-consumer shape required.  Single-member (and
-    empty) groups emit keep=true without touching the vectors, exactly
-    like the dup form's len<2 early-out."""
+      ROUND)."""
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
@@ -1357,7 +1175,6 @@ def _keep_flags_vectorized(src: DataFrame, tau: float) -> DataFrame:
         if len(pdf) < 2:
             roster["keep"] = True
             return roster
-        # --- byte-identical Gram block (_dup_ids_vectorized.find) ---
         order = np.argsort(pdf["vec_id"].to_numpy())
         ids = pdf["vec_id"].to_numpy()[order]
         V = np.stack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
@@ -1375,7 +1192,6 @@ def _keep_flags_vectorized(src: DataFrame, tau: float) -> DataFrame:
             dup[idx] = Decimal(float(c[idx])).quantize(
                 q6, ROUND_HALF_UP) >= tau_dec
         dup_ids = np.unique(ids[ib[dup]])
-        # --- fused tail: roster keep flags instead of dup-id rows ---
         roster["keep"] = ~roster["vec_id"].isin(dup_ids)
         return roster
 

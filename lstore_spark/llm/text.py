@@ -1226,40 +1226,18 @@ def q_llm_text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_char_entropy_vectorized``): one np.unique over packed
     (doc, code-point) keys per batch replaces the per-char explode +
     two shuffles of the original form (27.9 s → 5.6 s at the 100×
-    fixture; the exploded twin is retained below and pinned
-    bit-identical by ``test_char_entropy_vectorized_matches_exploded``,
-    including empty/null/non-BMP degenerate docs)."""
+    fixture; the exploded form is the reference in
+    tests/reference_forms.py, pinned bit-identical by
+    ``test_char_entropy_vectorized_matches_exploded``, including
+    empty/null/non-BMP degenerate docs)."""
     return _char_entropy_vectorized(load_documents(spark, sf_dir))
-
-
-def _char_entropy_exploded(docs: DataFrame) -> DataFrame:
-    """The original explode+2-agg form of q_llm_text_char_entropy —
-    per-doc-bounded explode, (doc, char) rollup partial-combining to
-    ≤|alphabet| rows per doc before either shuffle.  Kept as the
-    semantics pin for the vectorized path (JVM split/groupBy/round9_dec
-    ground truth)."""
-    chars = (
-        docs.select("doc_id", F.explode(F.split("text", "")).alias("ch"))
-        .groupBy("doc_id", "ch").agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    per_doc = chars.groupBy("doc_id").agg(
-        F.sum("cnt").alias("n"),
-        F.count(F.lit(1)).alias("n_distinct_chars"),
-        F.sum(round9_dec(F.col("cnt") * F.log2("cnt"))).alias("s"),
-    )
-    return per_doc.select(
-        "doc_id", "n_distinct_chars",
-        (F.round(F.log2(F.col("n").cast("double"))
-                 - F.col("s").cast("double") / F.col("n"),
-                 6) + F.lit(0.0)).alias("char_entropy_bits"),
-    )
 
 
 def _char_entropy_stats_batches(it):
     """mapInPandas worker: (doc_id, text) → (doc_id, n_distinct_chars,
     n, s) with s ≡ the JVM SUM(round9_dec(cnt·log2 cnt)) cast to double.
 
-    Bit-exactness contract (vs _char_entropy_exploded):
+    Bit-exactness contract (vs the explode + (doc, char) groupBy form):
     - F.split(text, '') splits per CODE POINT (probed: '😀' stays one
       element) → UTF-32-LE units; '' splits to [''] → n=1, distinct=1,
       s=0; NULL text explodes to no rows → doc dropped.

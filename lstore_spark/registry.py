@@ -248,40 +248,14 @@ def load_all() -> None:
 
 # ---------------------------------------------------------------------------
 # Sweep ordering.  The driver's CORRECTNESS sweep iterates ``queries()`` in
-# dict order under a ~50-key budget, so ordering IS evidence strategy.
-# VERDICT r2's top finding: a hand-frozen round-1 verified set meant rounds
-# 2 and 3 re-verified the same 50 keys and the LLM/streaming families never
-# got driver signal.  VERDICT r4's top finding: never-checked keys parked in
-# the slow tier (behind every green) could never earn evidence at all.  The
-# rule is therefore: EVERY never-driver-checked key sorts before every green
-# key — the never-checked population (~30) fits the 50-key budget with room
-# for ~20 green re-checks.  Tiers (built from every CORRECTNESS_r*.json on
-# disk at import time — no staleness):
-#   tier 0: keys whose LATEST oracle-grade driver check failed (regressions)
-#   tier 1: never-driver-checked batch keys (cheapest new evidence first;
-#           expensive-oracle keys sort after the cheap ones within the tier)
-#   tier 2: never-driver-checked ORACLE-BACKED streaming keys (~1-2 s of
-#           micro-batch setup each, but hash-grade evidence)
-#   tier 3: never-driver-checked keys first registered THIS round — they
-#           queue behind the longer-starved older families
-#   tier 4: never-driver-checked rows-only keys (weakest evidence class;
-#           a key whose latest driver entry is ``err: no_oracle`` counts as
-#           never-checked, NOT as a regression — it can never hash-match)
-#   tier 5: never-driver-checked slow side-effect keys (tempdir writes,
-#           iterative k-means) — still ahead of every green
-#   tier 6: keys already green in their latest driver check (re-green pool,
-#           slow side-effect keys included).
-# The green tier sorts ascending by the round of the key's latest driver
-# check (VERDICT r5 #1): the re-check budget is a rolling freshness window
-# over ALL greens instead of re-proving the same insertion-order prefix
-# every round — without this, 77 keys sat on round-1/round-3-era evidence
-# while ~20 early-registered keys were re-checked five times.  Slow keys
-# used to form their own trailing tier 7, but that starved them absolutely
-# (VERDICT r10 #1: 17 side-effect keys pinned at r5-era evidence while
-# their on-disk protocols were rewritten in r10) — staleness is now the
-# primary green sort and slowness only a tie-break WITHIN a staleness
-# cohort, so a sweep budget can truncate slow keys of the current round
-# but can never starve a stale one behind fresher fast greens.
+# dict order under a ~50-key budget, so ordering IS evidence strategy.  One
+# rule, built from every CORRECTNESS_r*.json on disk at import time:
+# regressions (latest oracle-grade driver check failed) first; then every
+# other key, stalest first by the round of its latest driver check, a
+# never-checked key counting as round 0.  Slow and heavy keys only break
+# ties inside one round: a trailing slow tier starved 17 side-effect keys
+# at r5-era evidence (VERDICT r10 #1), and a frozen insertion-order prefix
+# re-proved the same keys every round (VERDICT r2, r5 #1).
 
 
 def correctness_files(root: str | None = None) -> list[tuple[int, str]]:
@@ -304,26 +278,19 @@ def correctness_files(root: str | None = None) -> list[tuple[int, str]]:
 
 
 def _driver_evidence(root: str | None = None
-                     ) -> tuple[frozenset, frozenset, dict, frozenset]:
-    """(green, checked, latest_round, rows_seen) from all
-    CORRECTNESS_r*.json; latest round wins per key.  A key counts green
-    only on a full rows+hash match.  Entries with no oracle verdict
-    (``err: no_oracle`` / ``rows_match`` null) are rows-only evidence:
-    they can never be green, so counting them as "checked but not green"
-    would pin them to the regression tier forever (ADVICE r4) — instead
-    a rows-only key whose latest visit returned rows (``rows_seen``)
-    joins the staleness-sorted re-check pool like a green (r9: before
-    this, the 6 rows-only keys re-ran FIRST every round, burning 6 of
-    the ~50 sweep slots that should refresh the stalest greens), and
-    one that has never produced rows routes to the never-checked
-    rows-only tier.  ``latest_round`` records the round number of the
-    key's most recent driver visit of ANY grade — the staleness key for
-    the re-check pools' rolling order."""
+                     ) -> tuple[frozenset, frozenset, dict]:
+    """(green, checked, latest_round) from all CORRECTNESS_r*.json;
+    latest round wins per key.  A key counts green only on a full
+    rows+hash match.  Entries with no oracle verdict (``err:
+    no_oracle`` / ``rows_match`` null) are rows-only evidence: they can
+    never be green, so counting them as "checked but not green" would
+    pin them to the regression tier forever (ADVICE r4).
+    ``latest_round`` records the round number of the key's most recent
+    driver visit of ANY grade — the staleness key of the sweep order."""
     import json
 
     latest: dict[str, bool] = {}
     latest_round: dict[str, int] = {}
-    rows_seen: dict[str, bool] = {}
     # correctness_files orders by the PARSED round number, not the
     # filename sort: at r100 'r100' sorts lexicographically before
     # 'r99' and a stale verdict would overwrite the fresh one
@@ -341,31 +308,26 @@ def _driver_evidence(root: str | None = None
             if v.get("rows_match") is None and v.get("err") not in (
                     None, "no_oracle"):
                 # CRASHED driver run (err = traceback, no verdict):
-                # checked-and-not-green, so the key earns tier-0
+                # checked-and-not-green, so the key earns
                 # regression priority — the old rows-only routing
                 # erased its checked status and a crashed slow key
                 # queued behind ~30 never-checked keys (review r13;
                 # scripts/evidence.py already graded this shape ERR)
-                rows_seen.pop(k, None)
                 latest[k] = False
                 continue
             if v.get("err") == "no_oracle" or v.get("rows_match") is None:
                 latest.pop(k, None)  # rows-only: no oracle verdict exists
-                rows_seen[k] = bool(v.get("spark_rows"))
                 continue
-            rows_seen.pop(k, None)
             latest[k] = bool(v.get("rows_match") and v.get("hash_match"))
     return (frozenset(k for k, ok in latest.items() if ok),
             frozenset(latest),
-            latest_round,
-            frozenset(k for k, ok in rows_seen.items() if ok))
+            latest_round)
 
 
-(DRIVER_GREEN, DRIVER_CHECKED, DRIVER_LATEST_ROUND,
- DRIVER_ROWS_SEEN) = _driver_evidence()
+DRIVER_GREEN, DRIVER_CHECKED, DRIVER_LATEST_ROUND = _driver_evidence()
 
 # Side-effect-heavy keys (measured 1.5-2.5 s each at sf0.01; k-means ~14 s
-# of iterative actions): always last.
+# of iterative actions): last within their staleness round.
 SLOW_KEYS: tuple[str, ...] = (
     "q_sink_parquet",
     "q_source_lstore_log",
@@ -393,7 +355,7 @@ SLOW_KEYS: tuple[str, ...] = (
 # iterative label propagation): if the driver's budget turns out to be
 # time-based rather than key-count-based, fronting these would burn
 # several cheap keys' worth of evidence — order them after the cheap
-# keys of the same tier.
+# keys of the same round.
 HEAVY_KEYS: frozenset = frozenset({
     "q_llm_dedup_embcos", "q_llm_knn_label", "q_llm_dedup_editdist",
     "q_llm_dedup_jaccard_ngram", "q_llm_dedup_clusters_portable",
@@ -402,63 +364,18 @@ HEAVY_KEYS: frozenset = frozenset({
     "q_llm_dedup_minhash",
 })
 
-# Keys first registered THIS round: locally verified but never in any
-# driver sweep — they queue BEHIND the older never-checked families so the
-# longest-starved evidence lands first (still ahead of every green key).
-# (The round-5 set all earned driver evidence in r5 and routes through the
-# checked tiers now.)
-NEW_KEYS: frozenset = frozenset({
-    "q_llm_emb_kmeans_portable", "q_llm_dedup_substring",
-    "q_llm_text_repetition", "q_llm_mix_sources",
-    "q_source_avro_roundtrip",  # r9: the pure-Python Avro codec
-    "q_llm_sim_lsh_topk_portable",  # r10: deterministic-plane LSH twin
-    "q_stream_consumer_groups",  # r11: named durable cursors + lag
-    "q_stream_consumer_assignment",  # r11: scale-out segment assignment
-    "q_stream_consumer_rebalance",  # r12: generation-fenced rebalance
-    "q_stream_runagg_jvm",  # r12: JVM-shape running-agg scale path
-})
-
 
 def sweep_order(keys=None) -> list[str]:
-    """Registry keys in driver-sweep priority order (stable within tiers);
-    tier semantics documented in the block comment above.  Green tiers
-    (6/7) additionally sort ascending by latest driver-checked round, so
-    the ~20 green re-check slots per sweep always go to the stalest
-    evidence first (rolling freshness over the whole green pool)."""
+    """Registry keys in driver-sweep priority order (the rule in the
+    block comment above); the sort is stable, so registration order
+    breaks the remaining ties."""
     keys = list(QUERIES if keys is None else keys)
 
-    def tier(k: str) -> tuple[int, int, int]:
+    def rank(k: str) -> tuple[int, int, int]:
         heavy = 1 if k in HEAVY_KEYS else 0
         if k in DRIVER_CHECKED and k not in DRIVER_GREEN:
             return (0, heavy, 0)
-        if k in DRIVER_ROWS_SEEN and k in ORACLE:
-            # Rows-only evidence but an oracle EXISTS now (added after
-            # the key's last driver visit — the r10 no_oracle→hash
-            # flips): front it with the never-checked oracle tier so
-            # the first hash grade lands in the very next sweep.
-            return (1, heavy, 1)
-        if k in DRIVER_GREEN or k in DRIVER_ROWS_SEEN:
-            # Green, or rows-only with rows already seen (as certified
-            # as the driver can make it) — rolling staleness re-checks.
-            # Staleness first; slow/heavy only break ties inside one
-            # staleness cohort (see the tier comment: a trailing slow
-            # tier starved the side-effect keys at r5 evidence forever).
-            stale = DRIVER_LATEST_ROUND.get(k, 0)
-            return (6, stale, (1 if k in SLOW_KEYS else 0) + heavy)
-        # --- never driver-checked from here down: all before any green ---
-        if k in SLOW_KEYS:
-            return (5, heavy, 0)
-        if k not in ORACLE:
-            return (4, heavy, 0)
-        if k in NEW_KEYS:
-            return (3, heavy, 0)
-        if k == "q_llm_dedup_embcos":
-            # the single most expensive oracle (~5-13 s all-pairs DuckDB
-            # side): queues behind the whole streaming tier so it can't
-            # starve several cheap keys under a time-based budget.
-            return (2, 2, 0)
-        if k.startswith("q_stream_") or k.startswith("q_source_stream"):
-            return (2, heavy, 0)
-        return (1, heavy, 0)
+        return (1, DRIVER_LATEST_ROUND.get(k, 0),
+                (1 if k in SLOW_KEYS else 0) + heavy)
 
-    return sorted(keys, key=tier)  # sort is stable → insertion order kept
+    return sorted(keys, key=rank)

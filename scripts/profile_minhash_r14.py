@@ -7,7 +7,7 @@ its real parts, with reps, so the lever is chosen on numbers:
   tok    doc scan + JVM tokenize + per-token hash (the interpreted-HOF
          half of the signature stage)
   sig    tok + the Arrow mh_sig UDF (full signature projection)
-  band   explode + per-doc bkts HOF over a checkpointed sig
+  band   posexplode of the signature UDF's bkts over a checkpointed sig
   hot    band + the hot-bucket width aggregate
   pairs  full lsh_candidate_pairs (band + hot + anti + self-join)
   full   the declared key end-to-end
@@ -28,8 +28,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from lstore_spark.catalog import load_table  # noqa: E402
 from lstore_spark.llm.dedup import (  # noqa: E402
-    _BANDS, _MINHASH_R, lsh_candidate_pairs, minhash_signatures,
-    q_llm_dedup_minhash)
+    lsh_candidate_pairs, minhash_signatures, q_llm_dedup_minhash)
 from lstore_spark.llm.text import _SPARK_TOKENS  # noqa: E402
 from lstore_spark.session import get_spark  # noqa: E402
 
@@ -48,16 +47,8 @@ def main() -> None:
     docs.count()  # warm scan
 
     sig_ck = minhash_signatures(docs).localCheckpoint()
-    r, b = _MINHASH_R, _BANDS
-    bkts = F.expr(
-        f"transform(sequence(0, {b - 1}), "
-        f"bnd -> hash(slice(mhs, bnd * {r} + 1, {r})))")
-    bands = F.expr(
-        f"transform(sequence(0, {b - 1}), "
-        f"bnd -> struct(bnd AS band, bkts[bnd] AS bkt))")
-    banded = (sig_ck.select("doc_id", "mhs", bkts.alias("bkts"))
-              .select("doc_id", "mhs", "bkts", F.explode(bands).alias("bb"))
-              .select("doc_id", "mhs", "bkts", "bb.band", "bb.bkt"))
+    banded = sig_ck.select("doc_id", "mhs", "bkts",
+                           F.posexplode("bkts").alias("band", "bkt"))
 
     stages = {
         "tok": lambda: noop(

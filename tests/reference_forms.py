@@ -1,0 +1,129 @@
+"""Reference forms that the parity tests compare production operators
+against.  Each is the interpreted (JVM HOF / explode + groupBy) form of
+an operator whose product code is a vectorized pandas-UDF path; they
+live here, not in ``lstore_spark``, because no query runs them."""
+
+from __future__ import annotations
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+from lstore_spark.llm.dedup import _BANDS, _MINHASH_K, _MINHASH_R
+from lstore_spark.llm.similarity import cosine_with_norms
+from lstore_spark.llm.text import _SPARK_TOKENS
+from lstore_spark.numerics import round9_dec
+
+
+def minhash_signatures_hof(docs: DataFrame, k: int = _MINHASH_K) -> DataFrame:
+    """doc_id → k minhashes over 3-word shingles: ONE murmur3 over each
+    *token* string (native hash(): JVM codegen), int-mixed into shingle
+    hashes, then k int-input murmur3 re-hashes ``hash(h, p)`` as the
+    permutations.  Hashing variable-length strings is the dominant cost
+    of signature building (int mixes are a handful of ALU ops), so the
+    pipeline hashes each token's bytes exactly once — not once per
+    shingle via concat (3× the string bytes + an allocation per
+    shingle), and not k times per shingle.  (A multiply-add-mod
+    universal hash of the base value is NOT a valid permutation family
+    here: with a·h < 2^61 the Mersenne modulus almost never wraps, every
+    "permutation" preserves the base ordering, and all bands pick the
+    same argmin shingle — measured 7× candidate-pair inflation.)
+
+    Computed entirely with array HOFs — one ``aggregate`` pass producing
+    the packed k-minima array — so signatures are a pure projection over
+    the doc scan: no explode, no shuffle, no 100×-row intermediate.
+    (The original explode+groupBy formulation spent 4.6 s of the sf0.1
+    bench on the 485k-row shuffle this avoids.)  Returns
+    (doc_id, mhs: array<int> of length k)."""
+    # Each token's string is murmur3-hashed ONCE; a 3-shingle hash is then
+    # pure int mixing hash(th_i, th_i+1, th_i+2) — vs concat'ing the three
+    # tokens into a new string and hashing that, this does a third of the
+    # string hashing and zero string allocation.  try_element_at: ANSI
+    # mode makes plain element_at throw past the end, so docs with <3
+    # tokens pad with 0 (the '' pad of the string form, re-expressed).
+    shingle_hashes = F.expr("""
+        transform(
+          sequence(1, greatest(size(th) - 2, 1)),
+          i -> hash(coalesce(try_element_at(th, i), 0),
+                    coalesce(try_element_at(th, i + 1), 0),
+                    coalesce(try_element_at(th, i + 2), 0))
+        )""")
+    doc_sh = (docs.select("doc_id", F.expr(_SPARK_TOKENS).alias("ts"))
+              .select("doc_id", F.expr("transform(ts, t -> hash(t))").alias("th"))
+              .select("doc_id", shingle_hashes.alias("hs")))
+    # All k minima in ONE aggregate HOF pass (packed array output): vs k
+    # separate array_min(transform(...)) expressions this is the same
+    # arithmetic but ~1/k the generated code — measured 2.5s → 0.4s on
+    # the first (codegen-compiling) run at sf0.1, identical results.
+    return doc_sh.select(
+        "doc_id",
+        F.expr(f"""
+            aggregate(hs, array_repeat(2147483647, {k}),
+                      (acc, h) -> zip_with(acc, sequence(0, {k - 1}),
+                                           (m, p) -> least(m, hash(h, p))))
+        """).alias("mhs"),
+    )
+
+
+def hof_band_buckets() -> Column:
+    """The b LSH band buckets of the ``mhs`` signature column as the
+    interpreted HOF ``hash(slice(mhs, bnd·r+1, r))`` per band (slice()
+    is 1-based; hash(array) hashes the r-row band as one value)."""
+    r, b = _MINHASH_R, _BANDS
+    return F.expr(f"transform(sequence(0, {b - 1}), "
+                  f"bnd -> hash(slice(mhs, bnd * {r} + 1, {r})))")
+
+
+def dup_ids_joined(pairs_src: DataFrame, tau: float,
+                   n_clusters: int) -> DataFrame:
+    """Near-twin ids via the salted within-cluster self-join with JVM
+    HOF cosines — the oracle-certified form (every expression
+    evaluates engine-portably, so q_llm_dedup_semantic hash-matches
+    DuckDB end-to-end).
+
+    Low-k salt (the k < cores regime): the pair join's key has only
+    n_clusters distinct values, so at the oracle-twin's fixed k=8 the
+    shuffle lands on 8 reduce tasks no matter how many cores exist.
+    Salting id_a into S sub-keys and replicating the b side S× gives
+    k·S-way parallelism at the cost of an S× replica of the (already
+    cluster-bounded) b rows in the shuffle — each (id_a, id_b) pair
+    still meets exactly once, at salt = id_a % S, so the result is
+    identical.  Production k ∝ n makes the salt unnecessary (and its
+    replication unwelcome), so it engages only when k is small."""
+    psalt = 8 if n_clusters < 32 else 1
+    a = pairs_src.select("cluster", F.col("vec_id").alias("id_a"),
+                         F.col("embedding").alias("a_emb"),
+                         F.col("_n").alias("na"),
+                         F.pmod(F.col("vec_id"), F.lit(psalt)).alias("psalt"))
+    b = (pairs_src.select("cluster", F.col("vec_id").alias("id_b"),
+                          F.col("embedding").alias("b_emb"),
+                          F.col("_n").alias("nb"))
+         .withColumn("psalt", F.explode(F.sequence(F.lit(0),
+                                                   F.lit(psalt - 1)))))
+    return (a.join(b, ["cluster", "psalt"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .filter(cosine_with_norms("a_emb", "b_emb", "na", "nb") >= tau)
+            .select(F.col("id_b").alias("vec_id"))
+            .distinct())
+
+
+def char_entropy_exploded(docs: DataFrame) -> DataFrame:
+    """The original explode+2-agg form of q_llm_text_char_entropy —
+    per-doc-bounded explode, (doc, char) rollup partial-combining to
+    ≤|alphabet| rows per doc before either shuffle.  The semantics pin
+    for the vectorized path (JVM split/groupBy/round9_dec ground
+    truth)."""
+    chars = (
+        docs.select("doc_id", F.explode(F.split("text", "")).alias("ch"))
+        .groupBy("doc_id", "ch").agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    per_doc = chars.groupBy("doc_id").agg(
+        F.sum("cnt").alias("n"),
+        F.count(F.lit(1)).alias("n_distinct_chars"),
+        F.sum(round9_dec(F.col("cnt") * F.log2("cnt"))).alias("s"),
+    )
+    return per_doc.select(
+        "doc_id", "n_distinct_chars",
+        (F.round(F.log2(F.col("n").cast("double"))
+                 - F.col("s").cast("double") / F.col("n"),
+                 6) + F.lit(0.0)).alias("char_entropy_bits"),
+    )

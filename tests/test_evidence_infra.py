@@ -30,7 +30,7 @@ def test_correctness_files_orders_by_parsed_round(tmp_path):
 
 def test_crashed_driver_entry_reads_as_checked_not_green(tmp_path):
     """A crashed driver run (err = traceback, rows_match null) must
-    grade as checked-and-NOT-green — tier-0 regression priority in the
+    grade as checked-and-NOT-green — regression priority in the
     sweep — never as rows-only evidence (review r13: the old routing
     erased the key's checked status, so a crashed key queued behind
     ~30 never-checked keys and could miss the next sweep)."""
@@ -50,13 +50,12 @@ def test_crashed_driver_entry_reads_as_checked_not_green(tmp_path):
                     "hash_match": None, "spark_rows": None,
                     "oracle_rows": None,
                     "err": "Traceback: boom"}})
-    green, checked, latest_round, rows_seen = _driver_evidence(d)
+    green, checked, latest_round = _driver_evidence(d)
     assert "k_green" in green
     assert "k_crash" in checked and "k_crash" not in green, \
         "crashed run must keep the key in the checked-not-green tier"
-    assert "k_crash" not in rows_seen
     assert latest_round["k_crash"] == 2
-    assert "k_rowsonly" in rows_seen and "k_rowsonly" not in checked
+    assert "k_rowsonly" not in checked and latest_round["k_rowsonly"] == 1
 
 
 def test_evidence_md_grades_crash_as_err(tmp_path, monkeypatch):

@@ -1179,13 +1179,13 @@ def test_spark_murmur3_parity_with_jvm_hash(spark):
 def test_minhash_signatures_vectorized_matches_hof(spark, sf_dir):
     """The Arrow-vectorized signature builder (numpy murmur3 shingle
     hashes + per-permutation minima) must be BIT-IDENTICAL to the
-    interpreted HOF twin it replaced — over the real fixture corpus AND
+    interpreted HOF reference form — over the real fixture corpus AND
     the degenerate 0/1/2-token + null-text docs (whose zero-padded
     single shingle, and Spark greatest()'s null-skipping, are the edge
     semantics the numpy path re-implements)."""
     from lstore_spark.catalog import load_table
-    from lstore_spark.llm.dedup import (_minhash_signatures_hof,
-                                        minhash_signatures)
+    from lstore_spark.llm.dedup import minhash_signatures
+    from tests.reference_forms import minhash_signatures_hof
 
     edge = spark.createDataFrame(
         [(1, "single"), (2, "two tokens"), (3, " "), (4, "a b c d"),
@@ -1193,25 +1193,20 @@ def test_minhash_signatures_vectorized_matches_hof(spark, sf_dir):
         ["doc_id", "text"])
     docs = load_table(spark, sf_dir, "documents").limit(200) \
         .select("doc_id", "text").unionByName(edge)
-    vec = minhash_signatures(docs)
-    hof = _minhash_signatures_hof(docs)
+    vec = minhash_signatures(docs).select("doc_id", "mhs")
+    hof = minhash_signatures_hof(docs)
     assert vec.exceptAll(hof).count() == 0
     assert hof.exceptAll(vec).count() == 0
 
 
-def test_minhash_with_buckets_matches_hof_banding(spark, sf_dir):
-    """with_buckets=True (r14) must emit the EXACT signed band-bucket
-    ints the interpreted hash(slice(mhs, bnd*r+1, r)) HOF produces
-    (array-hash fold law), and lsh_candidate_pairs over the bucketed
-    signature frame must return the identical pair set it returns over
-    the plain one — including the degenerate 0/1/2-token + null-text
-    docs whose zero-padded shingles stress the fold inputs."""
-    from pyspark.sql import functions as F
-
+def test_minhash_band_buckets_match_hof_banding(spark, sf_dir):
+    """The signature UDF must emit the EXACT signed band-bucket ints
+    the interpreted hash(slice(mhs, bnd*r+1, r)) HOF produces
+    (array-hash fold law) — including the degenerate 0/1/2-token +
+    null-text docs whose zero-padded shingles stress the fold inputs."""
     from lstore_spark.catalog import load_table
-    from lstore_spark.llm.dedup import (_BANDS, _MINHASH_R,
-                                        lsh_candidate_pairs,
-                                        minhash_signatures)
+    from lstore_spark.llm.dedup import minhash_signatures
+    from tests.reference_forms import hof_band_buckets
 
     edge = spark.createDataFrame(
         [(900001, "single"), (900002, "two tokens"), (900003, " "),
@@ -1219,19 +1214,10 @@ def test_minhash_with_buckets_matches_hof_banding(spark, sf_dir):
         ["doc_id", "text"])
     docs = load_table(spark, sf_dir, "documents").limit(200) \
         .select("doc_id", "text").unionByName(edge)
-    r, b = _MINHASH_R, _BANDS
-    wb = minhash_signatures(docs, with_buckets=True)
-    ref = minhash_signatures(docs).select(
-        "doc_id", "mhs",
-        F.expr(f"transform(sequence(0, {b - 1}), "
-               f"bnd -> hash(slice(mhs, bnd * {r} + 1, {r})))")
-        .alias("bkts"))
+    wb = minhash_signatures(docs)
+    ref = wb.select("doc_id", "mhs", hof_band_buckets().alias("bkts"))
     assert wb.exceptAll(ref).count() == 0
     assert ref.exceptAll(wb).count() == 0
-    p_wb = lsh_candidate_pairs(wb.localCheckpoint())
-    p_ref = lsh_candidate_pairs(minhash_signatures(docs).localCheckpoint())
-    assert p_wb.exceptAll(p_ref).count() == 0
-    assert p_ref.exceptAll(p_wb).count() == 0
 
 
 def test_hyperplane_band_rows_plan_construction_runs_no_job(spark):
@@ -1293,17 +1279,18 @@ def test_pq_codebook_persisted_roundtrip_bit_exact(spark, sf_dir):
 
 
 def test_semantic_pairwise_vectorized_bit_identical(spark, sf_dir):
-    """The applyInPandas Gram pairwise (the hierarchical/scale path's
-    r9 stage) must reproduce the salted-join + HOF-cosine dup set
-    EXACTLY on the same pairs_src: the Gram accumulates per-dim outer
-    products in the HOF fold order, reuses the JVM norms, and guards
-    the ROUND-6 threshold with exact decimals at the boundary."""
+    """The applyInPandas Gram keep flags (the semantic_dedup pairwise
+    stage) must drop EXACTLY the salted-join + HOF-cosine dup set on
+    the same src: the Gram accumulates per-dim outer products in the
+    HOF fold order, reuses the JVM norms, and guards the ROUND-6
+    threshold with exact decimals at the boundary."""
     from pyspark.sql import Window
 
-    from lstore_spark.llm.dedup import (_TAU_EMB_NEAR_DUP, _dup_ids_joined,
-                                        _dup_ids_vectorized)
+    from lstore_spark.llm.dedup import (_TAU_EMB_NEAR_DUP,
+                                        _keep_flags_vectorized)
     from lstore_spark.llm.embeddings import assign_nearest
     from lstore_spark.llm.similarity import _norm
+    from tests.reference_forms import dup_ids_joined
 
     em = load_table(spark, sf_dir, "embeddings")
     w = Window.orderBy("vec_id")
@@ -1318,9 +1305,10 @@ def test_semantic_pairwise_vectorized_bit_identical(spark, sf_dir):
                  _norm("embedding").alias("_n"))
          .localCheckpoint())
     joined = {r.vec_id for r in
-              _dup_ids_joined(v, _TAU_EMB_NEAR_DUP, k).collect()}
+              dup_ids_joined(v, _TAU_EMB_NEAR_DUP, k).collect()}
     vec = {r.vec_id for r in
-           _dup_ids_vectorized(v, _TAU_EMB_NEAR_DUP).collect()}
+           _keep_flags_vectorized(v, _TAU_EMB_NEAR_DUP)
+           .filter(~F.col("keep")).collect()}
     assert joined == vec
     assert joined, "fixture should contain near-twin pairs at this tau"
 
@@ -1333,8 +1321,8 @@ def test_char_entropy_vectorized_matches_exploded(spark, sf_dir):
     semantics: '' → [''] (n=1, H=0), NULL text → doc dropped, non-BMP
     chars as single code points, a single-char run, and a 90-symbol
     near-uniform alphabet."""
-    from lstore_spark.llm.text import (_char_entropy_exploded,
-                                       _char_entropy_vectorized)
+    from lstore_spark.llm.text import _char_entropy_vectorized
+    from tests.reference_forms import char_entropy_exploded
 
     edge = spark.createDataFrame(
         [(100001, ""), (100002, "a"), (100003, "a\U0001F600\U0001F600b"),
@@ -1344,7 +1332,7 @@ def test_char_entropy_vectorized_matches_exploded(spark, sf_dir):
     docs = (load_table(spark, sf_dir, "documents")
             .select("doc_id", "text").unionByName(edge))
     vec = _char_entropy_vectorized(docs)
-    exp = _char_entropy_exploded(docs)
+    exp = char_entropy_exploded(docs)
     assert vec.exceptAll(exp).count() == 0
     assert exp.exceptAll(vec).count() == 0
     # NULL-text doc dropped, empty-text doc present with H = 0
@@ -1368,8 +1356,8 @@ def test_char_entropy_vectorized_long_doc_overflow(spark):
     docs must route through the exact Python-int slow path and match
     the decimal(30,12) JVM twin: a 600k single-char doc (term itself
     overflows int64) must score H=0, and a 1M-char 4-symbol doc H=2."""
-    from lstore_spark.llm.text import (_char_entropy_exploded,
-                                       _char_entropy_vectorized)
+    from lstore_spark.llm.text import _char_entropy_vectorized
+    from tests.reference_forms import char_entropy_exploded
 
     docs = spark.createDataFrame(
         [(1, "x" * 600_000),
@@ -1379,7 +1367,7 @@ def test_char_entropy_vectorized_long_doc_overflow(spark):
     vec = {r.doc_id: (r.n_distinct_chars, r.char_entropy_bits)
            for r in _char_entropy_vectorized(docs).collect()}
     exp = {r.doc_id: (r.n_distinct_chars, r.char_entropy_bits)
-           for r in _char_entropy_exploded(docs).collect()}
+           for r in char_entropy_exploded(docs).collect()}
     assert vec == exp
     assert vec[1] == (1, 0.0)
     assert vec[2] == (4, 2.0)

@@ -30,12 +30,8 @@ def test_never_checked_keys_fit_the_sweep_budget():
     key (next test), and therefore earn their rows-only CORRECTNESS row
     in the following round's sweep — stated in SURVEY.md."""
     order = registry.sweep_order()
-    # Rows-only keys whose latest driver visit returned rows are as
-    # certified as they can get (r9) — they re-check on the rolling
-    # staleness schedule with the greens, not ahead of them.
     never = [k for k in registry.QUERIES
-             if k not in registry.DRIVER_CHECKED
-             and k not in registry.DRIVER_ROWS_SEEN]
+             if k not in registry.DRIVER_LATEST_ROUND]
     first = set(order[:SWEEP_BUDGET])
     missing = [k for k in never if k not in first]
     oracle_missing = [k for k in missing if k in registry.ORACLE]
@@ -53,8 +49,7 @@ def test_never_checked_sort_before_greens():
     for k in order:
         if k in registry.DRIVER_GREEN:
             seen_green = True
-        elif (k not in registry.DRIVER_CHECKED
-              and k not in registry.DRIVER_ROWS_SEEN and seen_green):
+        elif k not in registry.DRIVER_LATEST_ROUND and seen_green:
             raise AssertionError(
                 f"never-checked key {k} sorts after a green key")
 
@@ -62,21 +57,16 @@ def test_never_checked_sort_before_greens():
 def test_green_pool_sorts_by_staleness_regardless_of_slowness():
     """VERDICT r10 #1: the trailing slow tier starved 17 side-effect keys
     at r5-era evidence behind every fresher fast green.  The executable
-    rule now: within the green/rows-seen re-check pool, a key whose
-    latest driver visit is STALER must precede every fresher one — slow
-    or not.  (Slowness may only break ties inside one staleness cohort.)"""
+    rule now: past the regressions, a key whose latest driver visit is
+    STALER must precede every fresher one — slow or not.  (Slowness may
+    only break ties inside one staleness cohort.)"""
     order = registry.sweep_order()
     pool = [k for k in order
-            if (k in registry.DRIVER_GREEN or k in registry.DRIVER_ROWS_SEEN)
-            # rows-only keys that GAINED an oracle since their last
-            # driver visit sit in the fronted first-hash tier, not the
-            # rolling green pool (e.g. the r13 kmeans graduation)
-            and not (k in registry.DRIVER_ROWS_SEEN
-                     and k not in registry.DRIVER_GREEN
-                     and k in registry.ORACLE)]
+            if not (k in registry.DRIVER_CHECKED
+                    and k not in registry.DRIVER_GREEN)]
     rounds = [registry.DRIVER_LATEST_ROUND.get(k, 0) for k in pool]
     assert rounds == sorted(rounds), (
-        "green re-check pool is not staleness-ordered — a stale key "
+        "re-check pool is not staleness-ordered — a stale key "
         "sorts behind a fresher one")
 
 
@@ -88,6 +78,29 @@ def test_regressions_sort_first():
               if k not in registry.DRIVER_GREEN]
     for k in failed:
         assert order.index(k) < len(failed) + 5, f"regression {k} buried"
+
+
+def test_sweep_order_rule_on_synthetic_evidence(monkeypatch):
+    """The whole rule over six real keys with planted evidence (the
+    on-disk evidence has no regression and no never-checked key, so the
+    two tests above check empty sets): the regression leads, the
+    never-checked key counts as round 0, greens follow stalest first,
+    and inside one round the slow key sorts after the fast one."""
+    regressed, never, green3, green9, slow5, fast5 = (
+        "q_agg_groupby_hash", "q_filter_int_range", "q_join_inner_hash",
+        "q_sort_multi_key", "q_sink_parquet", "q_join_left_semi")
+    assert slow5 in registry.SLOW_KEYS
+    assert not {regressed, never, green3, green9, fast5} & (
+        set(registry.SLOW_KEYS) | registry.HEAVY_KEYS)
+    monkeypatch.setattr(registry, "DRIVER_CHECKED", frozenset(
+        {regressed, green3, green9, slow5, fast5}))
+    monkeypatch.setattr(registry, "DRIVER_GREEN", frozenset(
+        {green3, green9, slow5, fast5}))
+    monkeypatch.setattr(registry, "DRIVER_LATEST_ROUND", {
+        regressed: 9, green3: 3, green9: 9, slow5: 5, fast5: 5})
+    given = [green9, slow5, fast5, green3, never, regressed]
+    assert registry.sweep_order(given) == [
+        regressed, never, green3, fast5, slow5, green9]
 
 
 def test_inventory_docs_match_registry():
