@@ -1467,8 +1467,8 @@ def substring_dedup(docs: DataFrame, w: int = 50,
             # the parallelism the HOF form won decisively (7.8 s vs
             # 20.5 s at 100×, interleaved): interpreted HOFs
             # parallelize perfectly, the Python worker round-trip does
-            # not.  Candidate preserved in scripts/
-            # ab_substring_arrow_r14.py; callers spread the doc scan.
+            # not.  Measurements in scripts/
+            # ab_substring_arrow_r14.json; callers spread the doc scan.
             runs = _span_runs(
                 docs.select("doc_id", F.expr(_SPARK_TOKENS).alias("ts"))
                 .select("doc_id", _span_windows(w).alias("spans")))

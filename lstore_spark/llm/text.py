@@ -565,7 +565,7 @@ def q_llm_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     built and parity-verified but REJECTED: with the spread in place
     the HOF form wins 5.4 s vs 9.9 s — the per-span Python md5 call
     overhead loses to interpreted-but-parallel JVM md5
-    (scripts/ab_textproj_arrow_r14.py)."""
+    (scripts/ab_textproj_arrow_r14.json)."""
     docs = load_documents(spark, sf_dir)
     return _fingerprint_hof(docs)
 
@@ -941,7 +941,7 @@ def q_llm_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     scripts/ab_repart_r14.json).  An Arrow/mapInArrow stats port was
     built and parity-verified but REJECTED: with the spread in place
     the HOF stats win 3.1 s vs 5.8 s
-    (scripts/ab_textproj_arrow_r14.py)."""
+    (scripts/ab_textproj_arrow_r14.json)."""
     docs = load_documents(spark, sf_dir)
     return _repetition_from_stats(_repetition_stats_hof(docs))
 

@@ -12,8 +12,9 @@ Segment framing (little-endian):
     record := offset:int64  n_ints:int32  ints[n_ints]:int64
               n_blobs:int32  (blob_len:int32 blob_bytes)*n_blobs
 
-Worker importability: the DataSource class is pickled by reference, so
-``register()`` ships the whole package to workers as a zip
+Worker importability: the DataSource class is pickled by reference and
+``write_segments`` tasks call this module's encoder, so ``register()``
+and ``write_segments`` ship the whole package to workers as a zip
 (``session.ship_package``, once per application; ``tune()`` does the
 same) — no assumptions about worker PYTHONPATH.  A planner worker that
 unpickles the class imports this module, the catalog, the registry and
@@ -23,8 +24,10 @@ first registry read, which no worker makes.
 
 from __future__ import annotations
 
+import json
 import os
 import struct
+from collections.abc import Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,7 +72,6 @@ def segment_keys(seg_path: str) -> list | None:
     the pruning set-intersection and silently skip a live segment,
     which is the one failure mode an INDEX is never allowed to cause
     (absence only disables pruning; it must never redirect it)."""
-    import json
     try:
         with open(_idx_path(seg_path)) as fh:
             doc = json.load(fh)
@@ -81,29 +83,15 @@ def segment_keys(seg_path: str) -> list | None:
     return ks
 
 
-def _keyset(values) -> list | None:
-    """Sorted distinct decoded keys, or None if oversized/undecodable."""
-    try:
-        ks = {(v if isinstance(v, str) else bytes(v).decode("utf-8"))
-              for v in values}
-    except (UnicodeDecodeError, TypeError):
-        return None
-    return sorted(ks) if len(ks) <= _IDX_MAX_KEYS else None
-
-
-def _write_idx(seg_tmp_or_final: str, keys: list | None) -> None:
-    """Publish a sidecar index atomically (tmp+rename): a reader either
-    sees the complete new index or the previous state, never a torn
-    JSON file (ADVICE r5)."""
-    import json
-    p = _idx_path(seg_tmp_or_final)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
+def _write_idx(path: str, keys: list | None) -> None:
+    """Write a sidecar index document to ``path`` — a staging name: the
+    callers rename it into place, so a reader sees the complete new
+    index or none, never a torn JSON file (ADVICE r5)."""
+    with open(path, "w") as fh:
         json.dump({"keys": keys}, fh)
-    os.replace(tmp, p)
 
 
-# ------------------------------------------------------------ writer (test rig)
+# ------------------------------------------------------------ writers
 
 
 # Sealed segments end with a stats trailer framed as a record with the
@@ -117,8 +105,7 @@ _TRAILER_LEN = 32
 
 
 def _pack_trailer(lo: int, hi: int) -> bytes:
-    return (struct.pack("<qi", -1, 2) + struct.pack("<qq", lo, hi)
-            + struct.pack("<i", 0))
+    return struct.pack("<qiqqi", -1, 2, lo, hi, 0)
 
 
 def segment_stats(path: str) -> tuple[int, int] | None:
@@ -151,8 +138,68 @@ def segment_stats(path: str) -> tuple[int, int] | None:
     return lo, hi
 
 
-def write_segment(path: str, records: list[tuple[int, list[int], list[bytes]]]) -> None:
-    """Append-only segment writer (the lstore write path analog).
+def _write_records(
+        f, rows: Iterable) -> tuple[int | None, int | None, list | None]:
+    """The segment encoder — the only code that writes segment bytes.
+    One pass over ``rows`` (offset, ints, blobs, ...): frame each record
+    into ``f``, track the offset range and the sidecar key set (None
+    past _IDX_MAX_KEYS or when a key does not decode), and seal ``f``
+    with the stats trailer.  Returns (lo, hi, keys); lo is None for no
+    rows (and no trailer).
+
+    Rejects negative offsets (the trailer sentinel space: the reader
+    would silently skip the record, review r12) and NULL fields (the
+    format has no NULL encoding, review r13), naming the record.  The
+    NULL diagnosis runs only after a pack fails, so it costs the normal
+    path nothing."""
+    pack, write = struct.pack, f.write
+    lo = hi = None
+    keys = set()
+    for r in rows:
+        off, ints, blobs = r[0], r[1], r[2]
+        try:
+            if off < 0:
+                raise ValueError(
+                    f"lstore_log segment: offset {off} < 0 collides with "
+                    "the stats-trailer sentinel (the reader would silently "
+                    "drop the row); offsets must be >= 0")
+            write(pack(f"<qi{len(ints)}qi", off, len(ints), *ints,
+                       len(blobs)))
+            for b in blobs:
+                write(pack("<i", len(b)))
+                write(b)
+        except (TypeError, struct.error):
+            if (off is None or ints is None or blobs is None
+                    or None in ints or None in blobs):
+                raise ValueError(
+                    f"lstore_log segment: record offset={off!r} carries "
+                    "NULL ints/blobs — the segment format has no NULL "
+                    "encoding; filter or sentinel-encode NULLs upstream"
+                ) from None
+            raise
+        if lo is None:
+            lo = hi = off
+        elif off < lo:
+            lo = off
+        elif off > hi:
+            hi = off
+        if keys is not None and blobs:
+            try:
+                keys.add(str(blobs[0], "utf-8"))
+            except UnicodeDecodeError:
+                keys = None
+            else:
+                if len(keys) > _IDX_MAX_KEYS:
+                    keys = None
+    if lo is not None:
+        write(_pack_trailer(lo, hi))
+    return lo, hi, (sorted(keys) if keys is not None else None)
+
+
+def write_segment(path: str,
+                  records: Iterable[tuple[int, list[int], list[bytes]]]) -> None:
+    """Append-only segment writer (the lstore write path analog), run
+    in the calling process.
 
     Index/segment publish ordering (ADVICE r5): any stale sidecar is
     removed BEFORE the segment bytes change and the new sidecar is
@@ -165,131 +212,33 @@ def write_segment(path: str, records: list[tuple[int, list[int], list[bytes]]]) 
     except FileNotFoundError:
         pass
     with open(path, "wb") as f:
-        for offset, ints, blobs in records:
-            if (offset is None or any(v is None for v in ints)
-                    or any(b is None for b in blobs)):
-                # the segment format has no NULL encoding — an event
-                # with a NULL field used to die rows deep in struct.pack
-                # with a context-free TypeError (review r13); name the
-                # record and the contract instead
-                raise ValueError(
-                    f"write_segment: record offset={offset!r} carries "
-                    "NULL ints/blobs — the segment format has no NULL "
-                    "encoding; filter or sentinel-encode NULLs upstream")
-            if offset < 0:
-                # negative offsets are the trailer sentinel space: the
-                # reader would silently skip such a record as a trailer
-                # (review r12) — reject at write time, loudly
-                raise ValueError(
-                    f"write_segment: offset {offset} < 0 collides with "
-                    "the stats-trailer sentinel; offsets must be >= 0")
-            f.write(struct.pack("<qi", offset, len(ints)))
-            for v in ints:
-                f.write(struct.pack("<q", v))
-            f.write(struct.pack("<i", len(blobs)))
-            for b in blobs:
-                f.write(struct.pack("<i", len(b)))
-                f.write(b)
-        offs = [r[0] for r in records]
-        if offs:
-            f.write(_pack_trailer(min(offs), max(offs)))
-    if records:
-        _write_idx(path, _keyset(r[2][0] for r in records if r[2]))
+        lo, _hi, keys = _write_records(f, records)
+    if lo is not None:
+        idx = _idx_path(path)
+        _write_idx(idx + ".tmp", keys)
+        os.replace(idx + ".tmp", idx)
 
 
 def write_segments(df: DataFrame, seg_dir: str) -> None:
-    """Distributed segment sink (VERDICT r4 item 2): each task writes ONE
-    ``.seg`` file for its partition — the write unit matches the storage
-    unit exactly like the read path, and NO row ever moves through the
-    driver.  ``df`` must have columns (offset bigint, ints array<bigint>,
-    blobs array<binary>).
+    """Distributed segment sink (VERDICT r4 item 2): each task encodes
+    its partition into ONE ``part-<pid>.seg`` (+ ``.idx``) — the write
+    unit matches the storage unit like the read path, and NO row moves
+    through the driver.  ``df`` must have columns (offset bigint, ints
+    array<bigint>, blobs array<binary>).
 
-    Task-retry safety: each attempt writes ``.part-<pid>.seg.tmp-<task
-    attempt>`` then atomically renames to ``part-<pid>.seg`` — a retried
-    task republishes the same partition id, so the last rename wins and
-    the store never exposes a torn file (the lstore appender's
-    tmp+rename publish discipline).  On a real cluster ``seg_dir`` is a
-    shared filesystem / object store mount; locally it's tmpfs.
-
-    The closure is self-contained (stdlib only) so it pickles by value —
-    no worker-side package import needed.  That deployment boundary is
-    why the serialization logic here deliberately DUPLICATES
-    ``_stage_partition`` (the DataSource path, which imports this
-    module on workers anyway) instead of calling it;
-    tests/test_lstore_sink.py pins the two byte-identical."""
-
-    # capture the module constant into a local so the serialized closure
-    # and the test-rig writer always share one cap (ADVICE r5: a literal
-    # here would drift silently if _IDX_MAX_KEYS changed)
-    max_keys = _IDX_MAX_KEYS
+    Publish policy: per task, through ``_stage_partition`` and
+    ``_publish`` — a retried task republishes the same partition id over
+    itself (last rename wins; no torn file is ever visible).  Unlike the
+    job-atomic ``df.write.format("lstore_log")``, a failed job can leave
+    the finished tasks' segments; in return the write takes no Python
+    planner calls.  The tasks import this module, so the package zip
+    ships first (once per application)."""
+    ship_package(df.sparkSession)
 
     def _write_partition(rows) -> None:
-        import os as _os
-        import struct as _struct
-
         from pyspark import TaskContext
-
-        import json as _json
-
-        tc = TaskContext.get()
-        pid, attempt = tc.partitionId(), tc.taskAttemptId()
-        tmp = _os.path.join(seg_dir, f".part-{pid:05d}.seg.tmp-{attempt}")
-        lo = hi = None
-        keys, keys_ok = set(), True
-        with open(tmp, "wb") as f:
-            for r in rows:
-                off = r[0]
-                if off < 0:
-                    raise ValueError(
-                        f"write_segments: offset {off} < 0 collides "
-                        "with the stats-trailer sentinel (the reader "
-                        "would silently drop the row); offsets must "
-                        "be >= 0")
-                lo = off if lo is None else min(lo, off)
-                hi = off if hi is None else max(hi, off)
-                ints, blobs = list(r[1]), list(r[2])
-                if keys_ok and blobs:
-                    try:
-                        keys.add(bytes(blobs[0]).decode("utf-8"))
-                    except (UnicodeDecodeError, TypeError):
-                        # TypeError: NULL blob element — degrade to
-                        # keys=null (no index) like _keyset, don't fail
-                        # the task (ADVICE r5)
-                        keys_ok = False
-                    if len(keys) > max_keys:
-                        keys_ok = False
-                f.write(_struct.pack("<qi", off, len(ints)))
-                for v in ints:
-                    f.write(_struct.pack("<q", v))
-                f.write(_struct.pack("<i", len(blobs)))
-                for b in blobs:
-                    f.write(_struct.pack("<i", len(b)))
-                    f.write(bytes(b))
-            if lo is not None:  # seal with the min/max stats trailer
-                f.write(_struct.pack("<qi", -1, 2)
-                        + _struct.pack("<qq", lo, hi)
-                        + _struct.pack("<i", 0))
-        if lo is not None:
-            final = _os.path.join(seg_dir, f"part-{pid:05d}.seg")
-            idx = final[:-4] + ".idx"
-            # Publish ordering (ADVICE r5): drop any stale index BEFORE
-            # the segment rename, publish the fresh index (atomically,
-            # tmp+rename) only AFTER.  A reader racing a republish or a
-            # crash between the steps sees at worst a segment with no
-            # index — pruning disabled, rows intact; the old ordering
-            # (idx first) could pair a new index with the previous
-            # segment's data and silently prune live rows.
-            try:
-                _os.remove(idx)
-            except FileNotFoundError:
-                pass
-            _os.replace(tmp, final)
-            idx_tmp = f"{idx}.tmp-{attempt}"
-            with open(idx_tmp, "w") as ix:
-                _json.dump({"keys": sorted(keys) if keys_ok else None}, ix)
-            _os.replace(idx_tmp, idx)
-        else:
-            _os.remove(tmp)  # empty partition → no segment file
+        pid = TaskContext.get().partitionId()
+        _publish([_stage_partition(seg_dir, f"{pid:05d}", rows)])
 
     df.select("offset", "ints", "blobs").foreachPartition(_write_partition)
 
@@ -435,72 +384,40 @@ class _SegStaged(WriterCommitMessage):
     final_seg: str
 
 
-def _stage_partition(seg_dir: str, basename: str, iterator):
-    """Executor side of the two-phase segment write: serialize this
-    partition's rows into `.stage-…` files (segment + sidecar index
-    content, both invisible to readers — only `*.seg` names are listed)
-    and report them for the driver's atomic publish.  Rows must carry
-    (offset bigint, ints array<bigint>, blobs array<binary>)."""
+def _stage_partition(seg_dir: str, basename: str, rows) -> _SegStaged:
+    """Executor side of a segment write: encode this partition's rows
+    into `.stage-…` files (segment + sidecar index content, both
+    invisible to readers — only `*.seg` names are listed) and report
+    them for ``_publish``.  Rows must carry (offset bigint, ints
+    array<bigint>, blobs array<binary>) as their first three fields."""
     from pyspark import TaskContext
 
-    tc = TaskContext.get()
-    attempt = tc.taskAttemptId()
+    attempt = TaskContext.get().taskAttemptId()
     tmp_seg = os.path.join(seg_dir, f".stage-{basename}.seg.{attempt}")
     tmp_idx = os.path.join(seg_dir, f".stage-{basename}.idx.{attempt}")
-    lo = hi = None
-    keys, keys_ok = set(), True
-    n = 0
     with open(tmp_seg, "wb") as f:
-        for r in iterator:
-            off, ints, blobs = r[0], list(r[1]), list(r[2])
-            if off < 0:
-                raise ValueError(
-                    f"lstore_log writer: offset {off} < 0 collides "
-                    "with the stats-trailer sentinel (the reader "
-                    "would silently drop the row); offsets must be "
-                    ">= 0")
-            lo = off if lo is None else min(lo, off)
-            hi = off if hi is None else max(hi, off)
-            if keys_ok and blobs:
-                try:
-                    keys.add(bytes(blobs[0]).decode("utf-8"))
-                except (UnicodeDecodeError, TypeError):
-                    keys_ok = False
-                if len(keys) > _IDX_MAX_KEYS:
-                    keys_ok = False
-            f.write(struct.pack("<qi", off, len(ints)))
-            for v in ints:
-                f.write(struct.pack("<q", v))
-            f.write(struct.pack("<i", len(blobs)))
-            for b in blobs:
-                bb = bytes(b)
-                f.write(struct.pack("<i", len(bb)))
-                f.write(bb)
-            n += 1
-        if lo is not None:
-            f.write(_pack_trailer(lo, hi))
+        lo, _hi, keys = _write_records(f, rows)
     if lo is None:  # empty partition → nothing to publish
         os.remove(tmp_seg)
         return _SegStaged(tmp_seg="", tmp_idx="", final_seg="")
-    import json
-    with open(tmp_idx, "w") as ix:
-        json.dump({"keys": sorted(keys) if keys_ok else None}, ix)
+    _write_idx(tmp_idx, keys)
     return _SegStaged(
         tmp_seg=tmp_seg, tmp_idx=tmp_idx,
         final_seg=os.path.join(seg_dir, f"part-{basename}.seg"))
 
 
 def _publish(messages) -> None:
-    """Driver side: atomically publish every staged segment.  Per
+    """The one publish rule: rename staged segments into place.  Per
     segment the ADVICE-r5 ordering holds (stale idx removed before the
-    segment bytes appear, fresh idx renamed in only after), and because
-    nothing is renamed until EVERY task has staged, a failed job leaves
-    zero new `*.seg` files — job-level atomicity the task-publishing
-    ``write_segments`` path cannot give."""
+    segment bytes appear, fresh idx renamed in only after), and a
+    republish under the same final name replaces it whole.  The
+    DataSource writers call it on the driver once EVERY task has staged,
+    so a failed job leaves zero new `*.seg` files; ``write_segments``
+    calls it inside each task, for that task's segment."""
     for m in messages:
         if not m or not m.final_seg:
             continue
-        idx = m.final_seg[:-4] + ".idx"
+        idx = _idx_path(m.final_seg)
         try:
             os.remove(idx)
         except FileNotFoundError:
@@ -1133,7 +1050,6 @@ def snapshot_store(seg_dir: str) -> int:
     set forever, concurrent appends land in later versions, and
     retention that deletes a pinned segment turns into a loud
     time-travel error, not silent row loss.  Returns the version id."""
-    import json
     import uuid
     # Version minting is CAS, not max+1-then-replace: os.replace would
     # silently overwrite a manifest a concurrent publisher minted with
@@ -1177,7 +1093,6 @@ def manifest_segments(seg_dir: str, version: int) -> list[str]:
     """Segment names pinned by manifest ``version`` (shape-validated
     like segment_keys: a corrupt manifest raises rather than silently
     narrowing the snapshot)."""
-    import json
     p = os.path.join(seg_dir, f"manifest-v{version}.json")
     with open(p) as fh:
         doc = json.load(fh)

@@ -112,3 +112,33 @@ def test_udf_key_runs_from_any_cwd(tmp_path, sf_dir):
         "spark.stop()\n",
         cwd=str(tmp_path), env=env, timeout=600)
     assert out.splitlines()[-1].startswith("rows ")
+
+
+def test_write_segments_runs_from_any_session(tmp_path):
+    """``write_segments`` tasks encode through lstore_log's own module
+    code, so the sink ships the package before its job: a bare
+    ``SparkSession.builder`` session (no ``tune()``) on a driver whose
+    working directory is elsewhere, with no PYTHONPATH, still writes
+    segments that read back whole."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    seg = str(tmp_path / "segs")
+    os.makedirs(seg)
+    out = _fresh(
+        f"import glob, sys\nsys.path.insert(0, {ROOT!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "spark = (SparkSession.builder.master('local[2]')\n"
+        "         .config('spark.driver.memory', '1g')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "from lstore_spark.sources.lstore_log import (read_segment_file,\n"
+        "                                             write_segments)\n"
+        "df = spark.createDataFrame(\n"
+        "    [(i, [i, 2 * i], [b'k']) for i in range(5)],\n"
+        "    'offset long, ints array<long>, blobs array<binary>')\n"
+        f"write_segments(df.repartition(1), {seg!r})\n"
+        f"print([r for p in sorted(glob.glob({seg!r} + '/*.seg'))\n"
+        "       for r in read_segment_file(p)])\n"
+        "spark.stop()\n",
+        cwd=str(tmp_path), env=env, timeout=300)
+    assert out.splitlines()[-1] == str(
+        [(i, [i, 2 * i], [b"k"], "k") for i in range(5)])

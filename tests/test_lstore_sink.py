@@ -399,21 +399,35 @@ def test_torn_segment_fails_loudly_or_reads_as_unsealed(tmp_path):
             list(read_segment_file(p2))
 
 
-def test_write_segment_rejects_null_fields_loudly(tmp_path):
+def test_write_segment_rejects_null_fields_loudly(spark, tmp_path):
     """review r13: a NULL int or blob used to die rows deep inside
     struct.pack with a context-free TypeError (the shape a NULL-ts
-    event reaches the sink as) — the writer must name the record and
-    the no-NULL-encoding contract instead."""
+    event reaches the sink as) — every writer must name the record and
+    the no-NULL-encoding contract instead: write_segment, the
+    distributed write_segments and df.write.format("lstore_log")."""
     import pytest
 
-    from lstore_spark.sources.lstore_log import write_segment
+    from lstore_spark.sources.lstore_log import (register, write_segment,
+                                                 write_segments)
 
     p = str(tmp_path / "n.seg")
-    for bad in ([(0, [1, None], [b"k"])],
-                [(0, [1], [None])],
-                [(None, [1], [b"k"])]):
+    bads = ([(0, [1, None], [b"k"])],
+            [(0, [1], [None])],
+            [(None, [1], [b"k"])])
+    for bad in bads:
         with pytest.raises(ValueError, match="NULL ints/blobs"):
             write_segment(p, bad)
+    register(spark)
+    for i, bad in enumerate(bads):
+        df = spark.createDataFrame(
+            bad, "offset long, ints array<long>, blobs array<binary>")
+        (tmp_path / f"ws{i}").mkdir()
+        (tmp_path / f"ds{i}").mkdir()
+        with pytest.raises(Exception, match="NULL ints/blobs"):
+            write_segments(df.repartition(1), str(tmp_path / f"ws{i}"))
+        with pytest.raises(Exception, match="NULL ints/blobs"):
+            (df.write.format("lstore_log")
+             .option("path", str(tmp_path / f"ds{i}")).mode("append").save())
 
 
 def test_segment_read_blob_larger_than_window(tmp_path):
@@ -476,9 +490,13 @@ def test_republish_never_pairs_new_index_with_old_segment(tmp_path):
     the index is either absent (pruning disabled — sound) or matches."""
     import os
 
-    from lstore_spark.sources.lstore_log import (_idx_path,
+    from pyspark.sql.datasource import EqualTo
+
+    from lstore_spark.sources.lstore_log import (LstoreLogPushdownReader,
+                                                 _idx_path,
                                                  read_segment_file,
                                                  segment_keys,
+                                                 segment_stats,
                                                  write_segment)
 
     p = str(tmp_path / "r.seg")
@@ -492,6 +510,16 @@ def test_republish_never_pairs_new_index_with_old_segment(tmp_path):
     # → reader must fall back to scanning, not prune on stale keys
     os.remove(_idx_path(p))
     assert segment_keys(p) is None  # absence = scan, never a wrong prune
+    # republish from a generator, which can be consumed only once: the
+    # trailer and the sidecar must come from the pass that frames the
+    # rows, or the pushdown reader prunes this live segment for
+    # key = 'alpha' and returns no rows
+    write_segment(p, ((i, [i], [b"alpha"]) for i in range(5)))
+    assert segment_stats(p) == (0, 4)
+    assert segment_keys(p) == ["alpha"]
+    reader = LstoreLogPushdownReader({"path": str(tmp_path)})
+    reader.pushFilters([EqualTo(("key",), "alpha")])
+    assert [part.value for part in reader.partitions()] == [p]
 
 
 def test_sink_republish_is_idempotent(spark, tmp_path):
@@ -1032,14 +1060,12 @@ def test_corrupt_manifest_fails_loudly_never_narrows(spark, tmp_path):
 
 
 def test_closure_and_datasource_serializers_byte_identical(spark, tmp_path):
-    """write_segments' self-contained closure and the DataSource path's
-    _stage_partition are two DELIBERATE copies of the segment
-    serializer with different deployment boundaries (the closure
-    pickles by value so workers need no package import; the DataSource
-    path imports the module anyway).  The trade is documented in
-    write_segments' docstring — this test pins the non-negotiable part:
-    identical rows must produce byte-identical segment files and
-    identical key-index sidecars through BOTH paths (review r10)."""
+    """write_segments (each task publishes its own segment) and
+    df.write.format("lstore_log") (the driver publishes the whole job)
+    differ only in their publish policy; both encode through
+    _stage_partition and the one segment encoder.  Identical rows must
+    produce byte-identical segment files and identical key-index
+    sidecars through BOTH paths (review r10)."""
     import json
 
     from lstore_spark.sources.lstore_log import register, write_segments
