@@ -101,12 +101,9 @@ _CODE_EXPR = f"""
 def _train_quantizer(corpus):
     """(label, embedding) corpus → (cvecs, bounds): per-label
     exact-decimal mean centroids + per-dim SQ8 min/step bounds, both
-    pin()ned (each feeds a write AND a broadcast/collect, so they must
-    compute once — and pin's sweep-scoped lifetime releases the blocks
-    at the next key invocation, unlike the localCheckpoints this
-    replaced, which held BlockManager storage for the session; both
-    relations are deterministic, so a recompute after eviction is
-    value-identical)."""
+    pin()ned (each feeds a write AND a broadcast/collect — two
+    branches, ``registry.pin``'s rule; both relations are
+    deterministic, so a recompute after eviction is value-identical)."""
     # the SHARED two-layer centroid definition (embeddings.py): elems
     # is reused below for the SQ8 bounds, so the layers are composed
     # here instead of calling centroid_vectors (review r10 — this was

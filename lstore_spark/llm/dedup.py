@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_documents, load_table, table_rows
-from ..registry import query
+from ..registry import pin, query
 from .similarity import _DUCK_PAIRS, cosine, duck_pair_cosine
 from .text import _DUCK_TOKENS, _ORACLE_MAX_TOKENS, _SPARK_TOKENS
 
@@ -226,8 +226,8 @@ def lsh_candidate_pairs(sig: DataFrame,
     upstream already collapses, and every member still has b−1 other
     bands to collide in.  The width count is a tiny map-side-combined
     aggregate on the (band, bucket) keys; the hot list is broadcast and
-    anti-joined (localCheckpoint'ed — it feeds both self-join sides and
-    Spark does no CSE across broadcast branches).  Interaction with the
+    anti-joined, and pinned: each self-join side broadcasts it, and the
+    two broadcasts are not reused.  Interaction with the
     first-colliding-band dedup below: a pair whose FIRST colliding band
     fell in a dropped bucket is dropped entirely (its later-band rows
     fail the first-band filter) rather than retried on surviving bands —
@@ -238,11 +238,10 @@ def lsh_candidate_pairs(sig: DataFrame,
     banded = sig.select("doc_id", "mhs", "bkts",
                         F.posexplode("bkts").alias("band", "bkt"))
     if max_bucket_width is not None:
-        hot = (banded.groupBy("band", "bkt")
-               .agg(F.count(F.lit(1)).alias("bw"))
-               .filter(F.col("bw") > max_bucket_width)
-               .select("band", "bkt")
-               .localCheckpoint())
+        hot = pin(banded.groupBy("band", "bkt")
+                  .agg(F.count(F.lit(1)).alias("bw"))
+                  .filter(F.col("bw") > max_bucket_width)
+                  .select("band", "bkt"))
         banded = banded.join(F.broadcast(hot), ["band", "bkt"], "left_anti")
 
     a = banded.select(F.col("doc_id").alias("id_a"),
@@ -490,14 +489,14 @@ def q_llm_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently; see the _minhash_oracle block comment and the
     elementwise JVM-parity pins in tests/test_llm.py."""
     docs = load_table(spark, sf_dir, "documents")
-    # Materialize signatures ONCE (the canonical production shape: sigs
-    # are computed once and stored).  They feed three plan branches
-    # (both sides of the banding self-join + the final doc roster) and
-    # Spark does no CSE across branches, so without this the token-hash
-    # projection ran 3× over the corpus — measured 1.8 s → 1.1 s at
-    # sf0.1.  ~116 B/doc of executor storage (signature + band
-    # buckets), linear in the corpus.
-    sig = minhash_signatures(docs).localCheckpoint()
+    # Pin the signatures (the canonical production shape: sigs are
+    # computed once and stored).  They feed four plan branches (both
+    # sides of the banding self-join, the hot-bucket aggregate and the
+    # final doc roster) and Spark does no CSE across branches, so
+    # without this the token-hash projection ran 3× over the corpus —
+    # measured 1.8 s → 1.1 s at sf0.1.  ~116 B/doc of executor storage
+    # (signature + band buckets), linear in the corpus.
+    sig = pin(minhash_signatures(docs))
     pairs = lsh_candidate_pairs(sig)
     # explode, not union-of-two-projections: Spark does no CSE across
     # union branches, so the union form executed the entire banding join
@@ -805,18 +804,18 @@ def dedup_clusters(doc_ids: DataFrame, pairs: DataFrame,
     Label propagation: each round every vertex takes the min label among
     itself and its neighbors; converges in O(graph diameter) rounds
     (near-dup clusters are tiny, so 3-5 rounds in practice).  Each round
-    is one equi-join + groupBy — all shuffles on doc_id.  localCheckpoint
-    cuts the growing lineage so round N doesn't replan rounds 1..N-1.
+    is one equi-join + groupBy — all shuffles on doc_id.  Every round
+    reads ``edges``, so they are pinned; each round's labels are a
+    per-round loop cut (localCheckpoint), so round N doesn't replan
+    rounds 1..N-1.
 
     ``doc_ids``: one column ``doc_id``; ``pairs``: columns id_a, id_b.
     """
-    edges = (
+    edges = pin(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
+        .distinct())
     labels = doc_ids.select(
         "doc_id", F.col("doc_id").alias("cluster_id"))
     for _ in range(max_iters):
@@ -887,13 +886,11 @@ def q_llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps = hashed.groupBy("_h").agg(F.min("doc_id").alias("rep_id"))
     rep_docs = docs.join(
         reps.select(F.col("rep_id").alias("doc_id")), "doc_id", "left_semi")
-    # localCheckpoint for the same reason as q_llm_dedup_minhash (review
-    # r13): lsh_candidate_pairs consumes sig on three branches (both
-    # self-join sides + the hot-bucket width aggregate); ReuseExchange
-    # dedupes the twin exchanges but not the aggregate branch, so
-    # without this the Arrow minhash UDF re-runs over the
-    # representative corpus
-    sig = minhash_signatures(rep_docs).localCheckpoint()
+    # pinned as in q_llm_dedup_minhash (review r13): lsh_candidate_pairs
+    # reads sig on three branches (both self-join sides + the hot-bucket
+    # width aggregate), so without it the Arrow minhash UDF re-runs over
+    # the representative corpus
+    sig = pin(minhash_signatures(rep_docs))
     pairs = lsh_candidate_pairs(sig, min_est_jaccard=0.5).select("id_a", "id_b")
     labels = dedup_clusters(rep_docs.select("doc_id"), pairs)
     return (hashed.join(reps, "_h")
@@ -1117,12 +1114,13 @@ def semantic_dedup(em: DataFrame, n_clusters: int,
     # reduce task — the hot-key pathology the cap exists to bound), so
     # the anti-join structure stays; the fused flags UDF still removes
     # the roster join-back.  v feeds three branches (width aggregate,
-    # anti side, wide-member roster) → keep the materialization.
-    v = src.localCheckpoint()
-    wide = (v.groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("cw"))
-            .filter(F.col("cw") > max_cluster_width)
-            .select("cluster").localCheckpoint())
+    # anti side, wide-member roster) and wide two broadcasts that are
+    # not reused → both pinned.
+    v = pin(src)
+    wide = pin(v.groupBy("cluster")
+               .agg(F.count(F.lit(1)).alias("cw"))
+               .filter(F.col("cw") > max_cluster_width)
+               .select("cluster"))
     narrow = v.join(F.broadcast(wide), "cluster", "left_anti")
     wide_members = (v.join(F.broadcast(wide), "cluster", "left_semi")
                     .select("vec_id", "cluster",

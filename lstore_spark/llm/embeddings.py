@@ -641,8 +641,9 @@ def q_llm_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-asserted.
 
     Scale: each round = broadcast-assign (one corpus scan) + one
-    (cluster, dim)-cell shuffle; localCheckpoint caps lineage growth
-    across rounds exactly as in dedup_clusters.  Driver holds only the
+    (cluster, dim)-cell shuffle; each round's assignment and centroids
+    are a per-round loop cut (localCheckpoint, ``registry.pin``'s
+    rule), as in dedup_clusters.  Driver holds only the
     k×dim centroid table."""
     from pyspark.sql import Window
     em = load_table(spark, sf_dir, "embeddings")

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, table_rows
-from ..registry import query
+from ..registry import pin, query
 
 # ---- shared Spark-side vector expressions (HOFs — no UDF, JVM-side) ----
 
@@ -938,8 +938,8 @@ def q_llm_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists and exact-cosine re-ranks inside them.
 
     At 100 TB: the centroid table (n_lists rows) is computed ONCE
-    (localCheckpoint — it feeds both the routing closure and the probe
-    join) and collected to the driver; corpus→list routing is a
+    (pinned — the probe join reads it too) and collected to the
+    driver; corpus→list routing is a
     vectorized pandas-UDF batch matmul against that matrix — a pure
     PROJECTION, no n_lists-way row expansion and no corpus shuffle (the
     earlier crossJoin+max_by form pushed corpus×n_lists rows through an
@@ -960,15 +960,13 @@ def q_llm_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = em.filter(F.col("vec_id") >= 10).select(
         F.col("vec_id").alias("cand_id"), "label", F.col("embedding").alias("c_emb"))
     # Coarse quantizer: per-label mean vectors (n_lists = |labels|).
-    cvecs = (
+    cvecs = pin(  # collected for the routing closure AND probe-joined
         corpus.select("label", F.posexplode("c_emb").alias("i", "v"))
         .groupBy("label", "i").agg(F.avg(F.col("v").cast("double")).alias("c"))
         .groupBy("label")
         .agg(F.expr("transform(array_sort(collect_list(struct(i, c))), "
                     "s -> s.c)").alias("cvec"))
-        .select(F.col("label").alias("list_id"), "cvec")
-        .localCheckpoint()  # feeds the routing closure AND the probe join
-    )
+        .select(F.col("label").alias("list_id"), "cvec"))
     import numpy as np
     import pandas as pd
 

@@ -587,7 +587,7 @@ def q_agg_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     data with NULL keys (the q_ts_counter_rate latent-guard class)."""
     ev = (load_table(spark, sf_dir, "events")
           .filter(F.col("user_id").isNotNull()).select("user_id"))
-    sketch = cms_sketch(ev, "user_id").localCheckpoint()
+    sketch = cms_sketch(ev, "user_id")
     totals = ev.agg(F.count(F.lit(1)).alias("total"),
                     F.count_distinct("user_id").alias("users"))
     cand = (ev.crossJoin(F.broadcast(sketch))

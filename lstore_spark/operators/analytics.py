@@ -2603,8 +2603,7 @@ def q_graph_rank_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side's partitioning).  The old shape shuffled the edge relation
     # four more times (distinct by (c,s), degree join per side, hop
     # groupBys); measured at the 100× fixture the two hops drop
-    # 23.4 → 12.2 s.  Pinned (serialized, spillable) because three
-    # branches read it — deserialized localCheckpoint OOMs at 100×.
+    # 23.4 → 12.2 s.  Pinned because three branches read it.
     edges = pin(od.join(li, od.o_orderkey == li.l_orderkey)
                 .select(F.col("o_custkey").alias("c"),
                         F.col("l_suppkey").alias("s"))
@@ -2708,9 +2707,7 @@ def q_evt_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("prev").isNull()
         | (F.col("day") > F.date_add("prev", span - 1)), 1).otherwise(0)
     # Pin the windowed relation: it feeds DAU plus both interval
-    # branches and Spark does no CSE across branches (serialized,
-    # spillable — localCheckpoint materializes deserialized and OOMs
-    # the local heap at the 100× fixture).
+    # branches and Spark does no CSE across branches.
     marked = pin(seq.select(
         "day", "user_id",
         F.sum(new_iv(7)).over(wrun).alias("i7"),

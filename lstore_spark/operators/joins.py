@@ -670,7 +670,7 @@ def q_join_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an oversized one wastes broadcast.  Sizing is an upper-bound guess;
     # correctness never depends on it (FPs are removed by the exact join).
     mbits = bloom_bits_for(max(1024, table_rows(sf_dir, "orders") // 20))
-    bloom = bloom_bitmap(od, "o_orderkey", mbits).localCheckpoint()
+    bloom = bloom_bitmap(od, "o_orderkey", mbits)
     pruned = bloom_prune(li, "l_orderkey", bloom, mbits)
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (

@@ -280,8 +280,7 @@ def q_mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = F.lit("2000-01-01 00:00:00").cast("timestamp_ntz")
     # Pin enr: it feeds the base and delta branches; in the real
     # pipeline these are separate runs, but within this one-query demo
-    # Spark would otherwise scan+join orders twice.  Serialized persist
-    # (not localCheckpoint): spillable at any scale.  Customer
+    # Spark would otherwise scan+join orders twice.  Customer
     # broadcast is stats-gated like the TPC-H family (review r10: this
     # was an ungated full-dim broadcast — the shape the 1000× probe
     # measured 2× over linear before q5's gate).

@@ -127,9 +127,17 @@ _PINNED: list[DataFrame] = []
 
 def pin(df: DataFrame) -> DataFrame:
     """``persist(MEMORY_AND_DISK)`` with sweep-scoped lifetime (see
-    ``_PINNED``).  Serialized + spillable — the round-7 discipline:
-    localCheckpoint materializes deserialized and OOMs an 8g local
-    heap at the 100× fixture."""
+    ``_PINNED``).  The one rule for materialising a relation while a
+    query is built:
+
+    - read by two or more branches of the executed plan (a reused
+      exchange is one) → ``pin``: lazy, no job at build time, spillable,
+      lineage kept so a lost block recomputes;
+    - one consumer → no materialisation at all;
+    - a per-round loop cut (``dedup_clusters``, ``q_llm_emb_kmeans``)
+      → ``localCheckpoint()``, and nowhere else: it runs a job at build
+      time, stores deserialized blocks (an 8g local heap OOMed at the
+      100× fixture) and drops lineage."""
     from pyspark import StorageLevel
 
     df = df.persist(StorageLevel.MEMORY_AND_DISK)

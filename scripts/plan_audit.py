@@ -51,12 +51,18 @@ def python_evals(plan: str) -> list[list[str]]:
     """One entry per Python-eval node of ``plan`` (a physical plan's tree
     string): the Python UDF calls it evaluates, as ``name(args)`` with
     the ``#id`` suffixes stripped, so the same UDF over the same input
-    columns reads the same in every node that evaluates it."""
-    nodes = []
+    columns reads the same in every node that evaluates it.
+
+    A node printed twice with the same expression ids is one node: a
+    cached relation's plan prints under every InMemoryTableScan of it,
+    but runs once.  Two evaluations of one UDF always differ in the
+    ``pythonUDF<i>#id`` attributes of their output."""
+    nodes, seen = [], set()
     for line in plan.splitlines():
         m = PY_EVAL.search(line)
-        if not m:
+        if not m or line[m.start():] in seen:
             continue
+        seen.add(line[m.start():])
         text, calls, pos = line[m.end():], [], 0
         while (h := _UDF_HEAD.search(text, pos)):
             depth, end = 0, h.end() - 1

@@ -477,6 +477,8 @@ def test_tpch_q8_star_broadcasts_all_dims(spark, sf_dir):
     ("q_graph_rank_2hop", 3),
     ("q_mv_incremental_refresh", 2),
     ("q_evt_basket_lift", 4),
+    # minhash signatures: both banding self-join sides and the roster
+    ("q_llm_dedup_minhash", 3),
 ])
 def test_multibranch_relations_compute_once(spark, sf_dir, key, n_branches):
     """The pinned multi-branch subplans (du / edges / enr) must appear as
@@ -485,6 +487,40 @@ def test_multibranch_relations_compute_once(spark, sf_dir, key, n_branches):
     (Spark does no CSE across DataFrame branches; round-7 self-review)."""
     p = _plan(spark, sf_dir, key)
     assert p.count("InMemoryTableScan") >= n_branches, key
+
+
+@pytest.mark.parametrize("key,actions", [
+    ("q_llm_dedup_minhash", []),
+    ("q_agg_heavy_hitters_cms", []),
+    ("q_join_bloom_prune", []),
+    # the routing closure needs the centroids on the driver
+    ("q_llm_sim_ivf_topk", ["collect"]),
+])
+def test_build_runs_no_materialisation_job(spark, sf_dir, key, actions):
+    """registry.pin's rule at build time: a pin is lazy and a single
+    consumer is not materialised, so building the DataFrame runs no
+    Spark job beyond an action the key itself needs."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = sc._jsc.sc().listenerBus()
+
+    def last_executions():  # the store keeps a bounded, id-ordered list
+        n = store.executionsCount()
+        tail = store.executionsList(max(0, n - 10), 10)
+        return [tail.apply(i) for i in range(tail.size())]
+
+    bus.waitUntilEmpty()
+    before = max([e.executionId() for e in last_executions()], default=-1)
+    sc.setLocalProperty("spark.jobGroup.id", key)
+    try:
+        QUERIES[key](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(key)
+    execs = [e for e in last_executions() if e.executionId() > before]
+    assert [e.description().split(" at ")[0] for e in execs] == actions
+    assert sum(e.jobs().size() for e in execs) == len(jobs), jobs
 
 
 def test_tfidf_scored_branch_prunes_scan(spark, sf_dir):
@@ -650,6 +686,33 @@ _SELF_JOIN_UDF_REPEATS = {"q_llm_sim_lsh_topk", "q_llm_sim_threshold_pairs",
 # Catalyst from evaluating them a second time under the filter.
 _CORPUS_UDF_KEYS = ["q_llm_emb_pq_adc", "q_llm_emb_pq_encode",
                     "q_llm_sim_ivf_topk"]
+
+
+def test_repeated_udfs_counts_one_cached_relation_once():
+    """A pinned relation prints its plan under every scan of it but
+    evaluates its UDF once; two unpinned branches evaluate it twice."""
+    from scripts.plan_audit import python_evals, repeated_udfs
+
+    cached = """\
+   +- InMemoryRelation [doc_id#0L, s#11], StorageLevel(disk, memory, 1 replicas)
+         +- *(2) Project [doc_id#0L, pythonUDF0#15 AS s#11]
+            +- ArrowEvalPython [sig(text#1)#9], [pythonUDF0#15], 200
+               +- FileScan parquet [doc_id#0L,text#1]"""
+    pinned = "\n".join([
+        "SortMergeJoin [doc_id#0L], [doc_id#40L], Inner",
+        ":- InMemoryTableScan [doc_id#0L, s#11]", cached,
+        "+- InMemoryTableScan [doc_id#40L, s#41]", cached])
+    assert python_evals(pinned) == [["sig(text)"]]
+    assert repeated_udfs(pinned) == set()
+
+    unpinned = "\n".join([
+        "SortMergeJoin [doc_id#0L], [doc_id#40L], Inner",
+        ":- ArrowEvalPython [sig(text#1)#9], [pythonUDF0#15], 200",
+        ":  +- FileScan parquet [doc_id#0L,text#1]",
+        "+- ArrowEvalPython [sig(text#42)#9], [pythonUDF0#44], 200",
+        "   +- FileScan parquet [doc_id#40L,text#42]"])
+    assert python_evals(unpinned) == [["sig(text)"], ["sig(text)"]]
+    assert repeated_udfs(unpinned) == {"sig(text)"}
 
 
 def test_no_key_evaluates_a_python_udf_twice(spark, sf_dir):

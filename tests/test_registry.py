@@ -328,3 +328,37 @@ def test_registry_counts_and_duplicate_key_rejected():
     with pytest.raises(ValueError, match="duplicate query key"):
         registry.query(key)(lambda spark, sf_dir: None)
     assert registry.QUERIES[key] is before
+
+
+def test_local_checkpoint_only_at_loop_cuts():
+    """``registry.pin``'s materialisation rule: a relation read by two
+    branches is pinned, one with a single consumer is not materialised,
+    and ``localCheckpoint()`` is called only at the per-round loop cuts
+    of dedup_clusters (labels) and q_llm_emb_kmeans (assign, cvecs)."""
+    import ast
+    import os
+
+    class Sites(ast.NodeVisitor):  # innermost enclosing def per call
+        def __init__(self):
+            self.fn, self.found = "<module>", []
+
+        def visit_FunctionDef(self, node):
+            outer, self.fn = self.fn, node.name
+            self.generic_visit(node)
+            self.fn = outer
+
+        def visit_Call(self, node):
+            if (isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "localCheckpoint"):
+                self.found.append(self.fn)
+            self.generic_visit(node)
+
+    sites = Sites()
+    pkg = os.path.dirname(os.path.abspath(registry.__file__))
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(root, name)) as fh:
+                    sites.visit(ast.parse(fh.read()))
+    assert sorted(sites.found) == ["dedup_clusters", "q_llm_emb_kmeans",
+                                   "q_llm_emb_kmeans"], sites.found
