@@ -12,6 +12,11 @@ Segment framing (little-endian):
     record := offset:int64  n_ints:int32  ints[n_ints]:int64
               n_blobs:int32  (blob_len:int32 blob_bytes)*n_blobs
 
+Pruning contract: every filtered batch read prunes segments at planning
+time (``LstoreLogReader``) and hands every filter back to Spark, so
+pruning is I/O elimination only; ``register()`` turns on the Python
+filter-pushdown conf Spark needs to plan such a reader.
+
 Worker importability: the DataSource class is pickled by reference and
 ``write_segments`` tasks call this module's encoder, so ``register()``
 and ``write_segments`` ship the whole package to workers as a zip
@@ -61,6 +66,12 @@ _IDX_MAX_KEYS = 64
 
 def _idx_path(seg_path: str) -> str:
     return seg_path[: -len(".seg")] + ".idx"
+
+
+def live_segments(seg_dir: str) -> list[str]:
+    """Sorted names of the live segments in ``seg_dir``: every ``*.seg``
+    name (staged segments end in ``.seg.<attempt>`` and are not live)."""
+    return sorted(f for f in os.listdir(seg_dir) if f.endswith(".seg"))
 
 
 def segment_keys(seg_path: str) -> list | None:
@@ -206,7 +217,7 @@ def write_segment(path: str,
     published (atomically, tmp+rename) only AFTER — a reader racing a
     republish sees at worst a segment with no index, which merely
     disables pruning; it can never pair an index with a segment holding
-    different data (the pushdown reader would silently drop rows)."""
+    different data (the reader would silently prune live rows)."""
     try:
         os.remove(_idx_path(path))
     except FileNotFoundError:
@@ -361,8 +372,6 @@ class LstoreLogDataSource(DataSource):
         return SCHEMA_DDL
 
     def reader(self, schema) -> "LstoreLogReader":
-        if str(self.options.get("pushdown", "")).lower() == "true":
-            return LstoreLogPushdownReader(self.options)
         return LstoreLogReader(self.options)
 
     def streamReader(self, schema) -> "LstoreLogStreamReader":
@@ -472,7 +481,7 @@ class LstoreLogWriter(DataSourceWriter):
             keep = {os.path.basename(m.final_seg) for m in messages
                     if m and m.final_seg}
             old = [f for f in os.listdir(self.path)
-                   if (f.endswith(".seg") or f.endswith(".idx"))
+                   if f.endswith((".seg", ".idx"))
                    and f[:-4] + ".seg" not in keep]
         _publish(messages)
         for f in old:
@@ -540,8 +549,7 @@ class LstoreLogStreamWriter(DataSourceStreamWriter):
                  if m and m.final_seg}
         prefix = f"part-{batchId:06d}-"
         for f in os.listdir(self.path):
-            if (f.startswith(prefix) and (f.endswith(".seg")
-                                          or f.endswith(".idx"))
+            if (f.startswith(prefix) and f.endswith((".seg", ".idx"))
                     and f[:-4] + ".seg" not in fresh):
                 try:
                     os.remove(os.path.join(self.path, f))
@@ -552,7 +560,38 @@ class LstoreLogStreamWriter(DataSourceStreamWriter):
         _abort(messages)
 
 
-class LstoreLogReader(DataSourceReader):
+class _SegmentPartitionReader:
+    """The partition reader the batch and stream readers share: one
+    ``InputPartition`` per segment path, decoded by
+    ``read_segment_file``."""
+
+    @staticmethod
+    def _plan(paths: Iterable[str]) -> list:
+        # Zero partitions is not a shape the Python DataSource API
+        # accepts (Spark still schedules one task and hands read() a
+        # None partition — found when a caught-up consumer's cursor
+        # pruned EVERY sealed segment, and when retention deleted
+        # segments mid-tail, review r12): ship one explicit empty
+        # partition instead.
+        return [InputPartition(p) for p in paths] or [InputPartition(None)]
+
+    def read(self, partition):
+        if partition is None or partition.value is None:
+            return  # the explicit empty partition: no segments to scan
+        yield from read_segment_file(partition.value)
+
+
+class LstoreLogReader(_SegmentPartitionReader, DataSourceReader):
+    """The batch reader, with lstore-style segment skipping: offset-range
+    predicates prune whole segment files at PLANNING time against the
+    sealed trailer stats (one tail seek per file — the segment-index
+    read), and key predicates against the sidecar key sets, before any
+    executor touches data.  All filters are returned to Spark
+    unhandled, so exact row filtering still happens above the scan —
+    the pushdown is pure I/O elimination, exactly like parquet
+    row-group min/max skipping.  Spark calls ``pushFilters`` only under
+    the Python filter-pushdown conf, which ``register`` sets."""
+
     def __init__(self, options):
         self.path = options.get("path")
         if not self.path:
@@ -577,7 +616,7 @@ class LstoreLogReader(DataSourceReader):
                 and os.path.basename(path) not in self.segments):
             return False  # not this consumer instance's slice
         if self._lo is None and self._hi is None and self._keys is None:
-            # no pushed predicates (the base reader always lands here):
+            # no pushed predicates (a filterless read lands here):
             # nothing can prune, so skip the per-segment trailer tail
             # read — O(#segments) planning I/O for nothing (review r12)
             return True
@@ -615,11 +654,8 @@ class LstoreLogReader(DataSourceReader):
                         "retention?)")
                 files.append(p)
         else:
-            files = sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if f.endswith(".seg")
-            )
+            files = [os.path.join(self.path, f)
+                     for f in live_segments(self.path)]
         if self.segments is not None:
             present = {os.path.basename(f) for f in files}
             missing = self.segments - present
@@ -628,35 +664,7 @@ class LstoreLogReader(DataSourceReader):
                     f"assigned segments missing from {self.path}: "
                     f"{sorted(missing)} — stale assignment (store "
                     "compacted/purged since assign_segments ran?)")
-        kept = [InputPartition(f) for f in files if self._keep(f)]
-        # Zero partitions is not a shape the Python DataSource API
-        # accepts (Spark still schedules one task and hands read() a
-        # None partition — found when a caught-up consumer's cursor
-        # pruned EVERY sealed segment): ship one explicit empty
-        # partition instead.
-        return kept or [InputPartition(None)]
-
-    def read(self, partition):
-        if partition is None or partition.value is None:
-            return  # the explicit empty partition: no segments to scan
-        yield from read_segment_file(partition.value)
-
-
-class LstoreLogPushdownReader(LstoreLogReader):
-    """Reader variant with lstore-style segment skipping: offset-range
-    predicates prune whole segment files at PLANNING time against the
-    sealed trailer stats (one tail seek per file — the segment-index
-    read), before any executor touches data.  All filters are returned
-    to Spark unhandled, so exact row filtering still happens above the
-    scan — the pushdown is pure I/O elimination, exactly like parquet
-    row-group min/max skipping.
-
-    Selected via ``.option("pushdown", "true")``: Spark refuses a
-    reader that merely *implements* ``pushFilters`` unless
-    ``spark.sql.python.filterPushdown.enabled`` is set, and that conf
-    can't be assumed in an arbitrary caller's session (the driver runs
-    a plain one) — so the base reader stays pushdown-free and callers
-    opt in to both together."""
+        return self._plan(f for f in files if self._keep(f))
 
     def pushFilters(self, filters):
         from pyspark.sql.datasource import (EqualTo, GreaterThan,
@@ -704,7 +712,7 @@ class LstoreLogPushdownReader(LstoreLogReader):
         return filters  # nothing claimed: Spark re-applies every filter
 
 
-class LstoreLogStreamReader(DataSourceStreamReader):
+class LstoreLogStreamReader(_SegmentPartitionReader, DataSourceStreamReader):
     """Streaming tail over a segment directory — the lstore consumer
     model made literal, in its SCALABLE form (upgraded r5 from a
     SimpleDataSourceStreamReader, which funnels every record through the
@@ -730,38 +738,26 @@ class LstoreLogStreamReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"files": []}
 
-    def _list_segments(self) -> list:
-        return sorted(f for f in os.listdir(self.path) if f.endswith(".seg"))
-
     def latestOffset(self) -> dict:
-        return {"files": self._list_segments()}
+        return {"files": live_segments(self.path)}
 
     def partitions(self, start: dict, end: dict):
         new = sorted(set(end["files"]) - set(start["files"]))
-        # zero partitions is not a shape the Python DataSource API
-        # accepts (same as the batch reader, lines above): retention/
-        # compaction DELETING segments mid-tail makes the offsets
-        # differ while the file-set difference is empty — Spark still
-        # schedules one task with a None partition (review r12)
-        return ([InputPartition(os.path.join(self.path, f)) for f in new]
-                or [InputPartition(None)])
-
-    def read(self, partition):
-        if partition is None or partition.value is None:
-            return  # the explicit empty partition: nothing new to scan
-        yield from read_segment_file(partition.value)
+        return self._plan(os.path.join(self.path, f) for f in new)
 
     def commit(self, end: dict) -> None:
         pass  # the store is the source of truth; nothing to acknowledge
 
 
 def register(spark: SparkSession) -> None:
-    """Register the data source; the (cheap, session-scoped)
-    ``dataSource.register`` always runs so a second session on the same
-    context still gets the format, while the zip ships once per
-    application (``ship_package``)."""
+    """Register the data source and turn on Python filter pushdown for
+    the session, the one place that conf is set: Spark plans a reader
+    with ``pushFilters`` only under it, and readers without one plan as
+    before.  Both run on every call (a second session on the same
+    context needs them); the zip ships once per application."""
     ship_package(spark)
     spark.dataSource.register(LstoreLogDataSource)
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
 
 
 # ------------------------------------------------------------ oracle query
@@ -807,10 +803,10 @@ def q_scan_log_from_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lstore's core read — scan from an offset cursor — against the
     segment store ITSELF, with segment skipping end-to-end: the full
     event log lands as 8 range-partitioned sealed segments (disjoint
-    offset ranges + min/max trailers), and the offset-window read uses
-    the pushdown reader so files whose range can't match are pruned at
-    planning time (pytest asserts the plan-time file count; the oracle
-    proves the skipped files contained nothing the query needed).  At
+    offset ranges + min/max trailers), and the offset-window read
+    prunes files whose range can't match at planning time (pytest
+    asserts the plan-time file count; the oracle proves the skipped
+    files contained nothing the query needed).  At
     100 TB this is the whole point of the segment index: a tail-window
     consumer touches O(window), not O(log)."""
     ev = load_table(spark, sf_dir, "events")
@@ -820,13 +816,7 @@ def q_scan_log_from_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
               .sortWithinPartitions("offset"))
     write_segments(shaped, seg_dir)
     register(spark)
-    # Pushdown needs the session conf AND the reader option (see
-    # LstoreLogPushdownReader); the conf must stay set through execution
-    # (plans materialize lazily), and it only affects sources that
-    # implement pushFilters — ours, opt-in.
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    raw = (spark.read.format("lstore_log")
-           .option("path", seg_dir).option("pushdown", "true").load()
+    raw = (spark.read.format("lstore_log").option("path", seg_dir).load()
            .filter((F.col("offset") >= 5000) & (F.col("offset") < 9000)))
     return segments_as_events(raw).select("event_id", "user_id", "event_type")
 
@@ -919,8 +909,8 @@ def q_scan_log_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     store: the full event log lands as segments hash-clustered on the
     blob key (each segment holds the 1-2 event types that hash to it;
     the sink's sidecar index records each segment's key set), and the
-    ``key = 'purchase'`` read uses the pushdown reader so segments whose
-    index provably lacks the key are pruned at PLANNING time —
+    ``key = 'purchase'`` read prunes segments whose index provably
+    lacks the key at PLANNING time —
     tests/test_lstore_sink.py asserts the plan-time file count drops.
     The oracle proves the skipped files contained nothing the query
     needed.  At 100 TB this is lstore's per-block blob bloom made
@@ -931,9 +921,7 @@ def q_scan_log_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     shaped = events_as_segment_rows(ev).repartition(8, F.col("blobs")[0])
     write_segments(shaped, seg_dir)
     register(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    raw = (spark.read.format("lstore_log")
-           .option("path", seg_dir).option("pushdown", "true").load()
+    raw = (spark.read.format("lstore_log").option("path", seg_dir).load()
            .filter(F.col("key") == "purchase"))
     return raw.select(
         F.col("ints")[0].alias("event_id"),
@@ -1066,7 +1054,7 @@ def snapshot_store(seg_dir: str) -> int:
         # them — republishing its pre-race list under a HIGHER version
         # would make the newest snapshot silently pin FEWER committed
         # segments than an older one (review r10).
-        segs = sorted(f for f in os.listdir(seg_dir) if f.endswith(".seg"))
+        segs = live_segments(seg_dir)
         versions = [int(f[len("manifest-v"):-len(".json")])
                     for f in os.listdir(seg_dir)
                     if f.startswith("manifest-v") and f.endswith(".json")]

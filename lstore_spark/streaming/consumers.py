@@ -40,8 +40,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import fresh_scratch_dir, load_table
 from ..registry import query
-from ..sources.lstore_log import (events_as_segment_rows, register,
-                                  segment_stats, write_segments)
+from ..sources.lstore_log import (events_as_segment_rows, live_segments,
+                                  register, segment_stats, write_segments)
 
 CURSOR_DIR = "_cursors"
 _GROUP_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9_.-]{0,63}$")
@@ -148,7 +148,7 @@ def tail_offset(store: str) -> int:
 
     tail = -1
     try:
-        names = [n for n in os.listdir(store) if n.endswith(".seg")]
+        names = live_segments(store)
     except OSError:
         return -1
     for n in names:
@@ -164,16 +164,13 @@ def tail_offset(store: str) -> int:
 def poll(spark: SparkSession, store: str, group: str,
          max_records: int | None = None) -> DataFrame:
     """Records past the group's cursor, in segment schema (offset, ints,
-    blobs, key).  Reads through the pushdown reader so fully-consumed
-    sealed segments are pruned at planning time.  ``max_records`` bounds
-    the batch to the LOWEST unconsumed offsets (a TakeOrdered — the
-    broker's max-poll-records): consume, process, then
-    ``commit_offset(store, group, batch max offset)``."""
+    blobs, key).  Fully-consumed sealed segments are pruned at planning
+    time.  ``max_records`` bounds the batch to the LOWEST unconsumed
+    offsets (a TakeOrdered — the broker's max-poll-records): consume,
+    process, then ``commit_offset(store, group, batch max offset)``."""
     cur = committed_offset(store, group)
     register(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    raw = (spark.read.format("lstore_log")
-           .option("path", store).option("pushdown", "true").load()
+    raw = (spark.read.format("lstore_log").option("path", store).load()
            .filter(F.col("offset") > cur))
     if max_records is not None:
         raw = raw.orderBy("offset").limit(max_records)
@@ -401,7 +398,7 @@ def auto_rebalance(store: str, group: str,
     # rebalance — the publish path passes tolerate_unsealed so fencing
     # proceeds even with a writer mid-seal (review r13); explicit
     # rebalance() calls keep the loud error.
-    raw = {f for f in os.listdir(store) if f.endswith(".seg")}
+    raw = set(live_segments(store))
     if live == current and raw == set(assignment):
         return gen, assignment
     sealed = {f for f in raw
@@ -501,11 +498,10 @@ def assigned_frontier(store: str, group: str) -> int:
     group.  Pure metadata (one trailer seek per segment)."""
     seg_cur = committed_segment_offsets(store, group)
     stats = []
-    for f in os.listdir(store):
-        if f.endswith(".seg"):
-            s = segment_stats(os.path.join(store, f))
-            if s is not None:
-                stats.append((s[0], s[1], f))
+    for f in live_segments(store):
+        s = segment_stats(os.path.join(store, f))
+        if s is not None:
+            stats.append((s[0], s[1], f))
     frontier = -1
     for lo, hi, f in sorted(stats):
         cur = seg_cur.get(f, -1)
@@ -571,13 +567,11 @@ def poll_assigned(spark: SparkSession, store: str, group: str,
         # an empty relation in the store's schema
         return (spark.read.format("lstore_log").option("path", store)
                 .load().filter(F.lit(False)))
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
 
     def _read(segs):
         return (spark.read.format("lstore_log")
                 .option("path", store)
-                .option("segments", ",".join(segs))
-                .option("pushdown", "true").load())
+                .option("segments", ",".join(segs)).load())
 
     branches = [_read(whole)] if whole else []
     # one branch per in-flight segment (there is at most one per
@@ -634,16 +628,15 @@ def assign_segments(store: str, n_consumers: int,
     if n_consumers <= 0:
         raise ValueError(f"n_consumers must be positive: {n_consumers}")
     stats = []
-    for f in sorted(os.listdir(store)):
-        if f.endswith(".seg"):
-            s = segment_stats(os.path.join(store, f))
-            if s is None:
-                if skip_unsealed:
-                    continue  # liveness path: not assignable YET
-                raise ValueError(
-                    f"assign_segments: unsealed segment {f} has no "
-                    "trailer — seal (or compact) before assigning")
-            stats.append((s[0], f))
+    for f in live_segments(store):
+        s = segment_stats(os.path.join(store, f))
+        if s is None:
+            if skip_unsealed:
+                continue  # liveness path: not assignable YET
+            raise ValueError(
+                f"assign_segments: unsealed segment {f} has no "
+                "trailer — seal (or compact) before assigning")
+        stats.append((s[0], f))
     return {f: i % n_consumers for i, (_lo, f) in enumerate(sorted(stats))}
 
 
@@ -675,7 +668,7 @@ def _fixed_width_store(spark: SparkSession, sf_dir: str, tag: str) -> str:
         # existence check silently dropped ALL segments on naming
         # drift — the exact class q_stream_follow's publish() made
         # loud in r12)
-        staged = sorted(f for f in os.listdir(sdir) if f.endswith(".seg"))
+        staged = live_segments(sdir)
         if not staged:
             if n > 0:
                 raise RuntimeError(

@@ -478,8 +478,8 @@ def q_stream_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full slice, which is exactly what the oracle checks."""
     import time
 
-    from ..sources.lstore_log import (events_as_segment_rows, register,
-                                      write_segments)
+    from ..sources.lstore_log import (events_as_segment_rows, live_segments,
+                                      register, write_segments)
 
     ev = (load_table(spark, sf_dir, "events")
           .filter(F.col("event_id") < 900)
@@ -509,8 +509,7 @@ def q_stream_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
         # "slice was empty" (legitimate skip) from "naming drifted /
         # write failed" — the silent no-op turned either into a 120 s
         # gate-loop stall with an empty sink (review r12)
-        staged = [f for f in os.listdir(os.path.join(root, f"stage{i}"))
-                  if f.endswith(".seg")]
+        staged = live_segments(os.path.join(root, f"stage{i}"))
         lo, hi = ((0, 300), (300, 600), (600, 900))[i]
         n_slice = (cum[1] if i == 1 else cum[0]) if i < 2 else None
         expected_nonempty = (

@@ -38,9 +38,11 @@ SF_DIR = os.environ.get("SF100X_DIR", "/tmp/sf100x")
 def main() -> None:
     from lstore_spark.catalog import fresh_scratch_dir, load_table
     from lstore_spark.session import get_spark
-    from lstore_spark.sources.lstore_log import (LstoreLogPushdownReader,
+    from lstore_spark.sources.lstore_log import (LstoreLogReader,
                                                  events_as_segment_rows,
-                                                 register, write_segments)
+                                                 live_segments, register,
+                                                 segment_stats,
+                                                 write_segments)
     from lstore_spark.streaming import consumers as cg
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else SF_DIR
@@ -68,18 +70,16 @@ def main() -> None:
     med = ev.approxQuantile("event_id", [0.5], 0.001)[0]
     cg.commit_offset(store, "mid", int(med))
     last_lo = sorted(
-        s for s in (__import__("lstore_spark.sources.lstore_log",
-                               fromlist=["segment_stats"])
-                    .segment_stats(os.path.join(store, f))
-                    for f in os.listdir(store) if f.endswith(".seg"))
+        s for s in (segment_stats(os.path.join(store, f))
+                    for f in live_segments(store))
         if s is not None)[-1][0]
     cg.commit_offset(store, "hot", int(last_lo))
 
-    # plan-time pruning: partitions the pushdown reader keeps per cursor
+    # plan-time pruning: partitions the reader keeps per cursor
     from pyspark.sql.datasource import GreaterThan
     planning = {}
     for g in ("cold", "mid", "hot"):
-        r = LstoreLogPushdownReader({"path": store})
+        r = LstoreLogReader({"path": store})
         r.pushFilters([GreaterThan(("offset",), cg.committed_offset(store, g))])
         planning[g] = len(r.partitions())
 
@@ -100,7 +100,6 @@ def main() -> None:
     # many assigned segments each poll actually schedules) plus walls —
     # per-segment cursors must keep a caught-up instance's poll
     # proportional to ITS unconsumed range, untouched by siblings.
-    from lstore_spark.sources.lstore_log import segment_stats
     gen, asg = cg.rebalance(store, "fleet", 4)
     mine0 = sorted(s for s, c in asg.items() if c == 0)
     half = mine0[: len(mine0) // 2]

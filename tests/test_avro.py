@@ -209,3 +209,24 @@ def test_tz_aware_timestamp_encodes_utc_micros(spark, tmp_path):
             [tuple(r) for r in df.collect()]
     finally:
         spark.conf.set(key, old)
+
+
+def test_avro_reads_under_the_lstore_log_pushdown_conf(spark, tmp_path):
+    """``lstore_log.register`` turns Python filter pushdown on for the
+    whole session.  The Avro source's reader has no ``pushFilters``, so
+    it must still plan and read exactly, with and without a filter."""
+    from lstore_spark.sources import avro_io, lstore_log
+
+    d = tmp_path / "avro"
+    d.mkdir()
+    write_avro_file(str(d / "a.avro"), SCHEMA, iter(ROWS[:2]), codec="null")
+    write_avro_file(str(d / "b.avro"), SCHEMA, iter(ROWS[2:]), codec="null")
+    lstore_log.register(spark)
+    avro_io.register(spark)
+    assert spark.conf.get("spark.sql.python.filterPushdown.enabled") == "true"
+    df = spark.read.format("lstore_avro").option("path", str(d)).load()
+    assert sorted(r.id for r in df.select("id").collect()) \
+        == sorted(r[0] for r in ROWS)
+    assert sorted(r.s for r in df.filter(F.col("id") > 1)
+                  .select("s").collect()) \
+        == sorted(r[3] for r in ROWS if r[0] > 1)

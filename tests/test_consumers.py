@@ -86,11 +86,11 @@ def test_caught_up_consumer_prunes_sealed_segments(store):
     trailer stats."""
     from pyspark.sql.datasource import GreaterThan
 
-    from lstore_spark.sources.lstore_log import LstoreLogPushdownReader
+    from lstore_spark.sources.lstore_log import LstoreLogReader
 
     cg.ensure_group(store, "g3")
     cg.commit_offset(store, "g3", 299)
-    r = LstoreLogPushdownReader({"path": store})
+    r = LstoreLogReader({"path": store})
     r.pushFilters([GreaterThan(("offset",), cg.committed_offset(store, "g3"))])
     assert len(r.partitions()) == 1, "caught-up poll must touch only the tail"
 

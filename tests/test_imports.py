@@ -142,3 +142,32 @@ def test_write_segments_runs_from_any_session(tmp_path):
         cwd=str(tmp_path), env=env, timeout=300)
     assert out.splitlines()[-1] == str(
         [(i, [i, 2 * i], [b"k"], "k") for i in range(5)])
+
+
+def test_register_prunes_a_plain_read_in_a_bare_session(tmp_path):
+    """``register`` owns the Python filter-pushdown conf: in a bare
+    session that never set it, a plain filtered read over 4 sealed
+    segments plans only the 2 whose offset range can match, and still
+    returns exactly the matching rows."""
+    seg = str(tmp_path / "segs")
+    os.makedirs(seg)
+    out = _fresh(
+        f"import sys\nsys.path.insert(0, {ROOT!r})\n"
+        "from pyspark.sql import SparkSession, functions as F\n"
+        "spark = (SparkSession.builder.master('local[2]')\n"
+        "         .config('spark.driver.memory', '1g')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "from lstore_spark.sources.lstore_log import register, write_segment\n"
+        "for i in range(4):\n"
+        f"    write_segment({seg!r} + f'/{{i:05d}}.seg',\n"
+        "                  [(o, [o], [b'k']) for o in range(i * 10, i * 10 + 10)])\n"
+        "register(spark)\n"
+        "df = (spark.read.format('lstore_log').option('path', "
+        f"{seg!r}).load()\n"
+        "      .filter(F.col('offset') >= 25))\n"
+        "print(df.rdd.getNumPartitions(),\n"
+        "      sorted(r.offset for r in df.select('offset').collect()))\n"
+        "spark.stop()\n",
+        cwd=str(tmp_path), timeout=300)
+    assert out.splitlines()[-1] == f"2 {list(range(25, 40))}"

@@ -163,7 +163,7 @@ def test_segment_stats_and_file_skipping(spark, tmp_path):
     (all filters are returned to Spark unhandled)."""
     from pyspark.sql.datasource import GreaterThanOrEqual
 
-    from lstore_spark.sources.lstore_log import (LstoreLogPushdownReader,
+    from lstore_spark.sources.lstore_log import (LstoreLogReader,
                                                  register, segment_stats,
                                                  write_segment)
 
@@ -174,38 +174,28 @@ def test_segment_stats_and_file_skipping(spark, tmp_path):
                       [(o, [o], [b""]) for o in range(i * 100, (i + 1) * 100)])
     assert segment_stats(str(seg / "00002.seg")) == (200, 299)
 
-    r = LstoreLogPushdownReader({"path": str(seg)})
+    r = LstoreLogReader({"path": str(seg)})
     r.pushFilters([GreaterThanOrEqual(("offset",), 250)])
     assert len(r.partitions()) == 2, "files 0 and 1 must be pruned"
 
     # end-to-end through Spark: pushdown active, results still exact
     register(spark)
-    key = "spark.sql.python.filterPushdown.enabled"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        df = (spark.read.format("lstore_log")
-              .option("path", str(seg)).option("pushdown", "true").load()
-              .filter(F.col("offset") >= 250))
-        assert sorted(row.offset for row in df.select("offset").collect()) \
-            == list(range(250, 400))
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    df = (spark.read.format("lstore_log").option("path", str(seg)).load()
+          .filter(F.col("offset") >= 250))
+    assert sorted(row.offset for row in df.select("offset").collect()) \
+        == list(range(250, 400))
 
 
 def test_scan_log_from_offset_prunes_segments(spark, sf_dir):
     """The q_scan_log_from_offset shape must actually skip files: 8
     range-partitioned sealed segments, an offset window covering ~40% of
-    the range, and the pushdown reader planning strictly fewer than 8
+    the range, and the reader planning strictly fewer than 8
     partitions while the result matches the raw table exactly."""
     from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
 
     from lstore_spark.catalog import load_table
     from lstore_spark.registry import QUERIES
-    from lstore_spark.sources.lstore_log import LstoreLogPushdownReader
+    from lstore_spark.sources.lstore_log import LstoreLogReader
 
     got = QUERIES["q_scan_log_from_offset"](spark, sf_dir)
     want = (load_table(spark, sf_dir, "events")
@@ -221,7 +211,7 @@ def test_scan_log_from_offset_prunes_segments(spark, sf_dir):
 
     from lstore_spark.catalog import scratch_dir
     store = scratch_dir("logscan", sf_dir)[0] + f"_p{os.getpid()}"
-    r = LstoreLogPushdownReader({"path": store})
+    r = LstoreLogReader({"path": store})
     n_all = len(r.partitions())
     r.pushFilters([GreaterThanOrEqual(("offset",), 5000),
                    LessThan(("offset",), 9000)])
@@ -240,7 +230,7 @@ def test_blob_key_sidecar_skips_segments(spark, tmp_path):
 
     from pyspark.sql.datasource import EqualTo
 
-    from lstore_spark.sources.lstore_log import (LstoreLogPushdownReader,
+    from lstore_spark.sources.lstore_log import (LstoreLogReader,
                                                  segment_keys, write_segment)
 
     seg = tmp_path / "segs"
@@ -255,30 +245,18 @@ def test_blob_key_sidecar_skips_segments(spark, tmp_path):
     os.remove(str(seg / "99999.idx"))
 
     assert segment_keys(str(seg / "00002.seg")) == ["purchase"]
-    r = LstoreLogPushdownReader({"path": str(seg)})
+    r = LstoreLogReader({"path": str(seg)})
     r.pushFilters([EqualTo(("key",), "purchase")])
     kept = [os.path.basename(p.value) for p in r.partitions()]
     assert kept == ["00002.seg", "99999.seg"], kept
 
-    # end-to-end: pruned plan, exact rows — save/restore the session
-    # conf (session-scoped fixture: an unrestored set leaks into every
-    # later test, review r11)
+    # end-to-end: pruned plan, exact rows
     from lstore_spark.sources.lstore_log import register
     register(spark)
-    key = "spark.sql.python.filterPushdown.enabled"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        df = (spark.read.format("lstore_log")
-              .option("path", str(seg)).option("pushdown", "true").load()
-              .filter(F.col("key") == "purchase"))
-        assert sorted(row.offset for row in df.select("offset").collect()) \
-            == list(range(200, 250))
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    df = (spark.read.format("lstore_log").option("path", str(seg)).load()
+          .filter(F.col("key") == "purchase"))
+    assert sorted(row.offset for row in df.select("offset").collect()) \
+        == list(range(200, 250))
 
 
 def test_scan_log_by_type_prunes_segments(spark, sf_dir):
@@ -290,7 +268,7 @@ def test_scan_log_by_type_prunes_segments(spark, sf_dir):
 
     from lstore_spark.catalog import load_table
     from lstore_spark.registry import QUERIES
-    from lstore_spark.sources.lstore_log import LstoreLogPushdownReader
+    from lstore_spark.sources.lstore_log import LstoreLogReader
 
     got = QUERIES["q_scan_log_by_type"](spark, sf_dir)
     want = (load_table(spark, sf_dir, "events")
@@ -300,7 +278,7 @@ def test_scan_log_by_type_prunes_segments(spark, sf_dir):
 
     from lstore_spark.catalog import scratch_dir
     store = scratch_dir("logbytype", sf_dir)[0] + f"_p{os.getpid()}"
-    r = LstoreLogPushdownReader({"path": store})
+    r = LstoreLogReader({"path": store})
     n_all = len(r.partitions())
     r.pushFilters([EqualTo(("key",), "purchase")])
     n_pruned = len(r.partitions())
@@ -316,7 +294,7 @@ def test_pushdown_in_filters_prune(spark, tmp_path):
 
     from pyspark.sql.datasource import In
 
-    from lstore_spark.sources.lstore_log import (LstoreLogPushdownReader,
+    from lstore_spark.sources.lstore_log import (LstoreLogReader,
                                                  write_segment)
 
     seg = tmp_path / "segs"
@@ -325,34 +303,23 @@ def test_pushdown_in_filters_prune(spark, tmp_path):
         write_segment(str(seg / f"{i:05d}.seg"),
                       [(i * 100 + j, [j], [t.encode()]) for j in range(50)])
 
-    r = LstoreLogPushdownReader({"path": str(seg)})
+    r = LstoreLogReader({"path": str(seg)})
     r.pushFilters([In(("key",), ("purchase", "error"))])
     kept = sorted(os.path.basename(p.value) for p in r.partitions())
     assert kept == ["00002.seg", "00003.seg"], kept
 
-    r2 = LstoreLogPushdownReader({"path": str(seg)})
+    r2 = LstoreLogReader({"path": str(seg)})
     r2.pushFilters([In(("offset",), (120, 130, 310))])
     kept2 = sorted(os.path.basename(p.value) for p in r2.partitions())
     assert kept2 == ["00001.seg", "00002.seg", "00003.seg"], kept2
 
-    # end-to-end: IN through Spark, exact rows back (conf save/restore:
-    # session-scoped fixture, review r11)
+    # end-to-end: IN through Spark, exact rows back
     from lstore_spark.sources.lstore_log import register
     register(spark)
-    key = "spark.sql.python.filterPushdown.enabled"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        df = (spark.read.format("lstore_log")
-              .option("path", str(seg)).option("pushdown", "true").load()
-              .filter(F.col("key").isin("purchase", "error")))
-        assert sorted(row.offset for row in df.select("offset").collect()) \
-            == list(range(200, 250)) + list(range(300, 350))
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    df = (spark.read.format("lstore_log").option("path", str(seg)).load()
+          .filter(F.col("key").isin("purchase", "error")))
+    assert sorted(row.offset for row in df.select("offset").collect()) \
+        == list(range(200, 250)) + list(range(300, 350))
 
 
 def test_torn_segment_fails_loudly_or_reads_as_unsealed(tmp_path):
@@ -484,7 +451,7 @@ def test_segment_read_memory_is_window_bounded(tmp_path):
 def test_republish_never_pairs_new_index_with_old_segment(tmp_path):
     """ADVICE r5: republishing a segment path with DIFFERENT content must
     never leave an index describing data the segment beside it doesn't
-    hold (the pushdown reader would silently prune live rows).  The
+    hold (the reader would silently prune live rows).  The
     writer drops the stale sidecar before touching segment bytes and
     publishes the new sidecar only after, so at every observable point
     the index is either absent (pruning disabled — sound) or matches."""
@@ -492,7 +459,7 @@ def test_republish_never_pairs_new_index_with_old_segment(tmp_path):
 
     from pyspark.sql.datasource import EqualTo
 
-    from lstore_spark.sources.lstore_log import (LstoreLogPushdownReader,
+    from lstore_spark.sources.lstore_log import (LstoreLogReader,
                                                  _idx_path,
                                                  read_segment_file,
                                                  segment_keys,
@@ -512,12 +479,12 @@ def test_republish_never_pairs_new_index_with_old_segment(tmp_path):
     assert segment_keys(p) is None  # absence = scan, never a wrong prune
     # republish from a generator, which can be consumed only once: the
     # trailer and the sidecar must come from the pass that frames the
-    # rows, or the pushdown reader prunes this live segment for
+    # rows, or the reader prunes this live segment for
     # key = 'alpha' and returns no rows
     write_segment(p, ((i, [i], [b"alpha"]) for i in range(5)))
     assert segment_stats(p) == (0, 4)
     assert segment_keys(p) == ["alpha"]
-    reader = LstoreLogPushdownReader({"path": str(tmp_path)})
+    reader = LstoreLogReader({"path": str(tmp_path)})
     reader.pushFilters([EqualTo(("key",), "alpha")])
     assert [part.value for part in reader.partitions()] == [p]
 
