@@ -11,7 +11,9 @@ profile and the registry, not the key modules.  ``QUERIES`` and
 ``ORACLE`` import every key module on their first read
 (``registry.load_all``), so a Python worker that unpickles one package
 object — a UDF, a data source, the streaming-source runner — imports
-only the module it needs.
+only the module it needs.  It also installs
+``session.cache_zip_directories``, so such a worker stops re-reading
+pyspark's zip directories on every later call.
 """
 
 from __future__ import annotations
@@ -19,7 +21,9 @@ from __future__ import annotations
 from . import registry
 from .catalog import SCHEMAS, load_table, load_tables, register_views
 from .registry import ORACLE, QUERIES
-from .session import get_spark, tune
+from .session import cache_zip_directories, get_spark, tune
+
+cache_zip_directories()
 
 __all__ = [
     "SCHEMAS", "QUERIES", "ORACLE",

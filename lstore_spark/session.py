@@ -17,9 +17,12 @@ module's job is the *cluster-scale* config profile:
 
 from __future__ import annotations
 
+import hashlib
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -69,23 +72,36 @@ _STOCK_SHUFFLE = "200"
 
 
 def _package_zip() -> str:
+    """The package as a zip in the temp dir, named by a hash of its
+    sources: the path is host-wide, so a second checkout shipping at the
+    same time gets its own zip instead of replacing this one under a
+    running application.  Built under a unique name and published by
+    atomic rename, so a half-written zip is never visible; an existing
+    zip under the name already holds these sources."""
     pkg_root = os.path.dirname(os.path.abspath(__file__))
     repo = os.path.dirname(pkg_root)
-    zpath = os.path.join(tempfile.gettempdir(), "lstore_spark_pkg.zip")
-    # build under a unique name, publish by atomic rename: concurrent
-    # sessions (driver sweep + bench) may ship at once, and a
-    # half-written zip must never be visible under the shared path —
-    # same tmp+rename discipline as the segment sink.
+    files = []
+    for dirpath, _dirnames, filenames in os.walk(pkg_root):
+        if "__pycache__" in dirpath:
+            continue
+        for fn in filenames:
+            if fn.endswith(".py"):
+                full = os.path.join(dirpath, fn)
+                with open(full, "rb") as fh:
+                    files.append((os.path.relpath(full, repo), fh.read()))
+    files.sort()
+    digest = hashlib.sha256()
+    for rel, data in files:
+        digest.update(b"%s\0%d\0%s" % (rel.encode(), len(data), data))
+    zpath = os.path.join(tempfile.gettempdir(),
+                         f"lstore_spark_pkg-{digest.hexdigest()[:16]}.zip")
+    if os.path.exists(zpath):
+        return zpath
     fd, tmp = tempfile.mkstemp(suffix=".zip", dir=tempfile.gettempdir())
     os.close(fd)
     with zipfile.ZipFile(tmp, "w") as z:
-        for dirpath, _dirnames, filenames in os.walk(pkg_root):
-            if "__pycache__" in dirpath:
-                continue
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    z.write(full, os.path.relpath(full, repo))
+        for rel, data in files:
+            z.writestr(rel, data)
     os.replace(tmp, zpath)
     return zpath
 
@@ -171,3 +187,49 @@ def get_spark(app_name: str = "lstore-spark", cpus: str | int | None = None,
         except Exception:
             pass
     return spark
+
+
+def cache_zip_directories() -> None:
+    """Make ``importlib.invalidate_caches()`` re-read a zip archive's
+    directory only when the archive changed.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` before every
+    planner call and every task (``worker_util.setup_spark_files``).
+    Before Python 3.13, ``zipimporter.invalidate_caches`` eagerly re-reads
+    the whole central directory of its archive, once per zipimporter: a
+    worker holds 16 of them over ``pyspark.zip``, the py4j zip and the
+    spark-core jar, and re-reading them cost 117–224 ms per call, about
+    the whole round trip of a 1-row lstore_log planner call.  Here an
+    archive is re-read only when its ``(st_mtime_ns, st_size, st_ino)``
+    differs from the last read by any zipimporter, so a replaced or
+    rewritten archive is still seen; otherwise that read's directory is
+    reused.  If ``stat`` fails, or the archive did not read, the original
+    method runs.  Installing twice is a no-op; on Python 3.13+, which
+    reads lazily, so is installing once.
+
+    The package's ``__init__`` installs it, so every Python worker that
+    has unpickled package code skips the re-read from its next call on."""
+    original = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 13) or hasattr(original, "_read_by_identity"):
+        return
+    last_read: dict = {}  # archive -> (identity, directory)
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return original(self)
+        identity = (st.st_mtime_ns, st.st_size, st.st_ino)
+        seen = last_read.get(self.archive)
+        if seen is not None and seen[0] == identity:
+            self._files = seen[1]
+            zipimport._zip_directory_cache[self.archive] = seen[1]
+            return
+        # stat before the read: an archive replaced in between is read
+        # again next time, never cached under its new identity
+        original(self)
+        if zipimport._zip_directory_cache.get(self.archive) is self._files:
+            last_read[self.archive] = (identity, self._files)
+
+    invalidate_caches._read_by_identity = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches

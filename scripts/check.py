@@ -1,11 +1,15 @@
 """Dev loop: run every registered query against the DuckDB oracle at
-sf0.01 in one Spark session; print a pass/fail table.
+sf0.01 (or $LSTORE_SPARK_TEST_SF) in one Spark session; print a
+pass/fail table and record each result in scripts/selfcheck_ledger.json
+under the fixture's label.  The first ERR prints its traceback;
+CHECK_TRACE=1 prints every one.
 
 Usage: python scripts/check.py [key-substring ...]
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
@@ -22,6 +26,20 @@ from tests.oracle_check import compare, duck_connect  # noqa: E402
 from tests.oracle_check import default_sf_dir  # noqa: E402
 
 SF_DIR = default_sf_dir()
+
+
+def fixture_label(sf_dir: str) -> str:
+    """The ledger's name for a fixture: the label a replicated fixture
+    carries in its ``fixture.json`` (``scripts/make_sfbig.py`` writes
+    e.g. ``sf0.1x10``), else the fixture directory's basename."""
+    try:
+        with open(os.path.join(sf_dir, "fixture.json")) as fh:
+            return json.load(fh)["label"]
+    except (OSError, ValueError, KeyError):
+        return os.path.basename(os.path.normpath(sf_dir))
+
+
+FIXTURE = fixture_label(SF_DIR)
 
 # Keys whose OUTPUT (not plan) is quadratic in input size: at the ~sf1
 # sweep the theta join alone emits 21M pairs — far past what the
@@ -140,23 +158,23 @@ _LEDGER_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
 
 
 def _ledger_record(key: str, ok: bool) -> None:
-    """Persist per-key self-check evidence (key → latest round + grade)
-    so EVIDENCE.md can show local freshness alongside driver rounds
-    (VERDICT r11 #8).  Best-effort: a ledger I/O failure never fails
-    the check itself."""
-    import json as _json
-
+    """Persist per-key self-check evidence (fixture label → key → latest
+    round + grade) so EVIDENCE.md can show local freshness alongside
+    driver rounds (VERDICT r11 #8); runs on different fixtures keep
+    separate records.  Best-effort: a ledger I/O failure never fails the
+    check itself."""
     try:
         try:
             with open(_LEDGER_PATH) as fh:
-                led = _json.load(fh)
+                led = json.load(fh)
         except (OSError, ValueError):
             led = {}
-        led[key] = {"round": _current_round(), "ok": bool(ok),
-                    "ts": int(time.time())}
+        led.setdefault(FIXTURE, {})[key] = {
+            "round": _current_round(), "ok": bool(ok),
+            "ts": int(time.time())}
         tmp = f"{_LEDGER_PATH}.tmp{os.getpid()}"
         with open(tmp, "w") as fh:
-            _json.dump(led, fh, indent=0, sort_keys=True)
+            json.dump(led, fh, indent=0, sort_keys=True)
         os.replace(tmp, _LEDGER_PATH)
     except OSError:
         pass
@@ -177,6 +195,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connect(SF_DIR)
     n_ok = n_fail = 0
+    traced = False
     failures: list[str] = []
     for key in keys:
         t0 = time.time()
@@ -199,8 +218,9 @@ def main() -> int:
             status = "ERR "
             msg = (str(e).splitlines() or ["<no message>"])[0]
             extra = f"{type(e).__name__}: {msg[:160]}"
-            if os.environ.get("CHECK_TRACE"):
+            if os.environ.get("CHECK_TRACE") or not traced:
                 traceback.print_exc()
+                traced = True
         dt = time.time() - t0
         line = f"{status} {key:34s} {dt:6.1f}s  {extra[:220]}"
         print(line, flush=True)

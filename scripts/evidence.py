@@ -6,7 +6,8 @@ glance, not derived by hand from a dozen CORRECTNESS JSONs).
 Sources:
 - CORRECTNESS_r*.json  — driver sweeps (latest round + grade per key)
 - scripts/selfcheck_ledger.json — local scripts/check.py runs (latest
-  round + grade per key; written automatically by every check run)
+  round + grade per fixture and key; written automatically by every
+  check run)
 
 Usage: python scripts/evidence.py   →  rewrites EVIDENCE.md
 """
@@ -58,12 +59,23 @@ def driver_evidence() -> dict[str, dict]:
 
 
 def self_evidence() -> dict[str, dict]:
+    """key → fixture label → latest local check record."""
     try:
         with open(os.path.join(ROOT, "scripts",
                                "selfcheck_ledger.json")) as fh:
-            return json.load(fh)
+            ledger = json.load(fh)
     except (OSError, ValueError):
         return {}
+    out: dict[str, dict] = {}
+    for fixture, records in ledger.items():
+        for k, rec in records.items():
+            out.setdefault(k, {})[fixture] = rec
+    return out
+
+
+def _fixture_grades(records: dict[str, dict]) -> str:
+    return ", ".join(f"{fx} {'pass' if rec['ok'] else 'FAIL'}"
+                     for fx, rec in sorted(records.items()))
 
 
 def main() -> None:
@@ -75,9 +87,10 @@ def main() -> None:
         "Generated by `python scripts/evidence.py` (do not edit).  For",
         "each registered key: the latest DRIVER sweep that visited it",
         "(round + grade from `CORRECTNESS_r*.json`) and the latest LOCAL",
-        "`scripts/check.py` verification (round + grade from",
+        "`scripts/check.py` verification per fixture (round + grade from",
         "`scripts/selfcheck_ledger.json`, which every check run appends",
-        "to).  'rows-only' keys are approximate/engine-hash-specific by",
+        "to; `unrecorded` holds runs from before the ledger named the",
+        "fixture).  'rows-only' keys are approximate/engine-hash-specific by",
         "design and carry pytest floors + hash-green portable twins —",
         "see SURVEY.md §2.10.",
         "",
@@ -94,18 +107,19 @@ def main() -> None:
     lines += [
         "",
         "| key | oracle | driver round | driver grade | self-check round |"
-        " self-check grade |",
+        " self-check grade by fixture |",
         "| --- | --- | --- | --- | --- | --- |",
     ]
     for k in sorted(QUERIES):
         d = drv.get(k)
         s = loc.get(k)
+        s_round = max(r["round"] for r in s.values()) if s else None
         lines.append(
             f"| {k} | {'sql' if k in ORACLE else 'rows-only'} "
             f"| {'r' + str(d['round']) if d else '—'} "
             f"| {d['grade'] if d else 'never'} "
-            f"| {'r' + str(s['round']) if s else '—'} "
-            f"| {('pass' if s['ok'] else 'FAIL') if s else 'never'} |")
+            f"| {'r' + str(s_round) if s else '—'} "
+            f"| {_fixture_grades(s) if s else 'never'} |")
     with open(os.path.join(ROOT, "EVIDENCE.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"EVIDENCE.md: {len(QUERIES)} keys, "

@@ -10,6 +10,7 @@ determinism discipline must hold an order of magnitude past the bench SF.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -78,6 +79,9 @@ def main() -> None:
             _rewrite_events_ns(f"{DST}/{t}.parquet")
         n = con.execute(f"SELECT COUNT(*) FROM '{DST}/{t}.parquet'").fetchone()[0]
         print(t, "->", n, "rows")
+    # scripts/check.py records its results under this label
+    with open(f"{DST}/fixture.json", "w") as fh:
+        json.dump({"label": f"{os.path.basename(SRC)}x{K}"}, fh)
 
 
 if __name__ == "__main__":

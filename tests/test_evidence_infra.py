@@ -98,3 +98,39 @@ def test_get_spark_honors_live_session_width(spark):
         assert got2.conf.get(key) == "11"
     finally:
         spark.conf.set(key, old)
+
+
+def test_selfcheck_ledger_keeps_each_fixtures_record(tmp_path, monkeypatch):
+    """scripts/check.py records a key's result under the fixture it ran
+    on: an sf0.01 run and a 10x run of the same key both survive, and
+    scripts/evidence.py reads both back."""
+    import sys
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    import scripts.check as chk
+    import scripts.evidence as ev
+
+    big = tmp_path / "sfbig"
+    big.mkdir()
+    (big / "fixture.json").write_text(json.dumps({"label": "sf0.1x10"}))
+    assert chk.fixture_label(str(big)) == "sf0.1x10"
+    assert chk.fixture_label("/data/sf0.01/") == "sf0.01"
+
+    ledger = tmp_path / "scripts" / "selfcheck_ledger.json"
+    ledger.parent.mkdir()
+    monkeypatch.setattr(chk, "_LEDGER_PATH", str(ledger))
+    monkeypatch.setenv("LSTORE_ROUND", "7")
+    chk._current_round.cache_clear()
+    try:
+        monkeypatch.setattr(chk, "FIXTURE", "sf0.01")
+        chk._ledger_record("q_k", True)
+        monkeypatch.setattr(chk, "FIXTURE", "sf0.1x10")
+        chk._ledger_record("q_k", False)
+    finally:
+        chk._current_round.cache_clear()
+    got = json.loads(ledger.read_text())
+    assert {fx: {k: r["ok"] for k, r in recs.items()}
+            for fx, recs in got.items()} == {
+        "sf0.01": {"q_k": True}, "sf0.1x10": {"q_k": False}}
+    monkeypatch.setattr(ev, "ROOT", str(tmp_path))
+    assert {fx: r["ok"] for fx, r in ev.self_evidence()["q_k"].items()} == {
+        "sf0.01": True, "sf0.1x10": False}

@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+import zipfile
 
 import pytest
 
@@ -171,3 +173,94 @@ def test_register_prunes_a_plain_read_in_a_bare_session(tmp_path):
         "spark.stop()\n",
         cwd=str(tmp_path), timeout=300)
     assert out.splitlines()[-1] == f"2 {list(range(25, 40))}"
+
+
+def test_zip_directories_are_reread_only_when_the_archive_changes(tmp_path):
+    """After ``import lstore_spark``, ``importlib.invalidate_caches()``
+    over an unchanged zip on ``sys.path`` reads no zip directory, and a
+    replaced archive is still read: a module it adds imports."""
+    zpath = str(tmp_path / "mods.zip")
+    out = _fresh(
+        "import importlib, json, os, sys, zipfile, zipimport\n"
+        f"zpath = {zpath!r}\n"
+        "def build(path, names):\n"
+        "    with zipfile.ZipFile(path, 'w') as z:\n"
+        "        for n in names:\n"
+        "            z.writestr(n + '.py', f'NAME = {n!r}\\n')\n"
+        "build(zpath, ['zmod_a'])\n"
+        "sys.path.insert(0, zpath)\n"
+        "import zmod_a\n"
+        "reads = []\n"
+        "real = zipimport._read_directory\n"
+        "zipimport._read_directory = lambda a: reads.append(a) or real(a)\n"
+        f"sys.path.insert(1, {ROOT!r})\n"
+        "import lstore_spark\n"
+        "importlib.invalidate_caches()\n"
+        "first = len(reads)\n"
+        "for _ in range(5):\n"
+        "    importlib.invalidate_caches()\n"
+        "repeat = len(reads) - first\n"
+        "build(zpath + '.new', ['zmod_a', 'zmod_b'])\n"
+        "os.replace(zpath + '.new', zpath)\n"
+        "importlib.invalidate_caches()\n"
+        "import zmod_b\n"
+        "print(json.dumps([repeat, zmod_b.NAME]))\n",
+        cwd=str(tmp_path))
+    assert json.loads(out.splitlines()[-1]) == [0, "zmod_b"]
+
+
+def test_worker_rereads_no_zip_directory_after_importing_the_package(spark):
+    """In a Python worker that has imported the package, a second
+    ``importlib.invalidate_caches()`` (pyspark calls it before every task
+    and planner call) reads no zip directory, over pyspark's own zips."""
+    def probe(_):
+        import importlib
+        import sys
+        import zipimport
+
+        import lstore_spark  # noqa: F401
+
+        importlib.invalidate_caches()
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda a: reads.append(a) or real(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        zips = {f.archive for f in sys.path_importer_cache.values()
+                if isinstance(f, zipimport.zipimporter)}
+        yield len(reads), len(zips)
+
+    [(reads, zips)] = spark.sparkContext.parallelize([0], 1) \
+        .mapPartitions(probe).collect()
+    assert zips > 0, "the worker imports from no zip; the probe shows nothing"
+    assert reads == 0
+
+
+def test_package_zip_is_named_by_its_contents(tmp_path):
+    """The shipped zip's host-wide path names its sources: the same tree
+    maps to the same path, a tree with different sources to another."""
+    trees = []
+    for name in ("a", "b"):
+        tree = tmp_path / name
+        shutil.copytree(os.path.join(ROOT, "lstore_spark"),
+                        tree / "lstore_spark",
+                        ignore=shutil.ignore_patterns("__pycache__"))
+        trees.append(str(tree))
+    with open(os.path.join(trees[1], "lstore_spark", "registry.py"), "a") as fh:
+        fh.write("\n# another tree\n")
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+
+    def zip_of(tree: str) -> str:
+        return _fresh(
+            f"import sys\nsys.path.insert(0, {tree!r})\n"
+            "from lstore_spark import session\n"
+            "print(session._package_zip())\n",
+            cwd=tree, env=env).splitlines()[-1]
+
+    a, a_again, b = zip_of(trees[0]), zip_of(trees[0]), zip_of(trees[1])
+    assert a == a_again and a != b
+    assert os.path.dirname(a) == str(tmp_path)
+    with zipfile.ZipFile(b) as z:
+        assert z.read("lstore_spark/registry.py").endswith(b"# another tree\n")
