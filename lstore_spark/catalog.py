@@ -110,18 +110,18 @@ def path_of(sf_dir: str, name: str) -> str:
 def scratch_dir(tag: str, sf_dir: str,
                 key: str | None = None) -> tuple[str, bool]:
     """Deterministic per-fixture scratch dir for derived artifacts
-    (layout rewrites, ANN indexes): ``/tmp/lstore_spark_<tag>_<hash>``
-    keyed on the fixture path.  Returns (path, already_built) where
-    ``already_built`` is True only when a prior write committed a
-    ``_SUCCESS`` marker at the DIR ROOT (crashed half-writes rebuild).
-    Multi-table artifacts (the ANN indexes) write no root marker —
-    their builders ignore the flag and gate on their own subdir
-    markers (e.g. ``postings/_SUCCESS``); callers must pick ONE of the
-    two conventions per tag and not mix them.  ``tag`` MUST
-    carry a format version (e.g. ``dpp1``, ``annidx3``) — bump it when
-    the producing code changes so stale artifacts can never be served
-    (review r8: an untagged cache would keep passing against an old
-    layout after a code change, silently un-exercising the write
+    (layout rewrites, ANN indexes, the PQ codebook, the BPE vocab):
+    ``/tmp/lstore_spark_<tag>_<hash>`` keyed on the fixture path.
+    Returns (path, already_built).
+
+    One rule for every fixture-derived artifact: it is built only
+    through ``build_once``, whose atomic rename is the commit, so an
+    artifact is complete iff its directory exists — ``already_built``
+    is ``os.path.isdir(path)``, with no marker file to check.  ``tag``
+    MUST carry a format version (e.g. ``dpp2``, ``annidx4``): bump it
+    when the producing code changes, so stale artifacts can never be
+    served (review r8: an untagged cache would keep passing against an
+    old layout after a code change, silently un-exercising the write
     path).  The key also folds in a (name, size, mtime) fingerprint of
     the fixture's parquet entries, so a REGENERATED fixture at the same
     path gets a fresh scratch dir instead of being served artifacts
@@ -139,26 +139,44 @@ def scratch_dir(tag: str, sf_dir: str,
     # r11: the hot routing path stat-scanned the fixture dir twice)
     key = key or fixture_fingerprint(sf_dir)
     out = os.path.join(root, f"lstore_spark_{tag}_{key}")
-    return out, os.path.exists(os.path.join(out, "_SUCCESS"))
+    return out, os.path.isdir(out)
+
+
+def build_once(final: str, write) -> str:
+    """THE way a fixture-derived artifact is built and published;
+    returns ``final``.  If the directory ``final`` exists it is
+    complete (see ``scratch_dir``) and is returned as is.  Otherwise
+    ``write(tmp)`` fills an empty PID-suffixed staging dir
+    (``build_tmp_dir``) and ``publish_dir`` renames it to ``final`` —
+    the rename is the commit, so an artifact is complete iff its
+    directory exists.  If ``write`` raises, the staging dir is removed
+    and the error re-raised: a failed build leaves nothing behind.
+    Bump the artifact's tag when the producing code changes."""
+    import shutil
+
+    if os.path.isdir(final):
+        return final
+    tmp = build_tmp_dir(final)
+    os.makedirs(tmp)
+    try:
+        write(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    publish_dir(tmp, final)
+    return final
 
 
 def build_tmp_dir(final: str) -> str:
-    """PID-suffixed staging path for a directory artifact that will be
-    published with ``publish_dir`` — build the whole artifact here,
-    then rename.  Cleans any leftover staging dir from a crashed prior
-    run of this same PID slot, and reaps OTHER slots whose owner is
-    dead (review r12: '.build_p<pid>' matches no reaper pattern — the
-    '_p' adjacency the fresh_scratch_dir regex requires is broken by
-    '.build' — so a killed build leaked its fixture-sized staging dir
-    forever; same dead-or-recycled-PID rule as every other reaper)."""
-    import glob
+    """PID-suffixed staging path for ``build_once``.  Cleans any
+    leftover staging dir from a crashed prior run of this same PID
+    slot, and reaps OTHER slots whose owner is dead (review r12: a
+    killed build leaked its fixture-sized staging dir forever)."""
     import re
     import shutil
 
-    for stale in glob.glob(f"{glob.escape(final)}.build_p*"):
-        m = re.search(r"\.build_p(\d+)$", stale)
-        if m and _reapable(stale, int(m.group(1))):
-            shutil.rmtree(stale, ignore_errors=True)
+    _reap_dead_owners(os.path.dirname(final), re.compile(
+        rf"^{re.escape(os.path.basename(final))}\.build_p(\d+)$"))
     tmp = f"{final}.build_p{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     return tmp
@@ -175,8 +193,7 @@ def publish_dir(tmp: str, final: str) -> None:
     concurrent sessions (pytest while bench runs — the scenario
     ``fresh_scratch_dir``'s PID suffix exists for) would interleave
     ``mode("overwrite")`` deletes with each other's live writes
-    (review r10).  Same commit idea as ``pq_codebook``'s single-file
-    tmp+``os.replace``, lifted to multi-file artifacts.
+    (review r10).
 
     A failed rename only means 'lost the race' when the winner's
     artifact actually EXISTS at ``final`` — any other OSError (EXDEV
@@ -191,22 +208,6 @@ def publish_dir(tmp: str, final: str) -> None:
         if not os.path.isdir(final):
             raise
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def clear_incomplete_dir(final: str, marker: str = "_SUCCESS") -> None:
-    """Remove a shared artifact dir ONLY if it exists without its
-    completion marker — crashed half-write debris from the pre-r10
-    in-place protocol.  Never removes a marker-complete artifact: a
-    concurrent session may have published one between the caller's
-    gate check and this call, and deleting it would yank files out
-    from under the winner's lazily-evaluated readers (review r10
-    follow-up to publish_dir — the build branch must not hold an
-    unconditional rmtree)."""
-    import shutil
-
-    if (os.path.isdir(final)
-            and not os.path.exists(os.path.join(final, marker))):
-        shutil.rmtree(final, ignore_errors=True)
 
 
 def fixture_fingerprint(sf_dir: str) -> str:
@@ -273,17 +274,8 @@ def fresh_scratch_dir(tag: str, sf_dir: str) -> str:
     # the dir name, and fingerprint-scoped reaping would let old-
     # fingerprint dirs accumulate forever (review r10 — the same
     # unbounded-footprint class ADVICE r7 fixed, via fingerprint churn).
-    pat = re.compile(
-        rf"^lstore_spark_{re.escape(tag)}_[0-9a-f]{{10}}_p(\d+)$")
-    parent = os.path.dirname(base)
-    try:
-        for name in os.listdir(parent):
-            m = pat.match(name)
-            stale = os.path.join(parent, name)
-            if m and stale != out and _reapable(stale, int(m.group(1))):
-                shutil.rmtree(stale, ignore_errors=True)
-    except OSError:
-        pass
+    _reap_dead_owners(os.path.dirname(base), re.compile(
+        rf"^lstore_spark_{re.escape(tag)}_[0-9a-f]{{10}}_p(\d+)$"))
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
     return out
@@ -351,6 +343,24 @@ def _reapable(path: str, pid: int) -> bool:
     if start is not None:
         return start > mtime + _REAP_START_SLACK
     return False  # no /proc: a live PID is never reapable
+
+
+def _reap_dead_owners(parent: str, pattern) -> None:
+    """THE dead-owner reaper: remove every entry of ``parent`` whose
+    name matches ``pattern`` (group 1 = the owner's PID) and whose
+    owner is dead or recycled (``_reapable``).  Serves the PID-scoped
+    scratch dirs, the build staging dirs and the warehouse tables."""
+    import shutil
+
+    try:
+        names = os.listdir(parent)
+    except OSError:
+        return
+    for name in names:
+        m = pattern.match(name)
+        path = os.path.join(parent, name)
+        if m and _reapable(path, int(m.group(1))):
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def _path_sig(path: str):
@@ -515,19 +525,20 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_tpch_q18_large_orders' per-order rollup (257 s, 60+8 GB map+reduce
 # spill at 32-wide) and q_agg_global's exact-distinct branch (43.8 s,
 # ~65 GB map-side spill) — and measured that pre-bucketing lineitem and
-# orders on orderkey erases both (10× faster, zero spill:
-# scripts/bucket_q18_1000x.py, scripts/bucket_distinct_1000x.py).  This
+# orders on orderkey erases both (10× faster, zero spill: BASELINE.md,
+# "Round-10: the bucketed-layout answer, measured (q18 @ 1000×)" and
+# "... for spill class 2, measured").  This
 # block promotes that measured lever into the DEFAULT plan: a one-time
 # maintenance rewrite (``build_bucket_layout``) publishes bucketed+sorted
 # parquet per table under a fixture-fingerprinted scratch artifact, and
 # order-grain queries route onto it through ``bucketed_table`` when (and
-# only when) a marker-complete layout exists — the same stats-gated
+# only when) a published layout exists — the same stats-gated
 # fall-back discipline as ``fits_broadcast``.  Readers register the files
 # as an EXTERNAL bucketed catalog table (Spark recovers bucket ids from
 # the bucketed writer's file names), so a fresh plain session — the
 # driver's — compiles the exchange-free plans with no carried state.
 
-BUCKET_LAYOUT_TAG = "bktlay1"  # format version: bump when the write changes
+BUCKET_LAYOUT_TAG = "bktlay2"  # format version: bump when the write changes
 BUCKET_KEYS = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
 # ~2.5M rows/bucket reproduces the measured 256-bucket layout at the
 # 600M-row 1000× fixture; small fixtures floor at 8 buckets so the plan
@@ -544,7 +555,7 @@ BUCKET_TARGET_ROWS = 2_500_000
 BUCKET_FAMILIES: dict[str, dict] = {
     "order": {"tag": BUCKET_LAYOUT_TAG, "keys": BUCKET_KEYS,
               "size_from": "lineitem", "tbl_prefix": "lstore_bkt"},
-    "cust": {"tag": "bktcust1",
+    "cust": {"tag": "bktcust2",
              "keys": {"orders": "o_custkey", "customer": "c_custkey"},
              "size_from": "orders", "tbl_prefix": "lstore_bktc"},
 }
@@ -566,11 +577,11 @@ def build_bucket_layout(spark: SparkSession, sf_dir: str,
                         family: str = "order") -> dict[str, str]:
     """One-time maintenance rewrite: publish each table bucketed+sorted
     on its order key (one file per bucket — the ``repartition`` makes
-    each writer task own exactly one bucket).  Atomic under the
-    ``build_tmp_dir``/``publish_dir`` protocol; a marker-complete layout
-    is never rebuilt.  Returns {table: layout_dir}.  At 100 TB this is
-    the OPTIMIZE-style rewrite you run once so every order-grain rollup
-    and fact⋈fact join thereafter compiles with zero exchanges."""
+    each writer task own exactly one bucket).  Each table is one
+    ``build_once`` artifact; a published layout is never rebuilt.
+    Returns {table: layout_dir}.  At 100 TB this is the OPTIMIZE-style
+    rewrite you run once so every order-grain rollup and fact⋈fact
+    join thereafter compiles with zero exchanges."""
     import json
 
     fam = BUCKET_FAMILIES[family]
@@ -587,10 +598,8 @@ def build_bucket_layout(spark: SparkSession, sf_dir: str,
     fp = fixture_fingerprint(sf_dir)
     for t in tables:
         key = fam["keys"][t]
-        final, done = scratch_dir(f"{fam['tag']}_{t}", sf_dir, key=fp)
-        if not done:
-            clear_incomplete_dir(final)
-            tmp = build_tmp_dir(final)
+
+        def write(tmp: str) -> None:
             tbl = f"lstore_bktbuild_{family}_{t}_p{os.getpid()}"
             spark.sql(f"DROP TABLE IF EXISTS {tbl}")
             (load_table(spark, sf_dir, t)
@@ -600,15 +609,16 @@ def build_bucket_layout(spark: SparkSession, sf_dir: str,
             spark.sql(f"DROP TABLE IF EXISTS {tbl}")  # external: files stay
             with open(os.path.join(tmp, "_LAYOUT"), "w") as fh:
                 json.dump({"n_buckets": n, "key": key}, fh)
-            publish_dir(tmp, final)
-        out[t] = final
+
+        out[t] = build_once(
+            scratch_dir(f"{fam['tag']}_{t}", sf_dir, key=fp)[0], write)
     return out
 
 
 def bucketed_table(spark: SparkSession, sf_dir: str, table: str,
                    fp: str | None = None,
                    family: str = "order") -> DataFrame | None:
-    """The bucketed layout of ``table`` if a marker-complete artifact
+    """The bucketed layout of ``table`` if a published artifact
     exists for the CURRENT fixture fingerprint, else None (callers fall
     back to the plain parquet plan).  Registration is an external
     CLUSTERED BY table over the published files — per-session catalog
@@ -651,7 +661,7 @@ def routed_tables(spark: SparkSession, sf_dir: str,
     pinned nowhere and silently reintroduces the orderkey exchange on
     one side while claiming the layout's zero-exchange contract.
 
-    Availability is probed first via the publish markers (one
+    Availability is probed first via the published dirs (one
     fingerprint, one stat per table) so the fallback path never pays
     ``bucketed_table``'s session DDL for a layout half it won't use
     (review r13)."""
@@ -664,7 +674,7 @@ def routed_tables(spark: SparkSession, sf_dir: str,
                for t in tables}
         if all(df is not None for df in bkt.values()):
             return bkt
-        # a marker raced away / _LAYOUT unreadable between the probe
+        # a layout raced away / _LAYOUT unreadable between the probe
         # and the registration: all-or-nothing still holds
     return {t: load_table(spark, sf_dir, t) for t in tables}
 

@@ -60,7 +60,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, scratch_dir
+from ..catalog import build_once, load_table, scratch_dir
 from ..registry import pin, query
 from .similarity import cosine, partitioned_topk
 
@@ -72,9 +72,10 @@ _LEVELS = 256
 def ann_index_dir(sf_dir: str) -> str:
     """Deterministic index location per fixture via catalog.scratch_dir
     (repeated sweeps REUSE the built index instead of leaking tempdirs;
-    the annidx3 version tag busts the cache if the layout or the
-    producing code changes — bumped r8 when the router was vectorized)."""
-    return scratch_dir("annidx3", sf_dir)[0]
+    the annidx4 version tag busts the cache if the layout or the
+    producing code changes — bumped r8 when the router was vectorized,
+    and when the index moved onto ``catalog.build_once``)."""
+    return scratch_dir("annidx4", sf_dir)[0]
 
 
 # SQ8 encode of one dimension: floor((x - lo) / step) clamped to
@@ -186,23 +187,16 @@ def _write_index(spark: SparkSession, idx: str, corpus) -> None:
 
 def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """Train + route + encode + write the index if absent; returns its
-    path.  Runs eagerly (it is a batch job, not a query plan).
-
-    Commit protocol (review r10): the index is built in a PID-staged
-    tmp dir and published with one atomic rename
-    (``catalog.publish_dir``), so a concurrent session that loses the
-    build race reads the winner's COMPLETE index instead of a shared
-    dir two Spark jobs are overwriting under each other."""
-    from ..catalog import build_tmp_dir, clear_incomplete_dir, publish_dir
-    idx = ann_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(idx, "postings", "_SUCCESS")):
-        clear_incomplete_dir(idx, os.path.join("postings", "_SUCCESS"))
-        tmp = build_tmp_dir(idx)
+    path.  Runs eagerly (it is a batch job, not a query plan).  Built
+    through ``catalog.build_once``, so a concurrent session that loses
+    the build race reads the winner's COMPLETE index instead of a
+    shared dir two Spark jobs are overwriting under each other."""
+    def write(tmp: str) -> None:
         em = load_table(spark, sf_dir, "embeddings")
         _write_index(spark, tmp, em.filter(F.col("vec_id") >= 10)
                      .select("vec_id", "label", "embedding"))
-        publish_dir(tmp, idx)
-    return idx
+
+    return build_once(ann_index_dir(sf_dir), write)
 
 
 # THE max-cosine routing CTE pair against the base-trained `cent`
@@ -549,9 +543,9 @@ def q_llm_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _UPDATE_SPLIT = 400  # base corpus: [10, 400); incremental batch: >= 400
 
-# Explicit read schema for posting segments: an empty segment (only
-# _SUCCESS, zero parquet files) must read as zero rows, where schema
-# inference would throw.
+# Explicit read schema for posting segments: an empty segment (zero
+# parquet files) must read as zero rows, where schema inference would
+# throw.
 _POSTING_SCHEMA = ("cand_id bigint, codes array<int>, "
                    "code_sum bigint, list_id int")
 
@@ -566,14 +560,14 @@ def _read_postings(spark: SparkSession, path: str) -> DataFrame:
 
 def ann_base_dir(sf_dir: str) -> str:
     """Index dir for the incremental-update exhibit's BASE corpus."""
-    return scratch_dir("annidx3b", sf_dir)[0]
+    return scratch_dir("annidx4b", sf_dir)[0]
 
 
 def update_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """The incremental half of the index lifecycle: encode a NEW batch
     of vectors under the base index's FROZEN quantizer and write it as
     a delta posting segment — no retraining, the base postings are
-    never rewritten.  Idempotent (_SUCCESS-gated), eager batch job.
+    never rewritten.  Idempotent (``build_once``), eager batch job.
 
     This is how a 100 TB ANN index actually lives: the quantizer is
     trained once (on the base corpus), daily arrivals are routed and
@@ -583,23 +577,15 @@ def update_ann_index(spark: SparkSession, sf_dir: str) -> str:
     honest caveat — is quantizer STALENESS: batch vectors outside the
     base's SQ8 bounds clamp to the edge codes, and a drifted corpus
     eventually needs retrain+rebuild."""
-    from ..catalog import build_tmp_dir, clear_incomplete_dir, publish_dir
-    base = ann_base_dir(sf_dir)
     em = load_table(spark, sf_dir, "embeddings")
-    if not os.path.exists(os.path.join(base, "postings", "_SUCCESS")):
-        # staged build + atomic publish, same protocol as
-        # build_ann_index (review r10)
-        clear_incomplete_dir(base, os.path.join("postings", "_SUCCESS"))
-        tmp = build_tmp_dir(base)
+
+    def write_base(tmp: str) -> None:
         _write_index(spark, tmp,
                      em.filter((F.col("vec_id") >= 10)
                                & (F.col("vec_id") < _UPDATE_SPLIT))
                      .select("vec_id", "label", "embedding"))
-        publish_dir(tmp, base)
-    delta = os.path.join(base, "postings_delta")
-    if not os.path.exists(os.path.join(delta, "_SUCCESS")):
-        clear_incomplete_dir(delta)
-        tmp = build_tmp_dir(delta)
+
+    def write_delta(tmp: str) -> None:
         cvecs = (spark.read.parquet(os.path.join(base, "centroids"))
                  .select(F.col("list_id").alias("label"), "cvec"))
         bounds = spark.read.parquet(os.path.join(base, "bounds"))
@@ -607,7 +593,9 @@ def update_ann_index(spark: SparkSession, sf_dir: str) -> str:
                  .select("vec_id", "embedding"))
         _route_encode_postings(batch, cvecs, bounds) \
             .write.mode("overwrite").partitionBy("list_id").parquet(tmp)
-        publish_dir(tmp, delta)
+
+    base = build_once(ann_base_dir(sf_dir), write_base)
+    build_once(os.path.join(base, "postings_delta"), write_delta)
     return base
 
 
@@ -676,8 +664,8 @@ def q_llm_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     the update pipeline reused the frozen quantizer exactly."""
     base = update_ann_index(spark, sf_dir)
     # Explicit schema on the reads: a fixture whose max vec_id falls
-    # below _UPDATE_SPLIT yields an EMPTY delta segment (only _SUCCESS,
-    # zero parquet files), where schema inference would throw.
+    # below _UPDATE_SPLIT yields an EMPTY delta segment (zero parquet
+    # files), where schema inference would throw.
     posts = (_read_postings(spark, os.path.join(base, "postings"))
              .withColumn("segment", F.lit("base")))
     delta = (_read_postings(spark, os.path.join(base, "postings_delta"))
@@ -698,7 +686,7 @@ def merge_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """The compaction third of the index lifecycle (build → update →
     MERGE): fold the delta posting segment into a single merged store
     under the SAME frozen quantizer — a pure file rewrite, no routing
-    or encoding recomputed.  Idempotent (_SUCCESS-gated) eager batch
+    or encoding recomputed.  Idempotent (``build_once``) eager batch
     job; returns the merged segment's path.
 
     The rewrite is shuffle-free: both inputs are already
@@ -710,19 +698,16 @@ def merge_ann_index(spark: SparkSession, sf_dir: str) -> str:
     the swap is a vacuum-schedule decision (q_maint_retention_purge's
     shape), and this shared exhibit store keeps them so the update key
     stays independently replayable."""
-    from ..catalog import build_tmp_dir, clear_incomplete_dir, publish_dir
     base = update_ann_index(spark, sf_dir)
-    merged = os.path.join(base, "postings_merged")
-    if not os.path.exists(os.path.join(merged, "_SUCCESS")):
-        clear_incomplete_dir(merged)
-        tmp = build_tmp_dir(merged)
+
+    def write(tmp: str) -> None:
         posts = _read_postings(spark, os.path.join(base, "postings"))
         delta = _read_postings(spark, os.path.join(base, "postings_delta"))
         (posts.unionByName(delta)
          .sortWithinPartitions("list_id", "cand_id")
          .write.mode("overwrite").partitionBy("list_id").parquet(tmp))
-        publish_dir(tmp, merged)
-    return merged
+
+    return build_once(os.path.join(base, "postings_merged"), write)
 
 
 @query(

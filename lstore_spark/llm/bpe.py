@@ -184,87 +184,59 @@ def build_vocab_fixture(sf_dir: str) -> str:
     engine-independent Python encoder here is the SAME independence
     class as the pytest reference encoder — the driver comparison
     still pits Spark's distributed execution against DuckDB's.
-    Memoized via the scratch ``_SUCCESS`` marker; the content
+    Built once per fixture by ``catalog.build_once``; the content
     fingerprint in the dir name invalidates on fixture regeneration.
     Returns the vocab parquet path."""
     import collections
     import os
 
-    from ..catalog import scratch_dir
-    out, built = scratch_dir("bpevocab1", sf_dir)
-    path = os.path.join(out, "vocab.parquet")
-    if built and os.path.exists(path):
-        return path
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    # row-group streaming + the corpus_merges word cap (review r13): the
-    # old whole-table to_pylist held every document's text in driver
-    # Python memory at once — the exact OOM class VERDICT r10 #6 closed
-    # in corpus_merges — and a large fixture must fail LOUDLY on the
-    # distinct-word bound either way, not stall the driver
-    # documents.parquet may be a single file (driver testdata) or a
-    # Spark-written DIRECTORY of part files — pq.ParquetFile only opens
-    # the former, so resolve part files explicitly and stream each
-    src = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(src):
-        parts = sorted(
-            os.path.join(src, f) for f in os.listdir(src)
-            if f.endswith(".parquet") and not f.startswith(("_", ".")))
-    else:
-        parts = [src]
-    train_counts: collections.Counter = collections.Counter()
-    vocab: set[str] = set()
-    for part in parts:
-        pf = pq.ParquetFile(part)
-        for batch in pf.iter_batches(columns=["doc_id", "text"]):
-            for doc_id, text in zip(batch.column("doc_id").to_pylist(),
-                                    batch.column("text").to_pylist()):
-                words = [w for w in (text or "").split(" ") if w]
-                vocab.update(words)
-                if doc_id < _TRAIN_DOCS:
-                    train_counts.update(words)
-            if len(vocab) > _TRAIN_WORD_CAP:
-                raise ValueError(
-                    f"build_vocab_fixture: >{_TRAIN_WORD_CAP:,} distinct "
-                    f"words in {sf_dir} — the frozen-vocab exhibit is "
-                    "sized for test fixtures; train on a bounded sample "
-                    "instead")
-    ranks = {p: i for i, p in enumerate(train_bpe(dict(train_counts)))}
-    words = sorted(vocab)
-    os.makedirs(out, exist_ok=True)
-    # tmp + atomic replace (pq_codebook's commit protocol): a reader in
-    # a concurrent session can never see a half-written vocab file, and
-    # racing builders produce byte-identical content so last-wins is
-    # safe (review r10).  Stale ``.tmp*`` siblings from builders that
-    # crashed between write and replace are reaped first — but ONLY
-    # dead owners' files: a pattern-wide unlink would yank a LIVE
-    # concurrent builder's in-flight staging file out from under its
-    # os.replace (review r11).  Our own tmp is unlinked on failure —
-    # this single-file twin previously leaked its staging file forever
-    # on a crash (ADVICE r10).
-    from ..catalog import _pid_alive
-    for stale in os.listdir(out):
-        if stale.startswith("vocab.parquet.tmp"):
-            pid_part = stale[len("vocab.parquet.tmp"):]
-            if pid_part.isdigit() and _pid_alive(int(pid_part)):
-                continue  # a live builder's in-flight staging file
-            try:
-                os.unlink(os.path.join(out, stale))
-            except OSError:
-                pass  # concurrent builder just replaced/removed it
-    tmp = f"{path}.tmp{os.getpid()}"
-    try:
+    from ..catalog import build_once, scratch_dir
+
+    def write(tmp: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        # row-group streaming + the corpus_merges word cap (review r13):
+        # the old whole-table to_pylist held every document's text in
+        # driver Python memory at once — the exact OOM class VERDICT r10
+        # #6 closed in corpus_merges — and a large fixture must fail
+        # LOUDLY on the distinct-word bound either way, not stall the
+        # driver.  documents.parquet may be a single file (driver
+        # testdata) or a Spark-written DIRECTORY of part files —
+        # pq.ParquetFile only opens the former, so resolve part files
+        # explicitly and stream each
+        src = os.path.join(sf_dir, "documents.parquet")
+        if os.path.isdir(src):
+            parts = sorted(
+                os.path.join(src, f) for f in os.listdir(src)
+                if f.endswith(".parquet") and not f.startswith(("_", ".")))
+        else:
+            parts = [src]
+        train_counts: collections.Counter = collections.Counter()
+        vocab: set[str] = set()
+        for part in parts:
+            pf = pq.ParquetFile(part)
+            for batch in pf.iter_batches(columns=["doc_id", "text"]):
+                for doc_id, text in zip(batch.column("doc_id").to_pylist(),
+                                        batch.column("text").to_pylist()):
+                    words = [w for w in (text or "").split(" ") if w]
+                    vocab.update(words)
+                    if doc_id < _TRAIN_DOCS:
+                        train_counts.update(words)
+                if len(vocab) > _TRAIN_WORD_CAP:
+                    raise ValueError(
+                        f"build_vocab_fixture: >{_TRAIN_WORD_CAP:,} "
+                        f"distinct words in {sf_dir} — the frozen-vocab "
+                        "exhibit is sized for test fixtures; train on a "
+                        "bounded sample instead")
+        ranks = {p: i for i, p in enumerate(train_bpe(dict(train_counts)))}
+        words = sorted(vocab)
         pq.write_table(
             pa.table({"word": words,
                       "n_tok": [len(encode_word(w, ranks)) for w in words]}),
-            tmp)
-        os.replace(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    with open(os.path.join(out, "_SUCCESS"), "w"):
-        pass
-    return path
+            os.path.join(tmp, "vocab.parquet"))
+
+    out = build_once(scratch_dir("bpevocab2", sf_dir)[0], write)
+    return os.path.join(out, "vocab.parquet")
 
 
 def _pack_bpe_oracle() -> str:

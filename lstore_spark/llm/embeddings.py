@@ -833,54 +833,46 @@ def pq_codebook(spark: SparkSession, sf_dir: str):
     pattern ann_index already exhibits): an in-process hit comes from a
     module cache keyed on the fixture CONTENT fingerprint; a
     cross-process hit loads the tiny parquet artifact persisted under
-    ``scratch_dir('pqcb1', ...)`` (parquet DOUBLE is IEEE binary64, so
-    the matrix round-trips bit-exactly and the key's hash grade is
-    unaffected); only a never-before-seen fixture runs the training
-    aggregate.  This recovers the eager codebook job q_llm_emb_pq_adc
-    paid on every invocation at 1× while keeping the vectorized 100×
-    path untouched — at 100 TB the codebook is trained by a batch job
-    and shipped as an artifact, never re-derived per query."""
+    ``scratch_dir('pqcb2', ...)`` by ``catalog.build_once`` (parquet
+    DOUBLE is IEEE binary64, so the matrix round-trips bit-exactly and
+    the key's hash grade is unaffected); only a never-before-seen
+    fixture runs the training aggregate.  This recovers the eager
+    codebook job q_llm_emb_pq_adc paid on every invocation at 1× while
+    keeping the vectorized 100× path untouched — at 100 TB the codebook
+    is trained by a batch job and shipped as an artifact, never
+    re-derived per query."""
     import numpy as np
+    import pyarrow.parquet as pqt
 
-    from ..catalog import fixture_fingerprint, scratch_dir
+    from ..catalog import build_once, fixture_fingerprint, scratch_dir
 
     key = fixture_fingerprint(sf_dir)
     C = _PQ_CB_CACHE.get(key)
     if C is not None:
         return C
-    # forward the fingerprint — scratch_dir would otherwise stat-scan
-    # the fixture a second time (review r12; the r11 `key` parameter
-    # exists for exactly this caller pattern)
-    out, built = scratch_dir("pqcb1", sf_dir, key=key)
-    fpath = os.path.join(out, "codebook.parquet")
-    if built:
-        import pyarrow.parquet as pqt
-        t = pqt.read_table(fpath)
-        labels = t.column("label").to_numpy()
-        vecs = t.column("cvec").to_pylist()
-        C = np.array([vecs[i] for i in np.argsort(labels)],
-                     dtype=np.float64)
-    else:
+
+    def write(tmp: str) -> None:
+        import pyarrow as pa
+
         em = load_table(spark, sf_dir, "embeddings")
         cb_rows = sorted(
             centroid_vectors(em.select("label", "embedding"),
                              "label").collect(),
             key=lambda r: r.label)
-        C = np.array([r.cvec for r in cb_rows], dtype=np.float64)
-        import pyarrow as pa
-        import pyarrow.parquet as pqt
-        os.makedirs(out, exist_ok=True)
-        # Atomic publish: write to a PID-suffixed temp and rename, so a
-        # concurrent trainer (two sessions, cold artifact) can never
-        # leave a half-written file behind the _SUCCESS gate.
-        tmp = f"{fpath}.tmp{os.getpid()}"
         pqt.write_table(pa.table({
             "label": pa.array([r.label for r in cb_rows]),
             "cvec": pa.array([list(r.cvec) for r in cb_rows],
                              type=pa.list_(pa.float64())),
-        }), tmp)
-        os.replace(tmp, fpath)
-        open(os.path.join(out, "_SUCCESS"), "w").close()
+        }), os.path.join(tmp, "codebook.parquet"))
+
+    # forward the fingerprint — scratch_dir would otherwise stat-scan
+    # the fixture a second time (review r12; the r11 `key` parameter
+    # exists for exactly this caller pattern)
+    out = build_once(scratch_dir("pqcb2", sf_dir, key=key)[0], write)
+    t = pqt.read_table(os.path.join(out, "codebook.parquet"))
+    labels = t.column("label").to_numpy()
+    vecs = t.column("cvec").to_pylist()
+    C = np.array([vecs[i] for i in np.argsort(labels)], dtype=np.float64)
     _PQ_CB_CACHE[key] = C
     return C
 

@@ -52,8 +52,9 @@ def q_agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the one-time OPTIMIZE-style rewrite), the distinct branch reads it
     instead: the scan arrives pre-hash-partitioned on l_orderkey, so the
     distinct compiles with ZERO exchanges and its ~65 GB map-side spill
-    at 1000× disappears (43.8 → 3.7-5.6 s measured,
-    scripts/bucket_distinct_1000x.py; VERDICT r10 #2).  Falls back to
+    at 1000× disappears (43.8 → 3.7-5.6 s measured, BASELINE.md
+    "Round-10: the bucketed-layout answer for spill class 2, measured";
+    VERDICT r10 #2).  Falls back to
     the plain-parquet two-phase distinct otherwise."""
     from ..catalog import bucketed_table
 

@@ -223,7 +223,8 @@ def q_tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning directly and the orders⋈rollup join co-locates, so the
     chain compiles with zero orderkey exchanges — erasing the 60+8 GB
     map+reduce spill this key showed at 1000×/32-wide (257 → 22.8-25.7 s
-    measured, scripts/bucket_q18_1000x.py; VERDICT r10 #2).  Plain
+    measured, BASELINE.md "Round-10: the bucketed-layout answer,
+    measured (q18 @ 1000×)"; VERDICT r10 #2).  Plain
     parquet falls back to today's shuffled plan."""
     from ..catalog import routed_tables
 

@@ -230,20 +230,11 @@ def reap_dead_warehouse_tables(spark: SparkSession, prefix: str) -> None:
     DROP+rmtree yank bucket files out from under another's live join;
     PID scoping fixes the clobber, this reaper bounds the leak)."""
     import re
-    import shutil
 
-    from .catalog import _reapable
+    from .catalog import _reap_dead_owners
     warehouse = spark.conf.get(
         "spark.sql.warehouse.dir", "spark-warehouse").removeprefix("file:")
-    pat = re.compile(rf"^{re.escape(prefix)}p(\d+)$")
-    try:
-        for name in os.listdir(warehouse):
-            m = pat.match(name)
-            full = os.path.join(warehouse, name)
-            if m and _reapable(full, int(m.group(1))):
-                shutil.rmtree(full, ignore_errors=True)
-    except OSError:
-        pass
+    _reap_dead_owners(warehouse, re.compile(rf"^{re.escape(prefix)}p(\d+)$"))
 
 
 def write_bucketed_pair(spark: SparkSession,

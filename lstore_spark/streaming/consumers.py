@@ -10,8 +10,8 @@ Structured Streaming checkpoint resume — but no surface for several
 independent named consumers.  This module adds it, storage-side:
 
 - a cursor is one JSON file per group under ``<store>/_cursors/``,
-  committed by the single-file tmp+``os.replace`` protocol (same
-  discipline as ``catalog.publish_dir`` / ``pq_codebook``), so a crash
+  committed by the single-file tmp+``os.replace`` protocol (the
+  one-file twin of ``catalog.build_once``'s rename commit), so a crash
   mid-commit can never tear it and a restarted consumer resumes from
   the last fully-committed offset — at-least-once delivery, exactly
   like a Kafka group cursor;

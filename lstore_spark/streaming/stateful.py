@@ -138,10 +138,11 @@ def running_user_agg_stream_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     form — each micro-batch emits the updated per-user running totals
     for the keys it touched — but the state lives in the JVM state
     store (HashAggregate + StateStoreSave), no Python workers, no Arrow
-    transfer, no per-key pandas frames.  The 1000× A/B
-    (scripts/stream_state_1000x.py shapes ``runagg`` vs ``runagg_jvm``)
-    measures the difference over the 100M-event census; BASELINE.md /
-    README record the numbers.  Exactness discipline is unchanged: the
+    transfer, no per-key pandas frames.  The 1000× A/B (shapes
+    ``runagg`` in scripts/stream_state_r11_1000x.json vs ``runagg_jvm``
+    in scripts/stream_state_r12_1000x.json) measures the difference
+    over the 100M-event census; BASELINE.md / README record the
+    numbers.  Exactness discipline is unchanged: the
     sum accumulates as the 1e8-scaled int64 computed JVM-side, so the
     result is order-independent and oracle-hashable.
 

@@ -1,6 +1,6 @@
 """Pins for the r10 review fixes in catalog.py: directory-style
 table_rows, stat-signature cache invalidation, tag-wide dead-PID
-reaping, and the atomic publish protocol for shared dir artifacts."""
+reaping, and the build-once publish rule for shared dir artifacts."""
 
 from __future__ import annotations
 
@@ -190,6 +190,39 @@ def test_publish_dir_atomic_and_loser_discards(tmp_path):
     assert os.path.exists(os.path.join(final, "winner")), "winner clobbered"
     assert not os.path.exists(os.path.join(final, "loser"))
     assert not os.path.exists(tmp_b), "staging dir leaked"
+
+
+def test_build_once_builds_once_and_leaves_nothing_on_failure(tmp_path):
+    """build_once: an existing artifact is returned without calling
+    ``write``; a raising ``write`` leaves neither the artifact nor its
+    staging dir, so the next call rebuilds from scratch."""
+    import pytest
+
+    final = str(tmp_path / "artifact")
+    calls = []
+
+    def write(tmp):
+        calls.append(tmp)
+        open(os.path.join(tmp, "data"), "w").close()
+
+    assert catalog.build_once(final, write) == final
+    assert os.path.exists(os.path.join(final, "data"))
+    assert catalog.build_once(final, write) == final
+    assert len(calls) == 1, "write called for a published artifact"
+
+    failed = str(tmp_path / "failed")
+
+    def boom(tmp):
+        open(os.path.join(tmp, "half"), "w").close()
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError, match="write failed"):
+        catalog.build_once(failed, boom)
+    assert not os.path.exists(failed), "failed build published"
+    assert not os.path.exists(f"{failed}.build_p{os.getpid()}"), \
+        "failed build leaked its staging dir"
+    assert catalog.build_once(failed, write) == failed
+    assert os.path.exists(os.path.join(failed, "data"))
 
 
 def test_pid_alive_overflow_pid_is_dead(tmp_path):

@@ -1278,6 +1278,35 @@ def test_pq_codebook_persisted_roundtrip_bit_exact(spark, sf_dir):
     assert c_first.dtype == np.float64 and c_first.shape[1] == 64
 
 
+def test_pq_codebook_failed_write_leaves_no_artifact(spark, sf_dir,
+                                                    tmp_path, monkeypatch):
+    """A codebook build whose parquet write raises leaves no directory
+    at the artifact path and no staging dir; the next call builds it,
+    bit-identical to the codebook served from the shared scratch root."""
+    import os
+
+    import pyarrow.parquet as pqt
+
+    import lstore_spark.llm.embeddings as E
+
+    expected = E.pq_codebook(spark, sf_dir)
+    monkeypatch.setenv("LSTORE_SPARK_SCRATCH_ROOT", str(tmp_path))
+    monkeypatch.setattr(E, "_PQ_CB_CACHE", {})
+    real_write = pqt.write_table
+
+    def boom(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pqt, "write_table", boom)
+    with pytest.raises(OSError, match="disk full"):
+        E.pq_codebook(spark, sf_dir)
+    assert os.listdir(tmp_path) == [], "failed build left a directory"
+    monkeypatch.setattr(pqt, "write_table", real_write)
+    assert np.array_equal(E.pq_codebook(spark, sf_dir), expected)
+    (name,) = os.listdir(tmp_path)
+    assert os.listdir(tmp_path / name) == ["codebook.parquet"]
+
+
 def test_semantic_pairwise_vectorized_bit_identical(spark, sf_dir):
     """The applyInPandas Gram keep flags (the semantic_dedup pairwise
     stage) must drop EXACTLY the salted-join + HOF-cosine dup set on
@@ -1436,10 +1465,12 @@ def test_bpe_trainer_refuses_oversized_driver_pull(spark, sf_dir,
 
 
 def test_bpe_vocab_fixture_reaps_stale_tmp(tmp_path):
-    """ADVICE r10: a builder that crashed between write_table and
-    os.replace leaks `vocab.parquet.tmp<pid>` forever; the next build
-    must reap stale staging files and leave only the published vocab."""
+    """ADVICE r10: a vocab build that crashed mid-write leaks its
+    staging dir (``<vocab dir>.build_p<pid>``) forever unless the next
+    build reaps dead owners' debris and leaves only the published
+    vocab."""
     import os
+    import shutil
 
     from lstore_spark.llm.bpe import build_vocab_fixture
 
@@ -1453,14 +1484,52 @@ def test_bpe_vocab_fixture_reaps_stale_tmp(tmp_path):
     # First build just to learn the scratch dir, then simulate a crash.
     path = build_vocab_fixture(str(fx))
     out = os.path.dirname(path)
-    debris = os.path.join(out, "vocab.parquet.tmp999999")
-    with open(debris, "wb") as fh:
+    debris = f"{out}.build_p999999"
+    os.makedirs(debris)
+    with open(os.path.join(debris, "vocab.parquet"), "wb") as fh:
         fh.write(b"torn")
-    os.unlink(os.path.join(out, "_SUCCESS"))  # force a rebuild
+    shutil.rmtree(out)  # force a rebuild
     assert build_vocab_fixture(str(fx)) == path
-    assert not os.path.exists(debris), "stale staging file not reaped"
-    leftovers = [n for n in os.listdir(out) if ".tmp" in n]
-    assert not leftovers, leftovers
+    assert not os.path.exists(debris), "stale staging dir not reaped"
+    name = os.path.basename(out)
+    siblings = [n for n in os.listdir(os.path.dirname(out))
+                if n.startswith(name)]
+    assert siblings == [name], siblings
+    assert os.listdir(out) == ["vocab.parquet"]
+
+
+def test_bpe_vocab_failed_write_leaves_no_artifact(tmp_path, monkeypatch):
+    """A vocab build whose parquet write raises leaves no directory at
+    the artifact path and no staging dir; the next call builds it."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lstore_spark.llm.bpe import build_vocab_fixture
+
+    fx = tmp_path / "fx"
+    fx.mkdir()
+    pq.write_table(
+        pa.table({"doc_id": [0, 1], "text": ["aa bb", "cc dd"]}),
+        str(fx / "documents.parquet"))
+    root = tmp_path / "scratch"
+    root.mkdir()
+    monkeypatch.setenv("LSTORE_SPARK_SCRATCH_ROOT", str(root))
+    real_write = pq.write_table
+
+    def boom(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", boom)
+    with pytest.raises(OSError, match="disk full"):
+        build_vocab_fixture(str(fx))
+    assert os.listdir(root) == [], "failed build left a directory"
+    monkeypatch.setattr(pq, "write_table", real_write)
+    path = build_vocab_fixture(str(fx))
+    assert os.listdir(root) == [os.path.basename(os.path.dirname(path))]
+    assert set(pq.read_table(path).column("word").to_pylist()) == {
+        "aa", "bb", "cc", "dd"}
 
 
 def test_lsh_portable_twin_planes_and_output_contract(spark, sf_dir):
