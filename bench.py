@@ -149,16 +149,101 @@ def run_once(spark, key: str) -> float:
     return time.perf_counter() - t0
 
 
-def main() -> None:
-    spark = get_spark("lstore-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    run_once(spark, "q_agg_groupby_hash")  # JVM/codegen warm-up, discarded
-    # Python-worker warm-up, discarded: fork the Arrow worker pool and
-    # import numpy/pandas in it (a per-executor ONE-TIME cost, ~2 s
-    # local — production pools are pre-forked/reused across queries, so
-    # steady-state per-query cost is what the headline should measure;
-    # without this the first pandas-UDF key absorbs the pool spawn).
+def timed(spark, fn, sf_dir: str) -> tuple[float, dict]:
+    """THE noop-sink timed run of every measurement script: build
+    ``fn(spark, sf_dir)``, force it end-to-end into the noop sink (full
+    compute, no collect-to-driver cost) and return (seconds, result
+    fingerprint ``{"n": rows, "h": str}``).  The fingerprint
+    (``metrics.fingerprinted``) rides the timed action: no extra pass."""
+    from lstore_spark.metrics import fingerprinted
+
+    t0 = time.perf_counter()
+    df, obs = fingerprinted(fn(spark, sf_dir))
+    df.write.mode("overwrite").format("noop").save()
+    sec = time.perf_counter() - t0
+    got = obs.get
+    h = got.get("h")
+    return sec, {"n": int(got["n"]), "h": None if h is None else str(h)}
+
+
+class host_noise:
+    """Context: the host-noise evidence around a timed loop.  Runs the
+    fixed-work calibration probes and reads the steal counter on entry
+    and again on a clean exit, and fills the dict it yields with
+    ``calibration_sec`` / ``parallel_calibration_sec`` (before/after)
+    and ``steal_jiffies_delta``.  Query inflation with both probes
+    stable is code; inflation tracking the all-core probe is the host."""
+
+    def __enter__(self) -> dict:
+        self.fields: dict = {}
+        self.before = (calibration_probe(), parallel_calibration_probe(),
+                       _steal_jiffies())
+        return self.fields
+
+    def __exit__(self, exc_type, *exc) -> bool:
+        if exc_type is None:
+            c0, p0, s0 = self.before
+            c1, p1, s1 = (calibration_probe(), parallel_calibration_probe(),
+                          _steal_jiffies())
+            self.fields.update(
+                calibration_sec={"before": c0, "after": c1},
+                parallel_calibration_sec={"before": p0, "after": p1},
+                steal_jiffies_delta=(s1 - s0 if s0 is not None
+                                     and s1 is not None else None))
+        return False
+
+
+def _dir_bytes(path: str) -> int:
+    return sum(os.path.getsize(os.path.join(root, f))
+               for root, _dirs, files in os.walk(path) for f in files)
+
+
+def _artifact(build, dirs: list[str]) -> dict:
+    """Ensure one fixture-derived artifact: ``build()`` publishes it
+    (``catalog.build_once``) unless ``dirs`` already exist.  Returns its
+    state (reused/built/absent), the seconds ``build`` took and the
+    bytes on disk.  A failed build is reported absent, not raised: the
+    keys that read the artifact then measure their fallback."""
+    reused = all(os.path.isdir(d) for d in dirs)
+    t0 = time.perf_counter()
+    try:
+        build()
+    except Exception as e:
+        print(f"# warm-up: {dirs[0]} not built: {e!r}", file=sys.stderr)
+        return {"state": "absent",
+                "build_sec": round(time.perf_counter() - t0, 3), "bytes": 0}
+    build_s = round(time.perf_counter() - t0, 3)
+    missing = [d for d in dirs if not os.path.isdir(d)]
+    if missing:  # the builder publishes somewhere else: a tag drifted
+        raise RuntimeError(f"built, but {missing} do not exist")
+    return {"state": "reused" if reused else "built", "build_sec": build_s,
+            "bytes": sum(_dir_bytes(d) for d in dirs)}
+
+
+def warm_up(spark, sf_dir: str) -> dict:
+    """Everything a timed loop must not pay, run once and discarded.
+
+    * The JVM/codegen warm-up key.
+    * The Python-worker warm-up: fork the Arrow worker pool and import
+      numpy in it (a per-executor one-time cost; production pools are
+      pre-forked, so without this the first pandas-UDF key absorbs the
+      pool spawn).
+    * Every fixture-derived artifact a key reads on its production path
+      (train-once/read-many): the ANN index (q_llm_index_search's
+      search-only cost), the PQ codebook (q_llm_emb_pq_adc), and every
+      ``BUCKET_FAMILIES`` layout the order-/customer-grain keys route
+      onto — without it a cold scratch root would make the first run
+      measure the plain-parquet fallback and the next the routed plans.
+
+    Returns, per artifact, its state (reused/built/absent), build
+    seconds and bytes on disk; layouts also carry ``n_buckets``."""
     from pyspark.sql import functions as F
+
+    from lstore_spark import catalog
+    from lstore_spark.llm.ann_index import ann_index_dir, build_ann_index
+    from lstore_spark.llm.embeddings import pq_codebook
+
+    timed(spark, QUERIES["q_agg_groupby_hash"], sf_dir)
 
     @F.pandas_udf("long")
     def _warm(x):
@@ -167,69 +252,58 @@ def main() -> None:
 
     spark.range(32).repartition(32).select(_warm("id")) \
          .write.mode("overwrite").format("noop").save()
-    # Index warm-up, discarded: q_llm_index_search's baseline (1.3 s)
-    # is the SEARCH-ONLY cost against a prebuilt index — the production
-    # read path.  On a cold /tmp the deterministic index dir is empty
-    # and the key would otherwise run the whole train+encode+write
-    # batch job inside its timed window (a phantom regression; build
-    # cost is q_llm_index_build's job, not search cost).
-    from lstore_spark.llm.ann_index import build_ann_index
-    idx_marker = os.path.join(build_ann_index(spark, SF_DIR),
-                              "postings", "_SUCCESS")
-    idx_mtime0 = os.path.getmtime(idx_marker)
-    # PQ-codebook warm-up, discarded — same rationale as the index:
-    # q_llm_emb_pq_adc's production read path searches against a
-    # TRAINED quantizer (train-once/search-many); on a cold /tmp the
-    # persisted codebook is absent and the key would otherwise run the
-    # training aggregate inside its timed window.
-    from lstore_spark.llm.embeddings import pq_codebook
-    pq_codebook(spark, SF_DIR)
-    # Bucket-layout warm-up, discarded — same train-once/read-many
-    # rationale as the index and codebook above: the order-/customer-
-    # grain keys DEFAULT-route onto the published bucketed layout
-    # (catalog.build_bucket_layout, the OPTIMIZE-style one-time
-    # maintenance rewrite; VERDICT r12 #6) with plain-parquet fallback
-    # when absent.  On a cold /tmp the first bench invocation would
-    # otherwise silently measure the fallback shapes and the next one
-    # the routed shapes (r13: a host reboot mid-round demonstrated
-    # exactly this ambiguity).  Ensuring the layout here makes the
-    # measured plan deterministic; ``bucket_layouts`` in the JSON
-    # records per family whether a prior artifact was REUSED or this
-    # invocation built it (build cost is outside every timed window
-    # either way).  The plain-fallback A/B lives in scripts/ (run any
-    # probe with LSTORE_SPARK_SCRATCH_ROOT pointed at an empty dir).
-    from lstore_spark import catalog as _catalog
-    layouts: dict[str, str] = {}
-    # one stat-scan of the fixture for every family's reuse check
-    fp = _catalog.fixture_fingerprint(SF_DIR)
-    for fam, fcfg in _catalog.BUCKET_FAMILIES.items():
-        try:
-            reused = all(
-                _catalog.scratch_dir(f"{fcfg['tag']}_{t}", SF_DIR, key=fp)[1]
-                for t in fcfg["keys"])
-            _catalog.build_bucket_layout(spark, SF_DIR, family=fam)
-            layouts[fam] = "reused" if reused else "built"
-        except Exception:
-            layouts[fam] = "absent"  # routed keys fall back to plain
+    fp = catalog.fixture_fingerprint(sf_dir)
+    out = {
+        "ann_index": _artifact(lambda: build_ann_index(spark, sf_dir),
+                               [ann_index_dir(sf_dir)]),
+        # pq_codebook publishes under scratch_dir("pqcb2", ...)
+        "pq_codebook": _artifact(
+            lambda: pq_codebook(spark, sf_dir),
+            [catalog.scratch_dir("pqcb2", sf_dir, key=fp)[0]]),
+    }
+    out["layouts"] = {}
+    for fam, cfg in catalog.BUCKET_FAMILIES.items():
+        out["layouts"][fam] = dict(_artifact(
+            lambda: catalog.build_bucket_layout(spark, sf_dir, family=fam),
+            [catalog.scratch_dir(f"{cfg['tag']}_{t}", sf_dir, key=fp)[0]
+             for t in cfg["keys"]]),
+            n_buckets=catalog.bucket_layout_n(sf_dir, family=fam))
+    return out
+
+
+def _dir_id(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_ino, st.st_mtime_ns
+
+
+def main() -> None:
+    from lstore_spark.llm.ann_index import ann_index_dir
+
+    spark = get_spark("lstore-spark-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    # index_reused: the timed loop searched an index that existed before
+    # this run and that nothing rebuilt (the dir is the artifact: it is
+    # complete iff it exists, and a rebuild publishes a new inode)
+    idx_dir = ann_index_dir(SF_DIR)
+    idx0 = _dir_id(idx_dir)
+    artifacts = warm_up(spark, SF_DIR)
     n_passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
-    calib0 = calibration_probe()
-    pcal0 = parallel_calibration_probe()
-    steal0 = _steal_jiffies()
     passes: list[dict[str, float]] = []
-    for _ in range(n_passes):
-        t: dict[str, float] = {}
-        for key in HEADLINE:
-            t[key] = round(run_once(spark, key), 3)
-        passes.append(t)
+    with host_noise() as noise:
+        for _ in range(n_passes):
+            t: dict[str, float] = {}
+            for key in HEADLINE:
+                t[key] = round(run_once(spark, key), 3)
+            passes.append(t)
     import statistics
 
     times = {k: round(statistics.median(p[k] for p in passes), 3)
              for k in HEADLINE}
     times_min = {k: min(p[k] for p in passes) for k in HEADLINE}
     pass_totals = [round(sum(p.values()), 3) for p in passes]
-    calib1 = calibration_probe()
-    pcal1 = parallel_calibration_probe()
-    steal1 = _steal_jiffies()
     # Spark-side fixed-work probe: re-run the FIRST headline key after
     # the whole sequence.  Its delta vs times["q_agg_groupby_hash"]
     # exposes in-session JVM inflation (GC/broadcast pressure) that a
@@ -246,46 +320,31 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "sf": sf_val,
-        # Quiet-window evidence (VERDICT r12 #4): value/queries are
-        # per-query medians over the passes; the min is each query's
-        # observed noise floor, and the pass totals expose the ambient
-        # spread that a single-shot run would bake into one number.
-        # The FULL per-pass grid is included so any cold-vs-steady
-        # split is adjudicable from the JSON alone: pass 1 carries the
-        # per-process one-time costs (janino codegen compile, JIT,
-        # Python-pool shapes) — the historical single-shot methodology
-        # — while later passes measure the compile-once/run-many
-        # steady state that dominates at 100 TB.
+        # Quiet-window evidence: value/queries are per-query medians
+        # over the passes; the min is each query's observed noise floor,
+        # and the pass totals expose the ambient spread that a
+        # single-shot run would bake into one number.  Pass 1 carries
+        # the per-process one-time costs (codegen compile, JIT,
+        # Python-pool shapes); later passes measure the compile-once/
+        # run-many steady state.
         "protocol": f"median-of-{n_passes}",
         "pass_total_sec": pass_totals,
         "spread_sec": round(max(pass_totals) - min(pass_totals), 3),
         "queries_min": times_min,
         "queries_per_pass": passes,
-        # Environment evidence (VERDICT r8 #5): host load/memory plus a
-        # fixed-work calibration probe timed before and after the
-        # headline loop — contention claims are now checkable from the
-        # JSON instead of narrated.
+        # host load/memory, then the calibration probes and steal delta
+        # around the headline loop (host_noise)
         "host": host_snapshot(),
-        "calibration_sec": {"before": calib0, "after": calib1},
-        # r10 drift instrumentation: the single-thread probe can be
-        # stable while PARALLEL capacity drifts (CPU steal on a shared
-        # VM, all-core frequency, noisy neighbor) — the regime a
-        # 32-thread Spark stage actually runs in.  Query inflation that
-        # tracks THIS probe (single-thread stable) is the host.
-        "parallel_calibration_sec": {"before": pcal0, "after": pcal1},
-        "steal_jiffies_delta": (steal1 - steal0
-                                if steal0 is not None and steal1 is not None
-                                else None),
+        **noise,
         "spark_probe_rerun_sec": spark_probe,
-        # VERDICT r10 #4b: the headline search time is only meaningful
-        # on the train-once path — prove the timed loop searched the
-        # PREBUILT index (publish marker untouched), no retrain inside
-        # the timed window.
-        "index_reused": os.path.getmtime(idx_marker) == idx_mtime0,
-        # r13: which bucket-layout families backed the routed keys this
-        # run ("reused" | "built" | "absent" — absent means those keys
-        # measured the plain-parquet fallback plans).
-        "bucket_layouts": layouts,
+        "index_reused": idx0 is not None and _dir_id(idx_dir) == idx0,
+        # which bucket-layout families backed the routed keys this run
+        # ("reused" | "built" | "absent" — absent means those keys
+        # measured the plain-parquet fallback plans)
+        "bucket_layouts": {fam: a["state"]
+                           for fam, a in artifacts["layouts"].items()},
+        # per artifact: state, build seconds, bytes (layouts: n_buckets)
+        "artifacts": artifacts,
     }
     print(json.dumps(out), flush=True)
     spark.stop()

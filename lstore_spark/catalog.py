@@ -572,8 +572,6 @@ def bucket_layout_n(sf_dir: str, family: str = "order") -> int:
 
 
 def build_bucket_layout(spark: SparkSession, sf_dir: str,
-                        tables: tuple | None = None,
-                        n_buckets: int | None = None,
                         family: str = "order") -> dict[str, str]:
     """One-time maintenance rewrite: publish each table bucketed+sorted
     on its order key (one file per bucket — the ``repartition`` makes
@@ -585,9 +583,7 @@ def build_bucket_layout(spark: SparkSession, sf_dir: str,
     import json
 
     fam = BUCKET_FAMILIES[family]
-    if tables is None:
-        tables = tuple(fam["keys"])
-    n = n_buckets or bucket_layout_n(sf_dir, family)
+    n = bucket_layout_n(sf_dir, family)
     out: dict[str, str] = {}
     # ONE fingerprint for the whole multi-table build (review r12): a
     # per-iteration recompute both re-stat-scanned the fixture per
@@ -596,8 +592,7 @@ def build_bucket_layout(spark: SparkSession, sf_dir: str,
     # after which bucketed_table (one fp) forever saw a half-complete
     # layout and silently fell back to the shuffled plan.
     fp = fixture_fingerprint(sf_dir)
-    for t in tables:
-        key = fam["keys"][t]
+    for t, key in fam["keys"].items():
 
         def write(tmp: str) -> None:
             tbl = f"lstore_bktbuild_{family}_{t}_p{os.getpid()}"

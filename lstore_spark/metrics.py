@@ -30,3 +30,22 @@ def observed(df: DataFrame, name: str,
     (count/sum/min/max/...) — enforced by Spark at analysis time."""
     obs = Observation(name)
     return df.observe(obs, *[m.alias(k) for k, m in metrics.items()]), obs
+
+
+def fingerprinted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with an observation of its row count ``n`` and the sum
+    ``h`` of ``xxhash64`` over every column, summed as ``decimal(38,0)``
+    so it cannot overflow — an order-free result fingerprint that rides
+    the caller's one action.  Columns are renamed positionally first
+    (results may repeat a column name) and map columns, which
+    ``xxhash64`` refuses, are hashed through their string form."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import MapType
+
+    named = df.toDF(*[f"c{i}" for i in range(len(df.columns))])
+    cols = [F.col(f.name).cast("string") if isinstance(f.dataType, MapType)
+            else F.col(f.name) for f in named.schema.fields]
+    h = F.xxhash64(*cols).cast("decimal(38,0)") if cols else F.lit(0)
+    return observed(named, "fingerprint",
+                    n=F.count(F.lit(1)),
+                    h=F.sum(h).cast("decimal(38,0)"))

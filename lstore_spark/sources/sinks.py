@@ -190,10 +190,11 @@ def q_source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket-co-located join: lineitem and orders written bucketed+sorted
     on the order key, then joined with NO Exchange on either side (plan-
     asserted in tests/test_plans.py; ~2.8x over the shuffle join at sf0.1
-    per scripts/bucket_bench.py).  At 100 TB bucketing the fact tables on
-    their join key removes the dominant shuffle of every order-grain
-    query — the single highest-leverage physical design choice.  Oracle
-    recomputes from the raw tables, proving bucketed write→read fidelity."""
+    per BASELINE.md, "Bucketed-join evidence").  At 100 TB bucketing the
+    fact tables on their join key removes the dominant shuffle of every
+    order-grain query — the single highest-leverage physical design
+    choice.  Oracle recomputes from the raw tables, proving bucketed
+    write→read fidelity."""
     from ..scale import reap_dead_warehouse_tables, write_bucketed_pair
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")

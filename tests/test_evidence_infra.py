@@ -134,3 +134,60 @@ def test_selfcheck_ledger_keeps_each_fixtures_record(tmp_path, monkeypatch):
     monkeypatch.setattr(ev, "ROOT", str(tmp_path))
     assert {fx: r["ok"] for fx, r in ev.self_evidence()["q_k"].items()} == {
         "sf0.01": True, "sf0.1x10": False}
+
+
+def test_fingerprint_matches_the_benchmarks_copy(spark, monkeypatch):
+    """metrics.fingerprinted and perfbench's own copy give the same
+    (n, h) on one frame, including a map column (hashed through its
+    string form) and a repeated column name (renamed positionally)."""
+    from pyspark.sql import functions as F
+
+    from lstore_spark.metrics import fingerprinted
+
+    monkeypatch.syspath_prepend(os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench"))
+    import workloads
+
+    base = spark.range(50).select(
+        F.col("id"), (F.col("id") % 7).alias("id"),
+        F.create_map(F.lit("k"), F.col("id").cast("string")).alias("m"),
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"))
+    got = []
+    for fp in (fingerprinted, workloads.fingerprinted):
+        df, obs = fp(base)
+        df.write.mode("overwrite").format("noop").save()
+        got.append((obs.get["n"], obs.get["h"]))
+    assert got[0] == got[1] and got[0][0] == 50 and got[0][1] != 0
+
+
+def test_bench_timed_reports_the_fingerprint(spark):
+    """bench.timed, the one noop-sink timed run, returns the result's
+    row count and hash from the timed action itself."""
+    import sys
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    from bench import timed
+
+    sec, fp = timed(spark, lambda s, _sf: s.range(10), "unused")
+    assert sec > 0 and fp["n"] == 10 and fp["h"] is not None
+
+
+def test_scale_probe_raises_when_arms_disagree():
+    """scripts/scale_probe.py: a faster arm cannot also be a wrong one —
+    two arms (or two runs) of a key with different result fingerprints
+    raise instead of entering the ledger."""
+    import sys
+
+    import pytest
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    from scripts.scale_probe import agreed_fingerprint
+
+    same = {"n": 3, "h": "42"}
+    assert agreed_fingerprint("q_k", "sf0.1", {
+        "routed": [same, same], "plain": [dict(same)]}) == same
+    with pytest.raises(RuntimeError, match="arms disagree"):
+        agreed_fingerprint("q_k", "sf0.1", {
+            "routed": [same], "plain": [{"n": 3, "h": "43"}]})
+    with pytest.raises(RuntimeError, match="arms disagree"):
+        agreed_fingerprint("q_k", "sf0.1", {"std": [same, {"n": 4,
+                                                           "h": "42"}]})

@@ -424,8 +424,8 @@ def test_segment_read_memory_is_window_bounded(tmp_path):
     not slurp — peak Python memory O(window), not O(segment).  A 64 MB
     segment read under tracemalloc must peak under 4 windows (the old
     f.read() slurp peaked at >= the segment size).  The full-scale
-    twin (420 MB segment, 25 MB peak) is
-    scripts/segread_mem_probe.py → segread_mem_probe_r13.json."""
+    twin (420 MB segment, 25 MB peak) is recorded in
+    scripts/segread_mem_probe_r13.json."""
     import tracemalloc
 
     from lstore_spark.sources.lstore_log import (_READ_CHUNK,
