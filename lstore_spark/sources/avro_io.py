@@ -22,9 +22,10 @@ self-consistency: tests/test_avro.py reads files written here through
 JVM-written file back through this decoder (both directions).
 
 Scale shape: the sink writes one container file per partition
-executor-side (tmp+rename publish, task-retry-safe — the same
-discipline as the segment sink, lstore_log.write_segments), and the
-source plans one partition per file.  Avro's sync markers would also
+executor-side (each task publishes its own file by tmp+rename,
+task-retry-safe; the lstore_log DataSource writers instead stage on the
+executors and publish the whole job at commit), and the source plans
+one partition per file.  Avro's sync markers would also
 support block-level splits WITHIN a file (seek + scan-to-sync); at the
 task-per-file granularity producers actually emit, file-level
 parallelism is the standard plan, so the splitter is deliberately not

@@ -17,14 +17,19 @@ time (``LstoreLogReader``) and hands every filter back to Spark, so
 pruning is I/O elimination only; ``register()`` turns on the Python
 filter-pushdown conf Spark needs to plan such a reader.
 
+Write path: every product write goes through the DataSource writers
+(``df.write.format("lstore_log")`` and its streaming twin) — executors
+stage one segment per partition, the driver publishes at commit.
+``write_segment`` is the driver-local writer for single files.
+
 Worker importability: the DataSource class is pickled by reference and
-``write_segments`` tasks call this module's encoder, so ``register()``
-and ``write_segments`` ship the whole package to workers as a zip
-(``session.ship_package``, once per application; ``tune()`` does the
-same) — no assumptions about worker PYTHONPATH.  A planner worker that
-unpickles the class imports this module, the catalog, the registry and
-the session profile only: the package loads its key modules on the
-first registry read, which no worker makes.
+its writer tasks call this module's encoder, so ``register()`` ships
+the whole package to workers as a zip (``session.ship_package``, once
+per application; ``tune()`` does the same) — no assumptions about
+worker PYTHONPATH.  A planner worker that unpickles the class imports
+this module, the catalog, the registry and the session profile only:
+the package loads its key modules on the first registry read, which no
+worker makes.
 """
 
 from __future__ import annotations
@@ -230,30 +235,6 @@ def write_segment(path: str,
         os.replace(idx + ".tmp", idx)
 
 
-def write_segments(df: DataFrame, seg_dir: str) -> None:
-    """Distributed segment sink (VERDICT r4 item 2): each task encodes
-    its partition into ONE ``part-<pid>.seg`` (+ ``.idx``) — the write
-    unit matches the storage unit like the read path, and NO row moves
-    through the driver.  ``df`` must have columns (offset bigint, ints
-    array<bigint>, blobs array<binary>).
-
-    Publish policy: per task, through ``_stage_partition`` and
-    ``_publish`` — a retried task republishes the same partition id over
-    itself (last rename wins; no torn file is ever visible).  Unlike the
-    job-atomic ``df.write.format("lstore_log")``, a failed job can leave
-    the finished tasks' segments; in return the write takes no Python
-    planner calls.  The tasks import this module, so the package zip
-    ships first (once per application)."""
-    ship_package(df.sparkSession)
-
-    def _write_partition(rows) -> None:
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId()
-        _publish([_stage_partition(seg_dir, f"{pid:05d}", rows)])
-
-    df.select("offset", "ints", "blobs").foreachPartition(_write_partition)
-
-
 def events_as_segment_rows(ev: DataFrame) -> DataFrame:
     """Shape an events slice into the segment record layout:
     ints=[event_id, ts_us, user_id], blobs=[event_type] — pure projection,
@@ -415,14 +396,27 @@ def _stage_partition(seg_dir: str, basename: str, rows) -> _SegStaged:
         final_seg=os.path.join(seg_dir, f"part-{basename}.seg"))
 
 
-def _publish(messages) -> None:
-    """The one publish rule: rename staged segments into place.  Per
-    segment the ADVICE-r5 ordering holds (stale idx removed before the
-    segment bytes appear, fresh idx renamed in only after), and a
-    republish under the same final name replaces it whole.  The
-    DataSource writers call it on the driver once EVERY task has staged,
-    so a failed job leaves zero new `*.seg` files; ``write_segments``
-    calls it inside each task, for that task's segment."""
+def _publish(seg_dir: str, messages, stale_prefix: str | None = None) -> None:
+    """The one publish rule, run on the driver at job commit once EVERY
+    task has staged, so a failed job leaves zero new `*.seg` files.
+    Staged segments are renamed into place; per segment the ADVICE-r5
+    ordering holds (stale idx removed before the segment bytes appear,
+    fresh idx renamed in only after), and a republish under the same
+    final name replaces it whole.
+
+    ``stale_prefix`` names the published generation this commit
+    replaces: ``""`` (overwrite: every segment) or a batch's name
+    prefix (a replayed micro-batch).  Those `.seg`/`.idx` names are
+    listed BEFORE the renames and deleted only AFTER them — a crash
+    between the two steps leaves a transient union of both
+    generations, never missing rows (ADVICE r6)."""
+    stale = []
+    if stale_prefix is not None:
+        fresh = {os.path.basename(m.final_seg) for m in messages
+                 if m and m.final_seg}
+        stale = [f for f in os.listdir(seg_dir)
+                 if f.startswith(stale_prefix) and f.endswith((".seg", ".idx"))
+                 and f[:-4] + ".seg" not in fresh]
     for m in messages:
         if not m or not m.final_seg:
             continue
@@ -433,6 +427,11 @@ def _publish(messages) -> None:
             pass
         os.replace(m.tmp_seg, m.final_seg)
         os.replace(m.tmp_idx, idx)
+    for f in stale:
+        try:
+            os.remove(os.path.join(seg_dir, f))
+        except FileNotFoundError:
+            pass
 
 
 def _abort(messages) -> None:
@@ -473,22 +472,9 @@ class LstoreLogWriter(DataSourceWriter):
         return _stage_partition(self.path, f"{self.token}-{pid:05d}", iterator)
 
     def commit(self, messages) -> None:
-        old = []
-        if self.overwrite:
-            # Snapshot the pre-existing generation BEFORE publishing;
-            # new names carry this job's uuid token so they can never
-            # collide with (or be mistaken for) old-generation files.
-            keep = {os.path.basename(m.final_seg) for m in messages
-                    if m and m.final_seg}
-            old = [f for f in os.listdir(self.path)
-                   if f.endswith((".seg", ".idx"))
-                   and f[:-4] + ".seg" not in keep]
-        _publish(messages)
-        for f in old:
-            try:
-                os.remove(os.path.join(self.path, f))
-            except FileNotFoundError:
-                pass
+        # new names carry this job's uuid token, so they can never
+        # collide with (or be mistaken for) old-generation files
+        _publish(self.path, messages, "" if self.overwrite else None)
 
     def abort(self, messages) -> None:
         _abort(messages)
@@ -540,21 +526,9 @@ class LstoreLogStreamWriter(DataSourceStreamWriter):
         # names the new attempt also produces, so any published
         # part-<batchId>-* files NOT in this attempt's set must go
         # (ADVICE r6 — stale extra partitions were duplicate rows).
-        # Publish FIRST, delete after — the same crash-ordering rule as
-        # the batch writer's overwrite: dying between the two steps
-        # leaves transient duplicates that the next replay of this
-        # batch re-deletes, never missing rows.
-        _publish(messages)
-        fresh = {os.path.basename(m.final_seg) for m in messages
-                 if m and m.final_seg}
-        prefix = f"part-{batchId:06d}-"
-        for f in os.listdir(self.path):
-            if (f.startswith(prefix) and f.endswith((".seg", ".idx"))
-                    and f[:-4] + ".seg" not in fresh):
-                try:
-                    os.remove(os.path.join(self.path, f))
-                except FileNotFoundError:
-                    pass
+        # A crash between publish and delete leaves transient
+        # duplicates that the next replay of this batch re-deletes.
+        _publish(self.path, messages, f"part-{batchId:06d}-")
 
     def abort(self, messages, batchId: int) -> None:
         _abort(messages)
@@ -772,7 +746,7 @@ FROM events WHERE event_id < 2000
 )
 def q_source_lstore_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-trip through the reference's storage model: an event slice is
-    written as segment files by the DISTRIBUTED sink (one ``.seg`` per
+    written as segment files by the DISTRIBUTED writer (one ``.seg`` per
     partition, executor-side — no driver collect; VERDICT r4 item 2),
     read back via the custom DataSource in parallel, and re-typed to
     named columns.  Oracle compares against the original parquet — codec
@@ -783,11 +757,12 @@ def q_source_lstore_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range-partitioned + offset-sorted: segments carry disjoint offset
     # ranges exactly like lstore's log, so the sealed min/max trailers
     # make offset predicates prune whole files (tests/test_lstore_sink.py)
-    shaped = (events_as_segment_rows(ev)
-              .repartitionByRange(2, "offset")
-              .sortWithinPartitions("offset"))
-    write_segments(shaped, seg_dir)
     register(spark)
+    (events_as_segment_rows(ev)
+     .repartitionByRange(2, "offset")
+     .sortWithinPartitions("offset")
+     .write.format("lstore_log").option("path", seg_dir)
+     .mode("append").save())
     raw = spark.read.format("lstore_log").option("path", seg_dir).load()
     return segments_as_events(raw)
 
@@ -811,42 +786,47 @@ def q_scan_log_from_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer touches O(window), not O(log)."""
     ev = load_table(spark, sf_dir, "events")
     seg_dir = fresh_scratch_dir("logscan", sf_dir)
-    shaped = (events_as_segment_rows(ev)
-              .repartitionByRange(8, "offset")
-              .sortWithinPartitions("offset"))
-    write_segments(shaped, seg_dir)
     register(spark)
+    (events_as_segment_rows(ev)
+     .repartitionByRange(8, "offset")
+     .sortWithinPartitions("offset")
+     .write.format("lstore_log").option("path", seg_dir)
+     .mode("append").save())
     raw = (spark.read.format("lstore_log").option("path", seg_dir).load()
            .filter((F.col("offset") >= 5000) & (F.col("offset") < 9000)))
     return segments_as_events(raw).select("event_id", "user_id", "event_type")
 
 
-@query(
-    "q_sink_lstore_log",
-    oracle="""
+_SINK_ORACLE = """
 SELECT event_type, COUNT(*) AS n,
        MIN(event_id) AS min_id, MAX(event_id) AS max_id,
        CAST(SUM(user_id % 1000000007) AS BIGINT) AS sum_user,
        CAST(SUM(epoch_us(ts) % 1000000007) AS BIGINT) AS sum_ts_us
 FROM events
 GROUP BY event_type
-""",
-)
-def q_sink_lstore_log(spark: SparkSession, sf_dir: str) -> DataFrame:
+"""
+
+
+def _sink_roundtrip(spark: SparkSession, sf_dir: str, tag: str) -> DataFrame:
     """Full-table segment sink round-trip: EVERY event row flows through
-    the distributed writer (one segment per partition, executor-side),
-    back through the parallel DataSource read, then into a per-type
-    aggregate whose oracle recomputes from the original parquet — every
-    field of every record must survive the binary codec for the sums to
-    hash-match.  This is the lstore write path (writer.go [UNVERIFIED:
-    pub], SURVEY.md §1.1) as a real sink: at 100 TB the same shape, one
-    appender task per partition against a shared store, no driver hop."""
+    ``df.write.format("lstore_log")`` (executors stage one segment per
+    partition, the driver publishes all-or-nothing at job commit;
+    tests/test_lstore_sink.py proves a failed job publishes zero
+    segments), back through the parallel DataSource read, then into a
+    per-type aggregate whose oracle recomputes from the original
+    parquet — every field of every record must survive the binary codec
+    for the sums to hash-match.  This is the lstore write path
+    (writer.go [UNVERIFIED: pub], SURVEY.md §1.1) as a real sink: at
+    100 TB the same shape, one appender task per partition against a
+    shared store, no driver hop."""
     ev = load_table(spark, sf_dir, "events")
-    seg_dir = fresh_scratch_dir("logsink", sf_dir)
-    write_segments(events_as_segment_rows(ev).repartition(8, "offset"), seg_dir)
+    seg_dir = fresh_scratch_dir(tag, sf_dir)
     register(spark)
-    raw = spark.read.format("lstore_log").option("path", seg_dir).load()
-    back = segments_as_events(raw)
+    (events_as_segment_rows(ev).repartition(8, "offset")
+     .write.format("lstore_log").option("path", seg_dir)
+     .mode("append").save())
+    back = segments_as_events(
+        spark.read.format("lstore_log").option("path", seg_dir).load())
     # checksums are mod-reduced per row (terms < 1e9) so the BIGINT sum
     # cannot overflow at any realistic row count (1e9 · rows ≪ 2^63 up
     # to ~9e9 rows/group; caught overflowing at the ~sf1 sweep otherwise)
@@ -860,41 +840,18 @@ def q_sink_lstore_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_sink_lstore_native",
-    oracle="""
-SELECT event_type, COUNT(*) AS n,
-       MIN(event_id) AS min_id, MAX(event_id) AS max_id,
-       CAST(SUM(user_id % 1000000007) AS BIGINT) AS sum_user,
-       CAST(SUM(epoch_us(ts) % 1000000007) AS BIGINT) AS sum_ts_us
-FROM events
-GROUP BY event_type
-""",
-)
+@query("q_sink_lstore_log", oracle=_SINK_ORACLE)
+def q_sink_lstore_log(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full-table segment sink round-trip (``_sink_roundtrip``): the
+    same program as q_sink_lstore_native, over its own scratch store."""
+    return _sink_roundtrip(spark, sf_dir, "logsink")
+
+
+@query("q_sink_lstore_native", oracle=_SINK_ORACLE)
 def q_sink_lstore_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The q_sink_lstore_log round-trip through the NATIVE write
-    surface: ``df.write.format("lstore_log")`` — the DataSourceWriter's
-    two-phase commit (executors stage one segment per partition, the
-    driver publishes all-or-nothing; tests/test_lstore_sink.py proves a
-    failed job publishes zero segments).  Same checksum oracle as the
-    manual-sink twin, so hash-green here certifies the writer-path codec
-    byte-for-byte under driver conditions too."""
-    ev = load_table(spark, sf_dir, "events")
-    seg_dir = fresh_scratch_dir("lognative", sf_dir)
-    register(spark)
-    (events_as_segment_rows(ev).repartition(8, "offset")
-     .write.format("lstore_log").option("path", seg_dir)
-     .mode("append").save())
-    back = segments_as_events(
-        spark.read.format("lstore_log").option("path", seg_dir).load())
-    p = F.lit(1000000007)
-    return back.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("event_id").alias("min_id"),
-        F.max("event_id").alias("max_id"),
-        F.sum(F.col("user_id") % p).alias("sum_user"),
-        F.sum(F.unix_micros(F.col("ts").cast("timestamp")) % p).alias("sum_ts_us"),
-    )
+    """Full-table segment sink round-trip (``_sink_roundtrip``): the
+    same program as q_sink_lstore_log, over its own scratch store."""
+    return _sink_roundtrip(spark, sf_dir, "lognative")
 
 
 @query(
@@ -918,9 +875,10 @@ def q_scan_log_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     segments), not O(log)."""
     ev = load_table(spark, sf_dir, "events")
     seg_dir = fresh_scratch_dir("logbytype", sf_dir)
-    shaped = events_as_segment_rows(ev).repartition(8, F.col("blobs")[0])
-    write_segments(shaped, seg_dir)
     register(spark)
+    (events_as_segment_rows(ev).repartition(8, F.col("blobs")[0])
+     .write.format("lstore_log").option("path", seg_dir)
+     .mode("append").save())
     raw = (spark.read.format("lstore_log").option("path", seg_dir).load()
            .filter(F.col("key") == "purchase"))
     return raw.select(

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from ..catalog import fresh_scratch_dir, load_table
 from ..registry import query
 from ..sources.lstore_log import (events_as_segment_rows, live_segments,
-                                  register, segment_stats, write_segments)
+                                  register, segment_stats)
 
 CURSOR_DIR = "_cursors"
 _GROUP_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9_.-]{0,63}$")
@@ -86,20 +86,25 @@ def groups(store: str) -> list[str]:
         return []
 
 
-def committed_offset(store: str, group: str) -> int:
-    """The group's last durably committed offset; -1 when the group has
-    never committed (or does not exist) — deliver-from-the-beginning."""
-    # resolve the path OUTSIDE the tolerant read (review r13): the
-    # except swallowed _cursor_path's name-validation ValueError, so an
-    # invalid group name silently read as -1 — a typo'd consumer
-    # re-read the whole store, and lag_report spliced the raw name into
-    # its stack() SQL before any validation could fire
-    path = _cursor_path(store, group)
+def _read_cursor(path: str) -> int:
+    """The offset a cursor file records; -1 when the file is absent or
+    torn (never committed).  Every cursor read in this module goes
+    through here."""
     try:
         with open(path) as fh:
             return int(json.load(fh)["offset"])
     except (OSError, ValueError, KeyError):
         return -1
+
+
+def committed_offset(store: str, group: str) -> int:
+    """The group's last durably committed offset; -1 when the group has
+    never committed (or does not exist) — deliver-from-the-beginning."""
+    # resolve the path OUTSIDE the tolerant read (review r13): inside
+    # it, _cursor_path's name-validation ValueError would read as -1 — a
+    # typo'd consumer re-reads the whole store, and lag_report splices
+    # the raw name into its stack() SQL before any validation fires
+    return _read_cursor(_cursor_path(store, group))
 
 
 def _write_cursor(path: str, offset: int) -> None:
@@ -419,13 +424,8 @@ def committed_segment_offsets(store: str, group: str) -> dict[str, int]:
     except OSError:
         return out
     for n in names:
-        if not n.endswith(".json"):
-            continue
-        try:
-            with open(os.path.join(d, n)) as fh:
-                out[n[:-5]] = int(json.load(fh)["offset"])
-        except (OSError, ValueError, KeyError):
-            continue  # torn tmp debris etc. — never consumed
+        if n.endswith(".json"):
+            out[n[:-5]] = _read_cursor(os.path.join(d, n))
     return out
 
 
@@ -474,11 +474,7 @@ def commit_assigned(store: str, group: str, consumer: int, generation: int,
             # read only THIS segment's cursor (review r12: loading the
             # whole cursor dir held the exclusive lock O(#segments) per
             # commit, contradicting the O(touched) claim)
-            try:
-                with open(os.path.join(d, f"{seg}.json")) as fh:
-                    prev = int(json.load(fh)["offset"])
-            except (OSError, ValueError, KeyError):
-                prev = -1
+            prev = _read_cursor(os.path.join(d, f"{seg}.json"))
             if off < prev:
                 raise ValueError(
                     f"commit_assigned({group}): {seg} offset {off} "
@@ -515,8 +511,7 @@ def assigned_frontier(store: str, group: str) -> int:
 
 
 def poll_assigned(spark: SparkSession, store: str, group: str,
-                  consumer: int, n_consumers: int | None = None,
-                  generation: int | None = None) -> DataFrame:
+                  consumer: int, generation: int | None = None) -> DataFrame:
     """One consumer INSTANCE's poll, restricted to its assigned
     segments via the reader's ``segments`` option — each of the group's
     N instances scans a disjoint file subset in its own session.
@@ -528,26 +523,18 @@ def poll_assigned(spark: SparkSession, store: str, group: str,
     own ``offset >`` pushdown, and untouched segments read whole.  The
     union's branches cover disjoint files, so no byte is scanned twice.
 
-    Pass ``generation`` (from ``rebalance``) to poll a managed group —
-    a stale generation raises immediately, and ``commit_assigned``
-    records durable per-segment progress.  ``n_consumers`` is the
-    STATIC mode: a one-shot parallel snapshot read with the assignment
-    recomputed deterministically and no membership doc — it READS any
-    per-segment cursors a prior managed run left behind, but offers no
-    commit path of its own (``commit_assigned`` requires a published
-    generation; durable progress means ``rebalance`` first — the
-    Kafka rule that only group members commit)."""
-    if generation is not None:
-        cur_gen, _n, assignment = membership(store, group)
-        if generation != cur_gen:
-            raise ValueError(
-                f"poll_assigned({group}): generation {generation} is "
-                f"fenced (current is {cur_gen})")
-    elif n_consumers is not None:
-        assignment = assign_segments(store, n_consumers)
-    else:
-        raise ValueError("poll_assigned: pass generation= (managed) "
-                         "or n_consumers= (static)")
+    ``generation`` (from ``rebalance``) is required: a missing or
+    stale generation raises immediately, and ``commit_assigned``
+    records durable per-segment progress — the Kafka rule that only
+    group members poll and commit."""
+    if generation is None:
+        raise ValueError(f"poll_assigned({group}): pass generation= "
+                         "(from rebalance)")
+    cur_gen, _n, assignment = membership(store, group)
+    if generation != cur_gen:
+        raise ValueError(
+            f"poll_assigned({group}): generation {generation} is "
+            f"fenced (current is {cur_gen})")
     mine = sorted(s for s, c in assignment.items() if c == consumer)
     seg_cur = committed_segment_offsets(store, group)
     register(spark)
@@ -642,49 +629,23 @@ def assign_segments(store: str, n_consumers: int,
 
 def _fixed_width_store(spark: SparkSession, sf_dir: str, tag: str) -> str:
     """A 9-segment store over events (event_id < 900) with fixed-width
-    offset ranges: segment bK holds exactly offsets [K*100, K*100+99],
-    so segment rank ≡ floor(lo/100) and a DuckDB oracle can recompute
-    any assignment declaratively.  An exhibit-scale driver loop of 9
-    small jobs (the distributed range-partitioned sink elsewhere trades
-    this determinism for one job)."""
+    offset ranges: range K's segment holds exactly offsets
+    [K*100, K*100+99], so segment rank ≡ floor(lo/100) and a DuckDB
+    oracle can recompute any assignment declaratively.  An
+    exhibit-scale driver loop of 9 small append jobs, one segment each
+    (the distributed range-partitioned writer elsewhere trades this
+    determinism for one job); an empty range publishes no segment."""
     ev = (load_table(spark, sf_dir, "events")
           .filter(F.col("event_id") < 900)
           .select("event_id", "ts", "user_id", "event_type"))
     store = fresh_scratch_dir(tag, sf_dir)
-    # all 9 range counts in ONE job: the loud staging check below needs
-    # to distinguish an empty range from a failed write
-    range_n = {int(r["k"]): r["count"] for r in
-               ev.groupBy(F.floor(F.col("event_id") / 100).alias("k"))
-               .count().collect()}
+    register(spark)
     for k in range(9):
-        sdir = os.path.join(store, f"stage{k}")
-        os.makedirs(sdir)
         batch = ev.filter((F.col("event_id") >= k * 100)
                           & (F.col("event_id") < (k + 1) * 100))
-        n = range_n.get(k, 0)
-        write_segments(events_as_segment_rows(batch).repartition(1), sdir)
-        # locate by extension + distinguish "range was empty" from
-        # "sink naming drifted" (review r13: the hardcoded part-00000
-        # existence check silently dropped ALL segments on naming
-        # drift — the exact class q_stream_follow's publish() made
-        # loud in r12)
-        staged = live_segments(sdir)
-        if not staged:
-            if n > 0:
-                raise RuntimeError(
-                    f"_fixed_width_store: range {k} has {n} rows but "
-                    "write_segments staged no .seg — sink naming "
-                    "drifted or the write failed")
-            continue  # genuinely empty range: no segment
-        if len(staged) != 1:
-            raise RuntimeError(
-                f"_fixed_width_store: range {k} staged {staged}, "
-                "expected exactly one segment from repartition(1)")
-        src = os.path.join(sdir, staged[0])
-        os.rename(src, os.path.join(store, f"b{k}.seg"))
-        idx = src[:-len(".seg")] + ".idx"
-        if os.path.exists(idx):
-            os.rename(idx, os.path.join(store, f"b{k}.idx"))
+        (events_as_segment_rows(batch).repartition(1)
+         .write.format("lstore_log").option("path", store)
+         .mode("append").save())
     return store
 
 
@@ -710,16 +671,14 @@ def q_stream_consumer_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo-ordered sealed segments — ``assign_segments``), summarized per
     consumer as exact integers (segment count, record count, offset
     sum/min/max).  The store is built as fixed-width offset ranges
-    (width 100 over event_id < 900, one atomic publish per range —
-    the q_stream_follow staging pattern), so segment rank ≡
-    floor(offset/100) and the DuckDB oracle recomputes the WHOLE
-    assignment declaratively: disjointness and exhaustiveness of the
-    per-consumer slices is hash-proven, not asserted.  Scale: the
+    (width 100 over event_id < 900, one append job per range), so
+    segment rank ≡ floor(offset/100) and the DuckDB oracle recomputes
+    the WHOLE assignment declaratively: disjointness and exhaustiveness
+    of the per-consumer slices is hash-proven, not asserted.  Scale: the
     assignment itself is trailer metadata; each consumer instance then
     polls only its own segments — read parallelism without any
     coordination beyond the shared cursor protocol."""
     store = _fixed_width_store(spark, sf_dir, "congrp_assign")
-    register(spark)
 
     assignment = assign_segments(store, 3)
     # sanity: the fixed-width build makes rank ≡ floor(lo/100); the
@@ -802,11 +761,12 @@ def q_stream_consumer_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
           .filter(F.col("event_id") < 900)
           .select("event_id", "ts", "user_id", "event_type"))
     store = fresh_scratch_dir("congrp", sf_dir)
-    shaped = (events_as_segment_rows(ev)
-              .repartitionByRange(4, "offset")
-              .sortWithinPartitions("offset"))
-    write_segments(shaped, store)
     register(spark)
+    (events_as_segment_rows(ev)
+     .repartitionByRange(4, "offset")
+     .sortWithinPartitions("offset")
+     .write.format("lstore_log").option("path", store)
+     .mode("append").save())
 
     for g in ("alpha", "bravo", "charlie"):
         ensure_group(store, g)
@@ -850,12 +810,12 @@ def q_stream_consumer_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consumer-group REBALANCE with fencing (VERDICT r11 #3): a group
     starts at generation 1 with 3 instances over the fixed-width
     9-segment store; instance 0 consumes and per-segment-commits its
-    first segment (b0 → offset 99); then an instance dies and
+    first segment ([0, 99] → offset 99); then an instance dies and
     ``rebalance`` publishes generation 2 over 2 instances.  The
     relation is built from the ACTUAL generation-2 polls (one
     per-instance read of its assigned slice, tagged and unioned), so
     the hash check proves the post-rebalance slices are disjoint,
-    exhaustive over the UNCONSUMED records (b0's per-segment cursor
+    exhaustive over the UNCONSUMED records (that segment's cursor
     survives the rebalance — offsets 0-99 are not redelivered), and
     aligned with the declarative floor(offset/100) %% 2 mapping the
     DuckDB oracle recomputes from raw events.
@@ -869,13 +829,15 @@ def q_stream_consumer_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O(#segments) trailer seeks, no data scan); per-segment cursors
     keep commit traffic O(#segments-touched), never O(records)."""
     store = _fixed_width_store(spark, sf_dir, "congrp_rebal")
-    register(spark)
     grp = "workers"
 
     gen1, asg1 = rebalance(store, grp, 3)
+    # segments in offset order (their names carry the writer's job
+    # token, not their rank)
+    by_lo = sorted(asg1, key=lambda s: segment_stats(os.path.join(store, s)))
     # instance 0 (gen 1) drains its first segment and commits it —
     # per-segment, so instances 1/2's unconsumed offsets are untouched
-    first_seg = sorted(s for s, c in asg1.items() if c == 0)[0]
+    first_seg = next(s for s in by_lo if asg1[s] == 0)
     hi = (poll_assigned(spark, store, grp, 0, generation=gen1)
           .filter(F.col("offset") < 100).agg(F.max("offset")).first()[0])
     if hi is None:
@@ -892,7 +854,7 @@ def q_stream_consumer_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # poll once generation 2 exists
     for attempt, kwargs in (
             ("commit", dict(fn=lambda: commit_assigned(
-                store, grp, 1, gen1, {sorted(asg1)[1]: 199}))),
+                store, grp, 1, gen1, {by_lo[1]: 199}))),
             ("poll", dict(fn=lambda: poll_assigned(
                 spark, store, grp, 1, generation=gen1)))):
         try:
@@ -902,8 +864,8 @@ def q_stream_consumer_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             raise AssertionError(
                 f"stale-generation {attempt} was not fenced")
-    # cross-ownership: under gen 2 consumer 1 does not own b0's rank-0
-    # slot (rank 0 % 2 == 0), so committing it must raise
+    # cross-ownership: under gen 2 consumer 1 does not own first_seg's
+    # rank-0 slot (rank 0 % 2 == 0), so committing it must raise
     try:
         commit_assigned(store, grp, 1, gen2, {first_seg: 99})
     except ValueError:

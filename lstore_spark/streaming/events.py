@@ -467,19 +467,19 @@ def q_stream_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Long-lived tail-follow (VERDICT r4 item 3) — lstore's blocking
     ``SearchForward`` consumer made literal: a ``processingTime``-
     triggered stream follows the segment store while a producer appends
-    live.  Three event slices are staged as segment files by the
-    distributed sink; segment 1 is published before the stream starts and
-    segments 2 and 3 are published only AFTER the consumer's cursor has
-    visibly passed the previous one, so the data necessarily spans ≥3
-    micro-batches (no availableNow drain).  Each publish is one atomic
-    rename — a reader never sees a torn segment, and because the stream
-    offset is the sealed-segment set (write-once files), restarts and
-    retries can't lose or duplicate rows.  The final sink contents equal
-    the full slice, which is exactly what the oracle checks."""
+    live.  Three event slices are appended as segment files by the
+    lstore_log writer; segment 1 is published before the stream starts
+    and segments 2 and 3 are published only AFTER the consumer's cursor
+    has visibly passed the previous one, so the data necessarily spans
+    ≥3 micro-batches (no availableNow drain).  Each publish is one
+    append job whose commit renames its segment into place — a reader
+    never sees a torn segment, and because the stream offset is the
+    sealed-segment set (write-once files), restarts and retries can't
+    lose or duplicate rows.  The final sink contents equal the full
+    slice, which is exactly what the oracle checks."""
     import time
 
-    from ..sources.lstore_log import (events_as_segment_rows, live_segments,
-                                      register, write_segments)
+    from ..sources.lstore_log import events_as_segment_rows, register
 
     ev = (load_table(spark, sf_dir, "events")
           .filter(F.col("event_id") < 900)
@@ -491,47 +491,22 @@ def q_stream_follow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("event_id") < n).cast("long")), F.lit(0))
     cum = ev.agg(lt(300), lt(600)).first()
 
-    root = fresh_scratch_dir("follow", sf_dir)
-    live = os.path.join(root, "live")
+    live = os.path.join(fresh_scratch_dir("follow", sf_dir), "live")
     os.makedirs(live)
-    for i, (lo, hi) in enumerate(((0, 300), (300, 600), (600, 900))):
-        sdir = os.path.join(root, f"stage{i}")
-        os.makedirs(sdir)
-        batch = ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi))
-        # repartition(1): one segment per append so each publish is ONE
-        # atomic rename — the consumption gate below then maps cleanly
-        # to "previous segment fully consumed".
-        write_segments(events_as_segment_rows(batch).repartition(1), sdir)
+    register(spark)
 
     def publish(i: int) -> None:
-        # locate the staged segment by extension, not by hardcoding
-        # write_segments' internal part-00000 naming; and distinguish
-        # "slice was empty" (legitimate skip) from "naming drifted /
-        # write failed" — the silent no-op turned either into a 120 s
-        # gate-loop stall with an empty sink (review r12)
-        staged = live_segments(os.path.join(root, f"stage{i}"))
+        # repartition(1): one segment per append, so each publish is ONE
+        # atomic commit — the consumption gate below then maps cleanly
+        # to "previous segment fully consumed"; an empty slice
+        # publishes nothing
         lo, hi = ((0, 300), (300, 600), (600, 900))[i]
-        n_slice = (cum[1] if i == 1 else cum[0]) if i < 2 else None
-        expected_nonempty = (
-            (i == 0 and cum[0] > 0)
-            or (i == 1 and cum[1] > cum[0])
-            or (i == 2))  # slice 2 size isn't precomputed; segs decide
-        if not staged:
-            if i < 2 and expected_nonempty:
-                raise RuntimeError(
-                    f"q_stream_follow: slice {i} has rows ({n_slice} "
-                    "cumulative) but write_segments staged no .seg — "
-                    "sink naming drifted or the write failed")
-            return  # genuinely empty slice: skip, don't crash
-        if len(staged) != 1:
-            raise RuntimeError(
-                f"q_stream_follow: expected ONE staged segment for "
-                f"slice {i} (repartition(1)), found {staged}")
-        os.rename(os.path.join(root, f"stage{i}", staged[0]),
-                  os.path.join(live, f"b{i}.seg"))
+        batch = ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi))
+        (events_as_segment_rows(batch).repartition(1)
+         .write.format("lstore_log").option("path", live)
+         .mode("append").save())
 
     publish(0)
-    register(spark)
     raw = spark.readStream.format("lstore_log").option("path", live).load()
     stream = raw.select(
         F.col("ints")[0].alias("event_id"),

@@ -164,8 +164,9 @@ def test_poll_assigned_tiles_store_and_respects_cursor(store, spark):
     PER-SEGMENT cursors (ADVICE r11: never the shared scalar), and
     fail loudly on a stale assignment."""
     n = 3
+    gen, _asg = cg.rebalance(store, "ga", n)
     parts = [sorted(r.offset for r in
-                    cg.poll_assigned(spark, store, "ga", i, n)
+                    cg.poll_assigned(spark, store, "ga", i, generation=gen)
                     .select("offset").collect())
              for i in range(n)]
     flat = [o for p in parts for o in p]
@@ -189,7 +190,12 @@ def test_poll_assigned_tiles_store_and_respects_cursor(store, spark):
                 .select("offset").collect())
     assert a1 == list(range(100, 200)) + list(range(300, 400))
     # more instances than segments: empty relation, not an error
-    assert cg.poll_assigned(spark, store, "ga", 9, 10).count() == 0
+    gen10, _asg = cg.rebalance(store, "ga", 10)
+    assert cg.poll_assigned(spark, store, "ga", 9,
+                            generation=gen10).count() == 0
+    # a poll names its generation: there is no membership-free mode
+    with pytest.raises(ValueError, match="generation"):
+        cg.poll_assigned(spark, store, "ga", 0)
     # stale assignment (assigned file vanished) fails loudly
     import pytest as _pt
 

@@ -116,12 +116,12 @@ def test_udf_key_runs_from_any_cwd(tmp_path, sf_dir):
     assert out.splitlines()[-1].startswith("rows ")
 
 
-def test_write_segments_runs_from_any_session(tmp_path):
-    """``write_segments`` tasks encode through lstore_log's own module
-    code, so the sink ships the package before its job: a bare
-    ``SparkSession.builder`` session (no ``tune()``) on a driver whose
-    working directory is elsewhere, with no PYTHONPATH, still writes
-    segments that read back whole."""
+def test_lstore_log_write_runs_from_any_session(tmp_path):
+    """``df.write.format("lstore_log")`` tasks encode through
+    lstore_log's own module code, so ``register`` ships the package
+    before the write job: a bare ``SparkSession.builder`` session (no
+    ``tune()``) on a driver whose working directory is elsewhere, with
+    no PYTHONPATH, still writes segments that read back whole."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     seg = str(tmp_path / "segs")
     os.makedirs(seg)
@@ -133,11 +133,13 @@ def test_write_segments_runs_from_any_session(tmp_path):
         "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
         "spark.sparkContext.setLogLevel('ERROR')\n"
         "from lstore_spark.sources.lstore_log import (read_segment_file,\n"
-        "                                             write_segments)\n"
+        "                                             register)\n"
         "df = spark.createDataFrame(\n"
         "    [(i, [i, 2 * i], [b'k']) for i in range(5)],\n"
         "    'offset long, ints array<long>, blobs array<binary>')\n"
-        f"write_segments(df.repartition(1), {seg!r})\n"
+        "register(spark)\n"
+        "(df.repartition(1).write.format('lstore_log')\n"
+        f" .option('path', {seg!r}).mode('append').save())\n"
         f"print([r for p in sorted(glob.glob({seg!r} + '/*.seg'))\n"
         "       for r in read_segment_file(p)])\n"
         "spark.stop()\n",

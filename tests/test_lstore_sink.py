@@ -11,11 +11,11 @@ import time
 from pyspark.sql import functions as F
 
 
-def test_write_segments_distributed_roundtrip(spark, tmp_path):
-    """Every partition becomes one segment file written by its own task;
-    empty partitions write nothing; no tmp files survive; the parallel
-    read returns exactly the written records."""
-    from lstore_spark.sources.lstore_log import register, write_segments
+def test_native_writer_distributed_roundtrip(spark, tmp_path):
+    """Every partition becomes one segment file staged by its own task;
+    empty partitions write nothing; no staging files survive the commit;
+    the parallel read returns exactly the written records."""
+    from lstore_spark.sources.lstore_log import register
 
     df = (
         spark.range(500)
@@ -28,13 +28,13 @@ def test_write_segments_distributed_roundtrip(spark, tmp_path):
     )
     seg = tmp_path / "segs"
     seg.mkdir()
-    write_segments(df, str(seg))
+    register(spark)
+    df.write.format("lstore_log").option("path", str(seg)).mode("append").save()
 
     names = os.listdir(seg)
     assert 0 < len([f for f in names if f.endswith(".seg")]) <= 16
     assert not any(f.startswith(".") for f in names), "torn tmp file published"
 
-    register(spark)
     back = spark.read.format("lstore_log").option("path", str(seg)).load()
     rows = back.select("offset", "ints", "blobs").collect()
     assert sorted(r.offset for r in rows) == list(range(500))
@@ -56,6 +56,25 @@ def test_sink_source_roundtrip_no_collect(spark, sf_dir):
     g = sorted(map(tuple, got.select("event_id", "user_id", "event_type").collect()))
     w = sorted(map(tuple, want.collect()))
     assert g == w
+
+
+def test_stream_follow_publishes_whole_segments(spark, sf_dir):
+    """q_stream_follow appends each slice straight into its live store:
+    the writer's commit is the publish, so the key's scratch root holds
+    no staging dir and every live segment has its sidecar index (a
+    hand-renamed segment left its .idx behind in the staging dir)."""
+    from lstore_spark.catalog import scratch_dir
+    from lstore_spark.registry import QUERIES
+    from lstore_spark.sources.lstore_log import live_segments
+
+    assert QUERIES["q_stream_follow"](spark, sf_dir).count() > 0
+    root = scratch_dir("follow", sf_dir)[0] + f"_p{os.getpid()}"
+    assert not [f for f in os.listdir(root) if f.startswith("stage")]
+    live = os.path.join(root, "live")
+    segs = live_segments(live)
+    assert segs
+    for f in segs:
+        assert os.path.exists(os.path.join(live, f[:-4] + ".idx")), f
 
 
 def test_stream_follow_multibatch_exactly_once(spark, tmp_path):
@@ -370,12 +389,11 @@ def test_write_segment_rejects_null_fields_loudly(spark, tmp_path):
     """review r13: a NULL int or blob used to die rows deep inside
     struct.pack with a context-free TypeError (the shape a NULL-ts
     event reaches the sink as) — every writer must name the record and
-    the no-NULL-encoding contract instead: write_segment, the
-    distributed write_segments and df.write.format("lstore_log")."""
+    the no-NULL-encoding contract instead: write_segment and
+    df.write.format("lstore_log")."""
     import pytest
 
-    from lstore_spark.sources.lstore_log import (register, write_segment,
-                                                 write_segments)
+    from lstore_spark.sources.lstore_log import register, write_segment
 
     p = str(tmp_path / "n.seg")
     bads = ([(0, [1, None], [b"k"])],
@@ -388,10 +406,7 @@ def test_write_segment_rejects_null_fields_loudly(spark, tmp_path):
     for i, bad in enumerate(bads):
         df = spark.createDataFrame(
             bad, "offset long, ints array<long>, blobs array<binary>")
-        (tmp_path / f"ws{i}").mkdir()
         (tmp_path / f"ds{i}").mkdir()
-        with pytest.raises(Exception, match="NULL ints/blobs"):
-            write_segments(df.repartition(1), str(tmp_path / f"ws{i}"))
         with pytest.raises(Exception, match="NULL ints/blobs"):
             (df.write.format("lstore_log")
              .option("path", str(tmp_path / f"ds{i}")).mode("append").save())
@@ -487,39 +502,6 @@ def test_republish_never_pairs_new_index_with_old_segment(tmp_path):
     reader = LstoreLogReader({"path": str(tmp_path)})
     reader.pushFilters([EqualTo(("key",), "alpha")])
     assert [part.value for part in reader.partitions()] == [p]
-
-
-def test_sink_republish_is_idempotent(spark, tmp_path):
-    """Task-retry discipline end-to-end: writing the SAME partitioned
-    data into the store twice (a whole-stage retry, the worst case)
-    republishes every part-<pid>.seg by atomic rename — same file set,
-    same contents, no duplicates and no leftover tmp files."""
-    import glob
-    import hashlib
-    import os
-
-    from lstore_spark.catalog import default_sf_dir, load_table
-    from lstore_spark.sources.lstore_log import (events_as_segment_rows,
-                                                 write_segments)
-
-    sf_dir = default_sf_dir()
-    ev = (load_table(spark, sf_dir, "events")
-          .filter(F.col("event_id") < 500))
-    shaped = (events_as_segment_rows(ev)
-              .repartitionByRange(3, "offset").sortWithinPartitions("offset"))
-    out = str(tmp_path / "segs")
-    os.makedirs(out)
-
-    def snapshot():
-        return {os.path.basename(p): hashlib.md5(open(p, "rb").read()).hexdigest()
-                for p in glob.glob(out + "/*.seg")}
-
-    write_segments(shaped, out)
-    first = snapshot()
-    write_segments(shaped, out)  # the "retry"
-    second = snapshot()
-    assert first == second and len(first) == 3
-    assert not glob.glob(out + "/.*tmp*"), "leaked tmp files"
 
 
 def test_torn_segment_exhaustive_every_byte(tmp_path):
@@ -666,9 +648,9 @@ def test_native_writer_roundtrip_and_overwrite(spark, sf_dir, tmp_path):
 
 
 def test_native_writer_failed_job_publishes_nothing(spark, sf_dir, tmp_path):
-    """Job-level atomicity (what the two-phase commit buys over the
-    task-publishing write_segments path): a job with one failing
-    partition must leave ZERO new .seg files — not a partial store."""
+    """Job-level atomicity (what the two-phase commit buys over a
+    per-task publish): a job with one failing partition must leave ZERO
+    new .seg files — not a partial store."""
     import os
 
     import pytest
@@ -919,7 +901,7 @@ def test_overwrite_commit_publishes_before_delete(tmp_path, monkeypatch):
     os.makedirs(d)
     L.write_segment(os.path.join(d, "part-old.seg"), [(1, [1], [b"k"])])
 
-    def boom(messages):
+    def boom(*_args):
         raise RuntimeError("publish crashed")
 
     w = L.LstoreLogWriter({"path": d}, overwrite=True)
@@ -1026,49 +1008,6 @@ def test_corrupt_manifest_fails_loudly_never_narrows(spark, tmp_path):
     assert manifest_segments(d, v) == ["part-00000.seg", "part-00001.seg"]
 
 
-def test_closure_and_datasource_serializers_byte_identical(spark, tmp_path):
-    """write_segments (each task publishes its own segment) and
-    df.write.format("lstore_log") (the driver publishes the whole job)
-    differ only in their publish policy; both encode through
-    _stage_partition and the one segment encoder.  Identical rows must
-    produce byte-identical segment files and identical key-index
-    sidecars through BOTH paths (review r10)."""
-    import json
-
-    from lstore_spark.sources.lstore_log import register, write_segments
-
-    df = (
-        spark.range(64)
-        .select(
-            F.col("id").alias("offset"),
-            F.array(F.col("id"), F.col("id") * 3, F.lit(7)).alias("ints"),
-            F.array(
-                F.encode(F.concat(F.lit("k"), (F.col("id") % 5).cast("string")),
-                         "UTF-8"),
-                F.encode(F.col("id").cast("string"), "UTF-8"),
-            ).alias("blobs"),
-        )
-        .coalesce(1)  # one partition, stable row order from range()
-    )
-    a, b = tmp_path / "closure", tmp_path / "datasource"
-    a.mkdir(), b.mkdir()
-    write_segments(df, str(a))
-    register(spark)
-    df.write.format("lstore_log").option("path", str(b)).mode("append").save()
-
-    seg_a = [f for f in os.listdir(a) if f.endswith(".seg")]
-    seg_b = [f for f in os.listdir(b) if f.endswith(".seg")]
-    assert len(seg_a) == 1 and len(seg_b) == 1
-    bytes_a = (a / seg_a[0]).read_bytes()
-    bytes_b = (b / seg_b[0]).read_bytes()
-    assert bytes_a == bytes_b, (
-        "segment serializers drifted: closure and DataSource paths "
-        "produced different bytes for identical rows")
-    idx_a = json.loads((a / (seg_a[0][:-4] + ".idx")).read_text())
-    idx_b = json.loads((b / (seg_b[0][:-4] + ".idx")).read_text())
-    assert idx_a == idx_b
-
-
 def test_parquet_bloom_options_actually_write_blooms(spark, tmp_path):
     """q_sink_parquet claims parquet bloom filters (the pbloom-index
     analog).  This runtime's parquet-hadoop 1.16 SILENTLY ignores the
@@ -1106,17 +1045,13 @@ def test_negative_offsets_rejected_at_every_write_path(spark, tmp_path):
     loudly instead of producing a segment that loses rows on read."""
     import pytest
 
-    from lstore_spark.sources.lstore_log import (register, write_segment,
-                                                 write_segments)
+    from lstore_spark.sources.lstore_log import register, write_segment
 
     with pytest.raises(ValueError, match="offset -1"):
         write_segment(str(tmp_path / "a.seg"), [(-1, [1], [b"x"])])
     df = spark.createDataFrame(
         [(-5, [1], [b"x"])], "offset long, ints array<long>, blobs array<binary>")
-    (tmp_path / "d1").mkdir()
     (tmp_path / "d2").mkdir()
-    with pytest.raises(Exception, match="offset -5"):
-        write_segments(df.repartition(1), str(tmp_path / "d1"))
     register(spark)
     with pytest.raises(Exception, match="offset -5"):
         (df.write.format("lstore_log")
