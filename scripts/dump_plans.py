@@ -6,9 +6,13 @@ Writes <out_dir>/<key>_<suffix>.txt for every given key (all registered
 keys when none are given), planned at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1).  `lstore_spark` is imported from $PYTHONPATH
 when it is set there, else from this script's checkout; so one copy of
-the script dumps any tree:
+the script dumps any tree, run from one directory outside every tree
+(Python workers put their cwd first on `sys.path`, so from inside a
+checkout the tasks of a key that runs jobs while planning import that
+checkout's package, whatever $PYTHONPATH says):
 
-    PYTHONPATH=<tree> python scripts/dump_plans.py <out_dir> <suffix>
+    cd <neutral dir>
+    PYTHONPATH=<tree> python <checkout>/scripts/dump_plans.py <out_dir> <suffix>
 
 Normalised: expression ids (`#123`, `#123L`), `plan_id=`, RDD ids
 (`MapPartitionsRDD[23]`) and the per-process `_p<pid>` suffix of
