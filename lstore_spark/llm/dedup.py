@@ -189,7 +189,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
 
 def lsh_candidate_pairs(sig: DataFrame,
                         min_est_jaccard: float = 0.0,
-                        max_bucket_width: int | None = 64) -> DataFrame:
+                        max_bucket_width: int = 64) -> DataFrame:
     """LSH banding over :func:`minhash_signatures` output (doc_id, mhs,
     bkts) → (id_a, id_b, est_jaccard).
 
@@ -234,15 +234,14 @@ def lsh_candidate_pairs(sig: DataFrame,
     deliberate: first-collision-inside-a-mega-bucket is itself a
     boilerplate signal, and re-deriving "first SURVIVING band" would
     reintroduce the per-pair shuffle the first-band trick exists to
-    avoid.  Pass ``None`` to disable (test/debug only)."""
+    avoid."""
     banded = sig.select("doc_id", "mhs", "bkts",
                         F.posexplode("bkts").alias("band", "bkt"))
-    if max_bucket_width is not None:
-        hot = pin(banded.groupBy("band", "bkt")
-                  .agg(F.count(F.lit(1)).alias("bw"))
-                  .filter(F.col("bw") > max_bucket_width)
-                  .select("band", "bkt"))
-        banded = banded.join(F.broadcast(hot), ["band", "bkt"], "left_anti")
+    hot = pin(banded.groupBy("band", "bkt")
+              .agg(F.count(F.lit(1)).alias("bw"))
+              .filter(F.col("bw") > max_bucket_width)
+              .select("band", "bkt"))
+    banded = banded.join(F.broadcast(hot), ["band", "bkt"], "left_anti")
 
     a = banded.select(F.col("doc_id").alias("id_a"),
                       F.col("mhs").alias("mhs_a"),
@@ -1346,14 +1345,6 @@ _SUBSTR_W = 8  # rolling-window width in tokens (Lee et al. use 50 BPE
 # tokens at corpus scale; 8 fits the short synthetic fixtures while
 # exercising the identical plan shape)
 
-# Corpus-size gate for the single-exchange span-runs form (r14): the
-# measured crossover sits between 5k docs (sf0.1 — two-exchange wins,
-# 1.12 s vs 1.21 s) and 500k docs (the 100x fixture — span-runs wins
-# every interleaved pair, 76.6 s vs 80.8 s median), and the saved
-# exchange only grows relatively more expensive with cluster scale
-# (guide 2.2).  scripts/ab_substring_r14.json records both readings.
-_SPAN_RUNS_MIN_DOCS = 100_000
-
 
 def _span_windows(w: int):
     """Rolling w-token windows of a tokenized doc (column expr over
@@ -1393,104 +1384,46 @@ def _span_runs(occ_arrays: DataFrame) -> DataFrame:
                    element_at(sps, element_at(bs, j)) AS span,
                    coalesce(try_element_at(bs, j + 1), size(sps) + 1)
                      - element_at(bs, j) AS cnt)))"""
+    # sort_array, not array_sort: array_sort plans an interpreted
+    # comparator lambda per element pair (1.35 s vs 1.16 s median at
+    # sf0.1, same result; spans are never NULL, so the NULL order the
+    # two differ in cannot show)
     return (occ_arrays
-            .select("doc_id", F.expr("array_sort(spans)").alias("sps"))
+            .select("doc_id", F.sort_array("spans").alias("sps"))
             .select("doc_id", "sps", F.expr(bs).alias("bs"))
             .select("doc_id", F.explode(F.expr(runs)).alias("r"))
             .select("doc_id", F.col("r.span").alias("span"),
                     F.col("r.cnt").alias("cnt")))
 
 
-def substring_dedup(docs: DataFrame, w: int = 50,
-                    hashed_keys: bool = True,
-                    broadcast_survivors: bool = True,
-                    span_runs: bool = False) -> DataFrame:
-    """Cross-document repeated-span detection (Lee et al. 2022) with the
-    production parameters: ``w`` is the window width in tokens (their
-    paper uses 50 BPE tokens; the oracle exhibit key fixes 8 for the
-    short fixtures), and ``hashed_keys=True`` runs the 100 TB shuffle
-    shape — two passes over the corpus:
+def substring_dedup(docs: DataFrame, w: int = 50) -> DataFrame:
+    """Cross-document repeated-span detection (Lee et al. 2022): every
+    ``w``-token window of every doc of ``docs`` (doc_id, text), grouped
+    by span → (span, n_docs, n_occ) for the spans seen in more than one
+    doc.  ``w`` is the window width in tokens (their paper uses 50 BPE
+    tokens; the oracle exhibit key fixes 8 for the short fixtures).
 
-      pass 1  emit (unhex(md5(span)), doc_id) only — the 16-byte binary
-              hash replaces the ~w·6-byte raw span in every shuffle row
-              (~3× narrower at w=8, ~19× at w=50 on ~5-char tokens) —
-              and aggregate doc/occurrence counts per hash with
-              map-side partials; spans seen in >1 doc survive.
-      pass 2  re-scan and re-derive the TEXT from a surviving
-              occurrence: the (typically tiny) survivor counts broadcast
-              against the re-emitted span stream, so the only wide rows
-              that ever shuffle are the survivors' (min-span per hash —
-              deterministic, and within a hash all spans are equal text
-              anyway modulo md5 collision ≈ 2⁻¹²⁸·pairs).
-
-    ``broadcast_survivors=False`` drops the broadcast hint for corpora
-    where even the survivor set outgrows executor memory — AQE then
-    plans a shuffle join keyed on the same 16-byte hash.
-
-    When to use which (measured, BASELINE.md r7): the two-pass shape
-    pays a second corpus scan to keep text out of the count shuffle, so
-    it wins when the survivor fraction is small — the realistic web
-    corpus case (Lee et al. report ~1–5% duplicated spans) — and LOSES
-    when most spans survive (the adversarial 100×-replicated fixture,
-    where every span has 99 twins, measures hashed 107 s vs raw 55 s:
-    pass 2 degenerates into re-doing pass 1 with text attached).  A
-    pipeline that expects heavy duplication should run the raw-keyed
-    single pass; ``hashed_keys=True`` is the default because real
-    corpora sit in the sparse-survivor regime.
-
-    Output matches the raw-keyed shape exactly: (span, n_docs, n_occ)
-    with n_docs > 1 — equivalence is pytest-asserted on the fixtures."""
-    occ = (docs.select("doc_id", F.expr(_SPARK_TOKENS).alias("ts"))
-           .select("doc_id", F.explode(_span_windows(w)).alias("span")))
-    if not hashed_keys:
-        # r14 (VERDICT r13 #3): ``span_runs=True`` dedups+counts spans
-        # per doc BEFORE the explode (_span_runs), turning the
-        # distinct-aggregate's two raw-span exchanges into ONE — see
-        # the helper's docstring.  Output identical (oracle hash-green
-        # at all three SFs; pytest-pinned equal to the two-exchange
-        # form).  Measured crossover (scripts/ab_substring_r14.json,
-        # interleaved): at sf0.1 the interpreted per-doc sort/boundary
-        # HOFs cost MORE than the tiny local second exchange saves
-        # (1.21 s vs 1.12 s median), at the 100× fixture the saved
-        # shuffle wins every interleaved pair (76.6 s vs 80.8 s median,
-        # min 67.8 vs 75.3) — and shuffles only get relatively more
-        # expensive with cluster scale (guide §2.2), so callers gate on
-        # corpus size (the fits_broadcast discipline), not a constant.
-        if span_runs:
-            # r14 session 2 postscript: an Arrow span generator
-            # (mapInArrow + pyarrow split/join/group_by) was built,
-            # bit-parity-verified and briefly shipped here — it beat
-            # this HOF form 2× while BOTH ran on the under-split
-            # 2-partition text scan, but once catalog.spread_rows fixed
-            # the parallelism the HOF form won decisively (7.8 s vs
-            # 20.5 s at 100×, interleaved): interpreted HOFs
-            # parallelize perfectly, the Python worker round-trip does
-            # not.  Measurements in scripts/
-            # ab_substring_arrow_r14.json; callers spread the doc scan.
-            runs = _span_runs(
-                docs.select("doc_id", F.expr(_SPARK_TOKENS).alias("ts"))
-                .select("doc_id", _span_windows(w).alias("spans")))
-            return (runs.groupBy("span")
-                    .agg(F.count(F.lit(1)).alias("n_docs"),
-                         F.sum("cnt").alias("n_occ"))
-                    .filter(F.col("n_docs") > 1))
-        return (occ.groupBy("span")
-                .agg(F.count_distinct("doc_id").alias("n_docs"),
-                     F.count(F.lit(1)).alias("n_occ"))
-                .filter(F.col("n_docs") > 1))
-    h16 = F.unhex(F.md5("span")).alias("h")
-    counts = (occ.select(h16, "doc_id")
-              .groupBy("h")
-              .agg(F.count_distinct("doc_id").alias("n_docs"),
-                   F.count(F.lit(1)).alias("n_occ"))
-              .filter(F.col("n_docs") > 1))
-    if broadcast_survivors:
-        counts = F.broadcast(counts)
-    return (occ.select(h16, "span")
-            .join(counts, "h")
-            .groupBy("h", "n_docs", "n_occ")
-            .agg(F.min("span").alias("span"))
-            .select("span", "n_docs", "n_occ"))
+    One shape, one exchange: :func:`_span_runs` counts each doc's
+    distinct spans inside the doc row, so the only shuffle is the
+    group-by on span.  Measured against the two-exchange distinct
+    aggregate and a hashed two-pass shape (16-byte md5 keys in the
+    count shuffle, survivor text re-derived in a second scan) on a
+    4-core host, it was the fastest on the 10× and 100× copies at w=8
+    and w=50, and on the ~5 %-duplicated ``make_realdup.py`` corpus the
+    hashed shape was built for; on the sf0.1 and sf0.01 fixtures its
+    gap to the two-exchange form sits within run-to-run spread
+    (CHANGES.md records the timings).  The per-doc span work is JVM
+    array HOFs: an Arrow span generator lost to them once the doc scan
+    was spread (scripts/ab_substring_arrow_r14.json), so read the
+    corpus through ``catalog.load_documents`` — the compressed text
+    scan under-splits and leaves the span work a few tasks wide."""
+    runs = _span_runs(
+        docs.select("doc_id", F.expr(_SPARK_TOKENS).alias("ts"))
+        .select("doc_id", _span_windows(w).alias("spans")))
+    return (runs.groupBy("span")
+            .agg(F.count(F.lit(1)).alias("n_docs"),
+                 F.sum("cnt").alias("n_occ"))
+            .filter(F.col("n_docs") > 1))
 
 
 @query(
@@ -1518,29 +1451,11 @@ def q_llm_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     with its document- and occurrence-counts (the spans a pipeline then
     cuts out of the training text).
 
-    Scale: one bounded explode (≤ L−w+1 windows per doc) and ONE shuffle
-    keyed on the span; the distinct-doc count partial-aggregates
-    map-side.  The raw span is kept as the shuffle key HERE so the
-    DuckDB oracle certifies values, not just counts; the production
-    shape — ``substring_dedup(docs, w=50, hashed_keys=True)`` — keys
-    the shuffle on a 16-byte md5 instead and re-derives the text from a
-    surviving occurrence in a second pass (output-equivalence is
-    pytest-asserted, and the w=50 hashed shape carries its own 100×
-    growth-curve entry in BASELINE.md).
-
-    r14: past _SPAN_RUNS_MIN_DOCS docs the raw form switches to the single-exchange
-    span-runs shape (per-doc dedup+count before the explode) — a
-    footer-stats plan gate like fits_broadcast, crossover measured in
-    scripts/ab_substring_r14.json (see substring_dedup).  r14 session 2:
-    the doc scan spreads by ROW count first (catalog.spread_rows — the
-    compressed-text scan under-splits, leaving the per-doc span work
-    2-wide at the 100× fixture; with the spread the span-runs form
-    reads 7.8 s there vs 66.5 s unspread, scripts/ab_repart_r14.json).
-    No-op below ~64k docs, so the sf0.1 bench plan is unchanged."""
-    docs = load_documents(spark, sf_dir)
-    return substring_dedup(docs, w=_SUBSTR_W, hashed_keys=False,
-                           span_runs=table_rows(sf_dir, "documents")
-                           >= _SPAN_RUNS_MIN_DOCS)
+    Runs :func:`substring_dedup` at the fixture width: one bounded
+    per-doc span pass and ONE shuffle keyed on the raw span, so the
+    DuckDB oracle certifies the span text, not just counts.  The doc
+    scan spreads by row count (``load_documents``)."""
+    return substring_dedup(load_documents(spark, sf_dir), w=_SUBSTR_W)
 
 
 @query(

@@ -7,10 +7,11 @@ in a way that is verifiable locally and decisive at cluster scale:
   single task receives a pathological key's entire row set.  (AQE's skew
   split handles moderate skew at runtime; salting is the deterministic
   fallback for extreme single-key skew, e.g. one user with 10^9 events.)
-- ``write_events_partitioned`` / ``read_events_partitioned`` — the lstore
-  retention/segment model at scale: date-partitioned parquet, sorted
-  within files, bloom-filtered on the point-lookup column.  Partition
-  pruning == dropping whole segments; row-group stats == block skipping.
+- ``write_events_partitioned`` — the lstore retention/segment model at
+  scale: date-partitioned parquet (read back with ``spark.read.parquet``),
+  sorted within files, bloom-filtered on the point-lookup column.
+  Partition pruning == dropping whole segments; row-group stats == block
+  skipping.  ``compact_store`` rewrites it, ``purge_before`` expires it.
 - ``write_bucketed_pair`` — co-located bucketed tables for the recurring
   fact⋈fact join (lineitem⋈orders): both sides pre-hashed into the same
   bucket layout so the join compiles with NO shuffle exchange.
@@ -92,49 +93,6 @@ def write_events_partitioned(events: DataFrame, path: str) -> None:
     )
 
 
-def read_events_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def compact_partition(spark: SparkSession, path: str, day: str,
-                      target_files: int = 1) -> int:
-    """Compact one day-partition's small files into ``target_files``
-    ts-sorted files — the lstore indexer's raw→indexed segment compaction
-    (many small appends become one scan-efficient segment with tight
-    row-group stats).  Returns the resulting file count.
-
-    Swap discipline (ADVICE r1): the compacted files are written to a
-    SIBLING dir inside the table root — same filesystem, so the two
-    ``os.rename`` calls below are true renames, never copies — and the
-    partition is absent only between those two renames (a metadata-op
-    window, not a data-copy window).  A concurrent reader can still
-    observe that gap; full snapshot isolation needs a table format with
-    atomic commits (Iceberg/Delta), which this layout deliberately
-    predates — it mirrors lstore's single-writer segment swap."""
-    import shutil
-
-    base = path.removeprefix("file:")
-    part = os.path.join(base, f"day={day}")
-    df = spark.read.parquet(part)
-    tmp = os.path.join(base, f".compact_tmp_day={day}")
-    old = os.path.join(base, f".compact_old_day={day}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    (df.repartition(target_files)
-       .sortWithinPartitions("ts")
-       .write.mode("overwrite")
-       # compaction must PRESERVE the store's bloom filters (review
-       # r11): a plain rewrite silently stripped the pbloom analog,
-       # costing point predicates their block skipping post-OPTIMIZE
-       .option("parquet.bloom.filter.enabled", "true")
-       .option("parquet.bloom.filter.adaptive.enabled", "true")
-       .parquet(tmp))
-    os.rename(part, old)
-    os.rename(tmp, part)
-    shutil.rmtree(old)
-    return len([f for f in os.listdir(part) if f.endswith(".parquet")])
-
-
 def plan_compaction(path: str, target_bytes: int = 128 << 20) -> dict[str, int]:
     """Bin-packing plan for a date-partitioned store: per day-partition,
     the target file count = ceil(bytes / target_bytes) (never 0).  Pure
@@ -160,8 +118,7 @@ def compact_store(spark: SparkSession, path: str,
     """OPTIMIZE-style whole-store compaction (the lstore indexer's
     raw→indexed rewrite, VERDICT r4 item 4): bin-pack every day
     partition's small files into ~``target_bytes`` outputs in ONE shuffle
-    job — unlike :func:`compact_partition`, cost does not grow a Spark
-    job per partition.
+    job — cost does not grow a Spark job per partition.
 
     Mechanics: the plan above fixes a per-day target count n_d; each row
     gets a deterministic salt in [0, n_d) (xxhash64 of event_id — stable
@@ -190,7 +147,8 @@ def compact_store(spark: SparkSession, path: str,
         .drop("__salt")
         .sortWithinPartitions("ts")
         .write.mode("overwrite")
-        # same bloom preservation as compact_partition (review r11)
+        # keep the store's bloom filters: a plain rewrite strips the
+        # pbloom analog, costing point predicates their block skipping
         .option("parquet.bloom.filter.enabled", "true")
         .option("parquet.bloom.filter.adaptive.enabled", "true")
         .partitionBy("day")

@@ -116,7 +116,7 @@ PROBES: list[tuple[str, tuple[str, ...], int]] = [
     ("q_llm_dedup_semantic", STD, 2),
     ("semantic_adaptive", STD, 2),
     ("q_llm_dedup_substring", STD, 2),
-    ("substring_w50_hashed", STD, 2),
+    ("substring_w50", STD, 2),
     ("q_llm_dedup_simhash", STD, 2),
     ("q_llm_sim_cosine_topk", STD, 2),
     ("q_llm_sim_hamming_topk", STD, 2),
@@ -152,18 +152,17 @@ def _semantic_adaptive(spark, sf_dir):
                           hierarchical=True, max_cluster_width=1024)
 
 
-def _substring_w50_hashed(spark, sf_dir):
-    """q_llm_dedup_substring at its production parameters: 50-token
-    windows keyed by 16-byte md5 in the counting shuffle."""
-    from lstore_spark.catalog import load_table
+def _substring_w50(spark, sf_dir):
+    """q_llm_dedup_substring at the production window width: 50
+    tokens, the corpus read through the key's own loader."""
+    from lstore_spark.catalog import load_documents
     from lstore_spark.llm.dedup import substring_dedup
 
-    return substring_dedup(load_table(spark, sf_dir, "documents"),
-                           w=50, hashed_keys=True)
+    return substring_dedup(load_documents(spark, sf_dir), w=50)
 
 
 RUNNERS = {"semantic_adaptive": _semantic_adaptive,
-           "substring_w50_hashed": _substring_w50_hashed}
+           "substring_w50": _substring_w50}
 
 
 class arm_env:

@@ -1,14 +1,16 @@
 """Reference forms that the parity tests compare production operators
 against.  Each is the interpreted (JVM HOF / explode + groupBy) form of
-an operator whose product code is a vectorized pandas-UDF path; they
-live here, not in ``lstore_spark``, because no query runs them."""
+an operator whose product code takes another path (a vectorized
+pandas-UDF, or a per-row pre-aggregation); they live here, not in
+``lstore_spark``, because no query runs them."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from lstore_spark.llm.dedup import _BANDS, _MINHASH_K, _MINHASH_R
+from lstore_spark.llm.dedup import (_BANDS, _MINHASH_K, _MINHASH_R,
+                                    _span_windows)
 from lstore_spark.llm.similarity import cosine_with_norms
 from lstore_spark.llm.text import _SPARK_TOKENS
 from lstore_spark.numerics import round9_dec
@@ -127,3 +129,16 @@ def char_entropy_exploded(docs: DataFrame) -> DataFrame:
                  - F.col("s").cast("double") / F.col("n"),
                  6) + F.lit(0.0)).alias("char_entropy_bits"),
     )
+
+
+def substring_dedup_two_exchange(docs: DataFrame, w: int) -> DataFrame:
+    """``substring_dedup`` as explode + COUNT(DISTINCT doc_id): every
+    w-token window becomes one (doc_id, span) row, and Spark's
+    distinct-aggregate rewrite plans two exchanges keyed on the raw
+    span → (span, n_docs, n_occ) with n_docs > 1."""
+    return (docs.select("doc_id", F.expr(_SPARK_TOKENS).alias("ts"))
+            .select("doc_id", F.explode(_span_windows(w)).alias("span"))
+            .groupBy("span")
+            .agg(F.count_distinct("doc_id").alias("n_docs"),
+                 F.count(F.lit(1)).alias("n_occ"))
+            .filter(F.col("n_docs") > 1))

@@ -191,3 +191,22 @@ def test_scale_probe_raises_when_arms_disagree():
     with pytest.raises(RuntimeError, match="arms disagree"):
         agreed_fingerprint("q_k", "sf0.1", {"std": [same, {"n": 4,
                                                            "h": "42"}]})
+
+
+def test_scale_ledger_rows_resolve(spark, sf_dir):
+    """Every scripts/scale_probe.py PROBES row names a registered key or
+    a RUNNERS row, and every RUNNERS row builds a DataFrame on the
+    fixture (no action forced): a runner left passing a removed keyword
+    fails here, not only when someone runs the ledger."""
+    import sys
+
+    from pyspark.sql import DataFrame
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    from lstore_spark.registry import QUERIES
+    from scripts.scale_probe import PROBES, RUNNERS
+
+    unknown = [k for k, _arms, _reps in PROBES
+               if k not in QUERIES and k not in RUNNERS]
+    assert not unknown, f"PROBES rows with no key or runner: {unknown}"
+    for name, fn in RUNNERS.items():
+        assert isinstance(fn(spark, sf_dir), DataFrame), name

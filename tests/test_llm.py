@@ -485,9 +485,10 @@ def test_lsh_hot_bucket_cap_bounds_candidates(spark, sf_dir):
     found = {(r.id_a, r.id_b)
              for r in capped.filter(F.col("est_jaccard") >= 0.5).collect()}
     assert (base[0].doc_id, 10_000 + base[0].doc_id) in found
-    # and the cap is load-bearing: uncapped, the same corpus emits the
-    # quadratic bucket (999*1000/2 pairs from the boilerplate alone)
-    n_uncapped = lsh_candidate_pairs(sig, max_bucket_width=None).count()
+    # and the cap is load-bearing: with a cap no bucket can exceed (the
+    # corpus size), the same corpus emits the quadratic bucket
+    # (999*1000/2 pairs from the boilerplate alone)
+    n_uncapped = lsh_candidate_pairs(sig, max_bucket_width=n_docs).count()
     assert n_uncapped >= 999 * 1000 // 2
     assert n_capped < n_uncapped // 100
 
@@ -614,44 +615,25 @@ def test_corpus_shard_balanced_and_stable(spark, sf_dir):
     assert max(widths.values()) <= 3 * mean
 
 
-def test_substring_dedup_hashed_keys_equal_raw(spark, sf_dir):
-    """VERDICT r6 #5: the production hashed-span-key shape must produce
-    the exact output of the raw-string-keyed oracle exhibit, at both
-    the fixture width (8) and the Lee-et-al production width (50), and
-    regardless of the broadcast-vs-shuffle survivor join."""
-    from lstore_spark.catalog import load_table
-    from lstore_spark.llm.dedup import substring_dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    by_w = {}
-    for w in (8, 50):
-        raw = substring_dedup(docs, w=w, hashed_keys=False)
-        hashed = substring_dedup(docs, w=w, hashed_keys=True)
-        a = sorted(map(tuple, raw.collect()))
-        by_w[w] = sorted(map(tuple, hashed.collect()))
-        assert a == by_w[w], f"w={w}: hashed-key output diverges from raw"
-        assert len(a) > 0, f"w={w}: no duplicated spans in fixture"
-    smj = substring_dedup(docs, w=8, hashed_keys=True,
-                          broadcast_survivors=False)
-    assert sorted(map(tuple, smj.collect())) == by_w[8]
-
-
 def test_substring_dedup_span_runs_equal_two_exchange(spark, sf_dir):
-    """r14 (VERDICT r13 #3): the single-exchange span-runs form —
-    per-doc sort + run-length dedup BEFORE the explode — must produce
-    the exact output of the two-exchange distinct-aggregate form, at
-    the fixture width AND on planted degenerates (empty text, <w-token
-    docs, NULL text, in-doc repeated spans, multi-doc shared spans),
-    and its plan must carry exactly ONE shuffle exchange."""
+    """substring_dedup's single-exchange span-runs form — per-doc sort +
+    run-length dedup BEFORE the explode — must produce the exact output
+    of the two-exchange distinct-aggregate reference form, at the
+    fixture width (8) and the Lee-et-al production width (50), AND on
+    planted degenerates (empty text, <w-token docs, NULL text, in-doc
+    repeated spans, multi-doc shared spans), and its plan must carry
+    exactly ONE shuffle exchange."""
     from lstore_spark.catalog import load_table
     from lstore_spark.llm.dedup import substring_dedup
+    from tests.reference_forms import substring_dedup_two_exchange
 
     docs = load_table(spark, sf_dir, "documents")
-    raw = substring_dedup(docs, w=8, hashed_keys=False, span_runs=False)
-    runs = substring_dedup(docs, w=8, hashed_keys=False, span_runs=True)
-    a = sorted(map(tuple, raw.collect()))
-    assert a == sorted(map(tuple, runs.collect()))
-    assert len(a) > 0
+    for w in (8, 50):
+        a = sorted(map(tuple, substring_dedup_two_exchange(docs, w)
+                       .collect()))
+        assert a == sorted(map(tuple, substring_dedup(docs, w=w)
+                               .collect())), f"w={w}: outputs diverge"
+        assert len(a) > 0, f"w={w}: no duplicated spans in fixture"
 
     rep = "x y " * 6          # in-doc repeat: spans recur WITHIN a doc
     uni = ("żółć 日本語 🎉 mixé " * 3).strip()  # multibyte UTF-8 tokens
@@ -665,39 +647,16 @@ def test_substring_dedup_span_runs_equal_two_exchange(spark, sf_dir):
          (8, "  pad   " + uni + "  "),   # multi-space runs + multibyte
          (9, "  pad   " + uni + "  ")],
         "doc_id long, text string")
-    p_raw = substring_dedup(planted, w=8, hashed_keys=False,
-                            span_runs=False)
-    p_runs = substring_dedup(planted, w=8, hashed_keys=False,
-                             span_runs=True)
-    pa = sorted(map(tuple, p_raw.collect()))
-    assert pa == sorted(map(tuple, p_runs.collect()))
+    pa = sorted(map(tuple, substring_dedup_two_exchange(planted, 8)
+                    .collect()))
+    assert pa == sorted(map(tuple, substring_dedup(planted, w=8).collect()))
     assert any(r[2] > r[1] for r in pa), "planted in-doc repeats missing"
-
-    # the multibyte/multi-space planted docs above also pin the
-    # spread_rows-era path (spread is a row-count no-op at fixture
-    # scale, so the plan-shape assert below still sees ONE exchange)
 
     # fresh (unexecuted) frame: a collected AQE frame's plan string
     # prints initial+final sections and double-counts the exchange
-    fresh = substring_dedup(docs, w=8, hashed_keys=False, span_runs=True)
+    fresh = substring_dedup(docs, w=8)
     plan = fresh._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_substring_dedup_pass1_shuffles_no_text(spark, sf_dir):
-    """The point of the hashed shape: no raw span string may appear in
-    pass 1's exchange — only the 16-byte hash and doc_id go over the
-    wire; span text is confined to the survivor-joined second pass."""
-    from lstore_spark.catalog import load_table
-    from lstore_spark.llm.dedup import substring_dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    plan = substring_dedup(docs, w=50, hashed_keys=True)._jdf \
-        .queryExecution().executedPlan().toString()
-    # the count aggregate must be keyed on the md5, not the span
-    agg_lines = [ln for ln in plan.splitlines()
-                 if "count(distinct doc_id" in ln]
-    assert agg_lines and all("span" not in ln for ln in agg_lines), plan
 
 
 def test_quantile_sketch_error_bounded_by_bucket_width(spark, sf_dir):
@@ -1949,23 +1908,30 @@ def test_minhash_oracle_murmur3_sql_matches_jvm(spark):
         .select("t", F.hash("t").alias("h")).collect()}
     assert rows == ref
 
-    # int chain: hash(a, b, c) = per-field hashInt folding
+    # int chain: hash(a, b, c) = per-field hashInt folding, composed as
+    # nested SELECTs over short column refs (the _minhash_oracle shape):
+    # nesting _mm3_hash_int calls as seeds replicates the argument text
+    # at every level (MBs of SQL, seconds per query)
     triples = [(0, 0, 0), (1, 2, 3), (-1, 2**31 - 1, 42),
                (123456789, -987654321, 7)]
-    q = ("SELECT " + _mm3_hash_int("CAST(((c %% 4294967296) + 4294967296)"
-         " %% 4294967296 AS UBIGINT)", _mm3_hash_int(
-             "CAST(((b %% 4294967296) + 4294967296) %% 4294967296 AS "
-             "UBIGINT)", _mm3_hash_int(
-                 "CAST(((a %% 4294967296) + 4294967296) %% 4294967296 "
-                 "AS UBIGINT)", "CAST(42 AS UBIGINT)")))
-         + " AS uh FROM probe").replace("%%", "%")
-    got = []
-    for a, b, c in triples:
-        con.execute("CREATE OR REPLACE TABLE probe AS SELECT "
-                    f"CAST({a} AS BIGINT) a, CAST({b} AS BIGINT) b, "
-                    f"CAST({c} AS BIGINT) c")
-        u = con.execute(q).fetchone()[0]
-        got.append(u - (1 << 32) if u >= (1 << 31) else u)
+    con.execute("CREATE OR REPLACE TABLE probe AS SELECT * FROM (VALUES "
+                + ", ".join(f"({i}, CAST({a} AS BIGINT), CAST({b} AS "
+                            f"BIGINT), CAST({c} AS BIGINT))"
+                            for i, (a, b, c) in enumerate(triples))
+                + ") v(i, a, b, c)")
+
+    def u32(c: str) -> str:
+        return (f"CAST((({c} % 4294967296) + 4294967296) % 4294967296 "
+                f"AS UBIGINT)")
+
+    q = (f"SELECT i, {u32('a')} AS ua, {u32('b')} AS ub, {u32('c')} AS uc "
+         f"FROM probe")
+    q = (f"SELECT i, {_mm3_hash_int('ua', 'CAST(42 AS UBIGINT)')} AS h1, "
+         f"ub, uc FROM ({q})")
+    q = f"SELECT i, {_mm3_hash_int('ub', 'h1')} AS h2, uc FROM ({q})"
+    q = f"SELECT i, {_mm3_hash_int('uc', 'h2')} AS uh FROM ({q}) ORDER BY i"
+    got = [u - (1 << 32) if u >= (1 << 31) else u
+           for _, u in con.execute(q).fetchall()]
     jref = [r.h for r in spark.createDataFrame(
         triples, "a int, b int, c int")
         .select(F.hash("a", "b", "c").alias("h")).collect()]

@@ -56,7 +56,7 @@ def test_partitioned_events_prune(spark, sf_dir, tmp_path):
     ev = load_table(spark, sf_dir, "events")
     out = str(tmp_path / "part")
     scale.write_events_partitioned(ev, out)
-    back = scale.read_events_partitioned(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == ev.count()
     pruned = back.filter(F.col("day") == "2024-01-05")
     plan = _plan(pruned)
@@ -74,23 +74,28 @@ def test_purge_before_drops_old_partitions(spark, sf_dir, tmp_path):
     pre_cutoff = ev.filter(F.col("ts").cast("date") < "2024-01-10").count()
     dropped = scale.purge_before(spark, out, "2024-01-10")
     assert dropped == 9  # 2024-01-01 .. 2024-01-09
-    back = scale.read_events_partitioned(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == total - pre_cutoff
     assert back.filter(F.col("day") < "2024-01-10").count() == 0
 
 
-def test_compact_partition_preserves_rows(spark, sf_dir, tmp_path):
+def test_compact_store_preserves_a_days_rows(spark, sf_dir, tmp_path):
+    """compact_store over the write_events_partitioned layout: one day's
+    rows (every column) are identical before and after, and the day
+    holds one file."""
     ev = load_table(spark, sf_dir, "events")
     out = str(tmp_path / "compact")
     scale.write_events_partitioned(ev, out)
     day = "2024-01-05"
-    before = scale.read_events_partitioned(spark, out).filter(
+    before = spark.read.parquet(out).filter(
         F.col("day") == day).drop("day").collect()
-    n_files = scale.compact_partition(spark, out, day, target_files=1)
-    assert n_files == 1
-    after = scale.read_events_partitioned(spark, out).filter(
+    compacted, _plan = scale.compact_store(spark, out)
+    part = os.path.join(compacted, f"day={day}")
+    assert len([f for f in os.listdir(part) if f.endswith(".parquet")]) == 1
+    after = spark.read.parquet(compacted).filter(
         F.col("day") == day).drop("day").collect()
-    assert sorted(map(tuple, before)) == sorted(map(tuple, after))
+    assert before and sorted(map(tuple, before)) == sorted(
+        map(tuple, after))
 
 
 def test_two_consumer_groups_independent_offsets(spark, sf_dir, tmp_path):
