@@ -330,7 +330,7 @@ def _pid_start_epoch(pid: int) -> float | None:
 
 
 def _reapable(path: str, pid: int) -> bool:
-    """A PID-suffixed scratch/warehouse dir is reapable when its owner
+    """A PID-suffixed scratch or staging dir is reapable when its owner
     is dead, or when the live process holding that PID started after
     the dir's last write (PID recycle — not the owner)."""
     if not _pid_alive(pid):
@@ -349,7 +349,7 @@ def _reap_dead_owners(parent: str, pattern) -> None:
     """THE dead-owner reaper: remove every entry of ``parent`` whose
     name matches ``pattern`` (group 1 = the owner's PID) and whose
     owner is dead or recycled (``_reapable``).  Serves the PID-scoped
-    scratch dirs, the build staging dirs and the warehouse tables."""
+    scratch dirs and the build staging dirs."""
     import shutil
 
     try:

@@ -17,8 +17,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..numerics import DEC, dsum9, sql_dsum9
 from ..registry import query
-from .similarity import (_norm, cosine, cosine_with_norms, evaluate_once,
-                         partitioned_topk)
+from .similarity import _norm, evaluate_once, partitioned_topk
 
 
 @query(
@@ -180,30 +179,18 @@ def q_llm_emb_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse-quantizer assignment: route every vector to its
     nearest centroid (built per label, exact-decimal means as in
     q_llm_emb_centroid).  This is the partition-routing step of an IVF
-    ANN index: at 100 TB the centroid table is tiny (n_lists rows) and
-    BROADCASTS across the corpus scan; the argmax is a map-side-combined
-    ``max_by`` per vector — one narrow shuffle of (vec_id, best) rows,
-    nothing quadratic.  Tie-break: lowest candidate label."""
+    ANN index: at 100 TB the centroid table is tiny (n_lists rows), so
+    ``assign_nearest`` collects it and the argmax is a zero-exchange
+    projection over the corpus scan.  Tie-break: lowest candidate
+    label.  Centroids accumulate over the raw corpus (NULL-skipping
+    sums in both engines); only well-formed vectors get assigned (the
+    wf_vectors/vec-CTE contract)."""
     em = load_table(spark, sf_dir, "embeddings")
-    cvecs = (centroid_vectors(em.select("label", "embedding"), "label")
-             .select(F.col("label").alias("cand_label"), "cvec"))
-    # centroids accumulate over the raw corpus (NULL-skipping sums in
-    # both engines) but only well-formed vectors get ASSIGNED — the
-    # wf_vectors/vec-CTE contract (review r13)
-    pairs = (
-        wf_vectors(em)
-        .select("vec_id", F.col("label").alias("own_label"), "embedding")
-        .crossJoin(F.broadcast(cvecs))
-        .select("vec_id", "own_label", "cand_label",
-                cosine("embedding", "cvec").alias("cos_sim"))
-    )
-    best = pairs.groupBy("vec_id", "own_label").agg(
-        F.expr("max_by(struct(cand_label, cos_sim), "
-               "struct(cos_sim, -cand_label))").alias("b"))
-    return best.select(
-        "vec_id", "own_label",
-        F.col("b.cand_label").alias("ivf_label"),
-        F.col("b.cos_sim").alias("cos_sim"))
+    asg = assign_nearest(
+        em, centroid_vectors(em.select("label", "embedding"), "label"),
+        "label", carry=("label",))
+    return asg.select("vec_id", F.col("label").alias("own_label"),
+                      F.col("cluster").alias("ivf_label"), "cos_sim")
 
 
 # ------------------------------------------------------------- k-means

@@ -12,9 +12,10 @@ in a way that is verifiable locally and decisive at cluster scale:
   sorted within files, bloom-filtered on the point-lookup column.
   Partition pruning == dropping whole segments; row-group stats == block
   skipping.  ``compact_store`` rewrites it, ``purge_before`` expires it.
-- ``write_bucketed_pair`` — co-located bucketed tables for the recurring
-  fact⋈fact join (lineitem⋈orders): both sides pre-hashed into the same
-  bucket layout so the join compiles with NO shuffle exchange.
+
+The co-located bucketed layout for the recurring fact⋈fact join
+(lineitem⋈orders) is not here: ``catalog.build_bucket_layout`` is its
+one writer, and routed keys read it through ``catalog.routed_tables``.
 """
 
 from __future__ import annotations
@@ -178,51 +179,6 @@ def purge_before(spark: SparkSession, path: str, cutoff_day: str) -> int:
             shutil.rmtree(os.path.join(base, entry))
             dropped += 1
     return dropped
-
-
-def reap_dead_warehouse_tables(spark: SparkSession, prefix: str) -> None:
-    """Remove managed-table dirs named ``<prefix>p<pid>`` whose owning
-    process is gone — the warehouse-side twin of
-    ``catalog.fresh_scratch_dir``'s reaper, for PID-scoped bucketed
-    exhibit tables (review r10: fixed shared names let one session's
-    DROP+rmtree yank bucket files out from under another's live join;
-    PID scoping fixes the clobber, this reaper bounds the leak)."""
-    import re
-
-    from .catalog import _reap_dead_owners
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse").removeprefix("file:")
-    _reap_dead_owners(warehouse, re.compile(rf"^{re.escape(prefix)}p(\d+)$"))
-
-
-def write_bucketed_pair(spark: SparkSession,
-                        lineitem: DataFrame, orders: DataFrame,
-                        n_buckets: int = 8,
-                        li_table: str = "lineitem_bkt",
-                        od_table: str = "orders_bkt") -> None:
-    """Write lineitem and orders bucketed+sorted on the join key.  A
-    subsequent join of the two tables requires no Exchange on either side
-    (asserted in tests/test_scale.py) — at 100 TB this removes the
-    dominant shuffle of every order-grain query."""
-    import shutil
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    for tbl in (li_table, od_table):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        # A fresh metastore can't see a previous run's managed location;
-        # remove the orphan dir so saveAsTable doesn't refuse it.
-        loc = warehouse.removeprefix("file:") + "/" + tbl
-        shutil.rmtree(loc, ignore_errors=True)
-    (
-        lineitem.write.mode("overwrite")
-        .bucketBy(n_buckets, "l_orderkey").sortBy("l_orderkey")
-        .format("parquet").saveAsTable(li_table)
-    )
-    (
-        orders.write.mode("overwrite")
-        .bucketBy(n_buckets, "o_orderkey").sortBy("o_orderkey")
-        .format("parquet").saveAsTable(od_table)
-    )
 
 
 def global_row_number(df: DataFrame, order: list, alias: str = "pos",

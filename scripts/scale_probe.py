@@ -21,9 +21,10 @@ Env: SCALE_PROBE_REPS (overrides every row's reps),
 SPARK_GRAFT_DRIVER_MEM (defaulted to 48g here).
 
 Methodology: bench.timed (noop sink, fingerprint observed on the timed
-action), one shared session, the repo's standard scale-parameterised
-confs (AQE on, shuffle partitions NOT retuned per scale), arms of the
-same key interleaved so ambient drift hits both equally.  Plain arms
+action) after one untimed run per arm, one shared session, the repo's
+standard scale-parameterised confs (AQE on, shuffle partitions NOT
+retuned per scale), arms of the same key interleaved so ambient drift
+hits both equally.  Plain arms
 point LSTORE_SPARK_SCRATCH_ROOT at an empty dir for the duration of the
 arm (layouts invisible -> routed_tables falls back to plain parquet);
 the _nb arms additionally disable the broadcast threshold, to check
@@ -221,13 +222,16 @@ def agreed_fingerprint(key: str, label: str,
 
 def probe_key(spark, key: str, arms: tuple[str, ...], reps: int,
               sf_dir: str, label: str, hide_root: str) -> dict:
-    """One key on one fixture: each arm's plan shape, then ``reps``
-    interleaved timed runs per arm, then the agreed fingerprint."""
+    """One key on one fixture: each arm's plan shape and one untimed
+    run (the key's first-run codegen and artifact builds stay out of
+    its median), then ``reps`` interleaved timed runs per arm, then the
+    agreed fingerprint."""
     fn = RUNNERS.get(key) or QUERIES[key]
     entry: dict = {}
     for a in arms:
         with arm_env(spark, a, hide_root):
             entry[f"plan_{a}"] = plan_stats(fn(spark, sf_dir))
+            timed(spark, fn, sf_dir)
         release_pins()
     times: dict[str, list[float]] = {a: [] for a in arms}
     fps: dict[str, list[dict]] = {a: [] for a in arms}

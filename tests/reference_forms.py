@@ -1,8 +1,8 @@
 """Reference forms that the parity tests compare production operators
 against.  Each is the interpreted (JVM HOF / explode + groupBy) form of
 an operator whose product code takes another path (a vectorized
-pandas-UDF, or a per-row pre-aggregation); they live here, not in
-``lstore_spark``, because no query runs them."""
+pandas-UDF, a per-row pre-aggregation, or vectorized numpy rounding);
+they live here, not in ``lstore_spark``, because no query runs them."""
 
 from __future__ import annotations
 
@@ -142,3 +142,18 @@ def substring_dedup_two_exchange(docs: DataFrame, w: int) -> DataFrame:
             .agg(F.count_distinct("doc_id").alias("n_docs"),
                  F.count(F.lit(1)).alias("n_occ"))
             .filter(F.col("n_docs") > 1))
+
+
+def lut_cells_decimal(sq):
+    """``ann_index._lut_cells`` one Decimal per cell: each float64 x
+    quantized HALF_UP at the 1e-8 grain on its exact binary expansion
+    (Spark's CAST(x AS DECIMAL(30,8))), scaled to an int64."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    q8 = Decimal("1E-8")
+    flat = np.asarray(sq, dtype=np.float64).ravel()
+    return np.fromiter(
+        (int(Decimal(float(x)).quantize(q8, ROUND_HALF_UP).scaleb(8))
+         for x in flat), dtype=np.int64, count=flat.size)

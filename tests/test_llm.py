@@ -816,6 +816,47 @@ def test_search_lut_memo_replaces_and_degrades_null_queries(spark, sf_dir,
     ai._LUT_CACHE.clear()
 
 
+def test_query_lut_equals_decimal_reference(spark, sf_dir):
+    """ann_index._lut_cells (numpy round-half-up of x·1e8, Decimal only
+    near a .5 boundary, at or past 2^52 or off the finite range) equals
+    the one-Decimal-per-cell reference on the index's real queries, on
+    random queries over random SQ8 grids of several magnitudes, and on
+    cells planted on and around half-grain boundaries."""
+    import numpy as np
+
+    from lstore_spark.llm import ann_index as ai
+    from tests.reference_forms import lut_cells_decimal
+
+    idx = ai.build_ann_index(spark, sf_dir)
+    lo, step, qmap = ai._search_lut_inputs(sf_dir, idx)
+    for qid, qe in qmap.items():
+        sq = ai._lut_sq(qe, lo, step)
+        assert np.array_equal(ai._query_lut(f"parity:{idx}", qid, qe, lo,
+                                            step), lut_cells_decimal(sq))
+    ai._LUT_CACHE.clear()
+    rng = np.random.default_rng(14)
+    for scale in (1e-3, 0.1, 1.0, 30.0):
+        for _ in range(10):
+            rlo = rng.uniform(-1.0, 0.0, 64) * scale
+            rstep = rng.uniform(0.0, 2.0 / 256, 64) * scale
+            rqe = rng.normal(0.0, 0.5, 64) * scale
+            sq = ai._lut_sq(rqe, rlo, rstep)
+            assert np.array_equal(ai._lut_cells(sq), lut_cells_decimal(sq))
+    # the doubles nearest (k + 0.5)·1e-8 and their neighbours, plus
+    # exact grains and cells at and past y = 2^52
+    k = np.concatenate([np.arange(0, 2000),
+                        rng.integers(0, 1 << 50, 2000)]).astype(np.float64)
+    half = (k + 0.5) / 1e8
+    planted = np.concatenate([
+        half, np.nextafter(half, 0.0), np.nextafter(half, np.inf),
+        k / 1e8, np.array([2.0 ** 52, 2.0 ** 52 * 1.5, 2.0 ** 53]) / 1e8])
+    y = planted * 1e8
+    near = np.abs(y - np.floor(y) - 0.5) <= 2 * np.spacing(y)
+    assert near.sum() > 1000  # the Decimal fallback is exercised
+    assert np.array_equal(ai._lut_cells(planted),
+                          lut_cells_decimal(planted))
+
+
 def test_bpe_udf_parity_with_reference_and_lossless(spark, sf_dir):
     """The rows-only BPE evidence: (a) the Arrow-batched UDF's per-doc
     token counts equal an INDEPENDENT pure-Python re-tokenization of
@@ -1668,6 +1709,33 @@ def test_degenerate_embeddings_flow_through(spark, tmp_path):
     asg = {r.vec_id for r in
            QUERIES["q_llm_emb_kmeans_portable"](spark, sf).collect()}
     assert asg == set(range(12)), "degenerate vectors must not be assigned"
+
+
+def test_ivf_assign_nan_element_vector_gets_null_cosine(spark, tmp_path):
+    """q_llm_emb_ivf_assign routes through assign_nearest, whose cosine
+    UDF maps a NaN-element vector to NULL cosines: the vector is kept,
+    with cos_sim NULL and the lowest label (the all-NULL argmax).  The
+    well-formed rows still get a real cosine."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lstore_spark.registry import QUERIES
+
+    good = [[float(i % 7) - 3.0 + j * 0.01 for i in range(64)]
+            for j in range(12)]
+    emb = good + [good[0][:5] + [float("nan")] + good[0][6:]]
+    fx = tmp_path / "fx"
+    fx.mkdir()
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(len(emb)), pa.int64()),
+        "embedding": pa.array(emb, pa.list_(pa.float32())),
+        "label": pa.array([1 + i % 3 for i in range(len(emb))], pa.int32()),
+    }), str(fx / "embeddings.parquet"))
+    rows = {r.vec_id: r for r in
+            QUERIES["q_llm_emb_ivf_assign"](spark, str(fx)).collect()}
+    assert set(rows) == set(range(13))
+    assert rows[12].cos_sim is None and rows[12].ivf_label == 1
+    assert all(rows[i].cos_sim is not None for i in range(12))
 
 
 def test_degenerate_documents_oracle_parity(spark, tmp_path):
