@@ -321,16 +321,17 @@ def _search_lut_inputs(sf_dir: str, idx: str):
     closure, ZERO driver-side Decimal loops (VERDICT r12 #3; the old
     driver build ran 164k Decimal.quantize calls per cold search).
     NULL/short query embeddings degrade to dropped rows, same as every
-    other path in the module (review r12)."""
+    other path in the module (review r12): ``read_query_slice`` already
+    drops them, and this check holds the closure to the same rule."""
     import pyarrow.parquet as pqt
 
-    from .similarity import read_query_slice
+    from .similarity import read_query_slice, well_formed_rows
 
     b = pqt.read_table(os.path.join(idx, "bounds")).to_pylist()[0]
     qt = read_query_slice(sf_dir)
-    qmap = {int(q): [float(x) for x in qv]
-            for q, qv in zip(qt.vec_id, qt.embedding)
-            if qv is not None and len(qv) == _DIM}
+    ids = list(qt.vec_id)
+    pos, Q = well_formed_rows(qt.embedding, _DIM)
+    qmap = {int(ids[i]): [float(x) for x in qv] for i, qv in zip(pos, Q)}
     return ([float(x) for x in b["lo"]], [float(x) for x in b["step"]],
             qmap)
 

@@ -1076,9 +1076,8 @@ def semantic_dedup(em: DataFrame, n_clusters: int,
     their members are all kept (keep=true), never mis-dropped — and the
     same width aggregate is one map-side-combined count on the cluster
     key.  None (the oracle-checked key) disables the cap."""
-    from .embeddings import (assign_nearest, assign_nearest_hierarchical,
-                             wf_vectors)
-    from .similarity import _norm
+    from .embeddings import assign_nearest, assign_nearest_hierarchical
+    from .similarity import _norm, wf_vectors
 
     w = Window.orderBy("vec_id")
     # seeds = the lowest WELL-FORMED vec_ids (review r13, the

@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..numerics import DEC, dsum9, sql_dsum9
 from ..registry import query
-from .similarity import _norm, evaluate_once, partitioned_topk
+from .similarity import (_norm, evaluate_once, partitioned_topk,
+                         well_formed_rows, wf_vectors)
 
 
 @query(
@@ -246,19 +247,6 @@ def centroid_vectors(df: DataFrame, key: str) -> DataFrame:
     return centroid_from_elems(exploded_elems(df, key), key)
 
 
-def wf_vectors(df: DataFrame) -> DataFrame:
-    """Well-formed corpus vectors only: non-NULL, exactly
-    ``EMBEDDING_DIM`` elements, no NULL elements.  The degenerate rest
-    degrades to DROPPED (the matryoshka/pq_encode contract, review
-    r12) — the SQL twin of this guard is the two-line WHERE every
-    assignment oracle's vec CTE carries (review r13)."""
-    from ..catalog import EMBEDDING_DIM
-    return df.filter(
-        F.col("embedding").isNotNull()
-        & (F.size("embedding") == EMBEDDING_DIM)
-        & (F.size(F.filter("embedding", lambda x: x.isNull())) == 0))
-
-
 def assign_nearest(em: DataFrame, cvecs: DataFrame, key: str,
                    carry: tuple = ()) -> DataFrame:
     """Route every vector to its max-cosine centroid (tie → lowest key)
@@ -416,32 +404,24 @@ def assign_nearest_hierarchical(em: DataFrame, cvecs: DataFrame,
 
     @F.pandas_udf(out_t)
     def route(vec):
-        vals = vec.to_numpy()
-        # a correct-LENGTH vector containing NULL elements must also
-        # degrade to (NULL, NULL): astype turns None into nan, the
-        # cosines all go nan, and np.argmax over nans returns position
-        # 0 — a valid-LOOKING but arbitrary cluster (review r12)
-        ok = np.array([
-            v is not None and len(v) == dim
-            and not np.isnan(np.asarray(v, dtype=np.float64)).any()
-            for v in vals])
-        cl = np.full(len(vals), None, dtype=object)
-        cs = np.full(len(vals), None, dtype=object)
-        if ok.any():
-            V = np.stack(vals[ok]).astype(np.float64)
-            vn = np.linalg.norm(V, axis=1)
-            vn[vn == 0.0] = np.inf
-            Vn = V / vn[:, None]
-            cell = np.argmax(np.round(Vn @ coarse_t, 6), axis=1)
-            pos = np.nonzero(ok)[0]
-            for cid in np.unique(cell):
-                m = cell == cid
-                book, bids = books.get(int(cid), (Cn.T, ids))
-                S = np.round(Vn[m] @ book, 6)
-                j = np.argmax(S, axis=1)
-                for p, jj, s in zip(pos[m], j, S[np.arange(len(j)), j]):
-                    cl[p] = int(bids[jj])
-                    cs[p] = float(s)
+        # a degenerate vector degrades to (NULL, NULL): its cosines
+        # would all go nan, and np.argmax over nans returns position 0
+        # — a valid-LOOKING but arbitrary cluster (review r12)
+        pos, V = well_formed_rows(vec, dim)
+        cl = np.full(len(vec), None, dtype=object)
+        cs = np.full(len(vec), None, dtype=object)
+        vn = np.linalg.norm(V, axis=1)
+        vn[vn == 0.0] = np.inf
+        Vn = V / vn[:, None]
+        cell = np.argmax(np.round(Vn @ coarse_t, 6), axis=1)
+        for cid in np.unique(cell):
+            m = cell == cid
+            book, bids = books.get(int(cid), (Cn.T, ids))
+            S = np.round(Vn[m] @ book, 6)
+            j = np.argmax(S, axis=1)
+            for p, jj, s in zip(pos[m], j, S[np.arange(len(j)), j]):
+                cl[p] = int(bids[jj])
+                cs[p] = float(s)
         return pd.DataFrame({"cluster": cl, "cos_sim": cs})
 
     # carry: same contract as assign_nearest's (r14) — default () keeps
@@ -906,9 +886,9 @@ def pq_code_rows(V, C, m_: int = _PQ_M, d_: int = _PQ_D):
 def pq_codes_udf(C):
     """Arrow-batched corpus encoder shared by q_llm_emb_pq_encode and
     q_llm_emb_pq_adc: embedding → array<int> of the M sub-codes against
-    codebook ``C`` (``pq_code_rows``).  NULL, ragged and NULL-element
-    vectors map to NULL.  Both callers filter those rows out, which is
-    why the UDF is built with ``evaluate_once``."""
+    codebook ``C`` (``pq_code_rows``).  Every row that
+    ``well_formed_rows`` drops maps to NULL.  Both callers filter those
+    rows out, which is why the UDF is built with ``evaluate_once``."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import ArrayType, IntegerType
@@ -918,19 +898,13 @@ def pq_codes_udf(C):
     @evaluate_once
     @F.pandas_udf(ArrayType(IntegerType()))
     def pq_codes(vec):
-        vals = vec.to_numpy()
-        # NULL-element vectors must also drop: astype turns None into
-        # nan and the argmin over nan distances returns code 0 — a
-        # valid-looking but arbitrary code (review r12)
-        ok = np.array([
-            v is not None and len(v) == dim
-            and not np.isnan(np.asarray(v, dtype=np.float64)).any()
-            for v in vals])
-        out = [None] * len(vals)
-        if ok.any():
-            codes = pq_code_rows(np.stack(vals[ok]).astype(np.float64), C)
-            for i, j in zip(np.nonzero(ok)[0], range(len(codes))):
-                out[i] = codes[j]
+        # a degenerate vector must map to NULL: the argmin over nan
+        # distances returns code 0 — a valid-looking but arbitrary code
+        # (review r12)
+        pos, V = well_formed_rows(vec, dim)
+        out = [None] * len(vec)
+        for i, codes in zip(pos, pq_code_rows(V, C)):
+            out[i] = codes
         return pd.Series(out)
 
     return pq_codes

@@ -212,15 +212,6 @@ def _make_gif(w: int, h: int) -> bytes:
             + b"\x3b")
 
 
-def _blob_len(fmt: str, w: int, h: int) -> int:
-    """Closed-form container size (must mirror the oracle's CASE)."""
-    if fmt == "png":
-        return 68 + (3 * w + 1) * h  # 8 sig + 25 IHDR + (raw+23) IDAT + 12 IEND
-    if fmt == "bmp":
-        return 54 + (3 * w + 3) // 4 * 4 * h
-    return 35  # gif
-
-
 def synth_media(seed: bytes) -> bytes:
     """Deterministic real-container media from a 16-byte seed (md5 of
     the doc text): format = seed[0] % 3, dims = 8 + seed[1|2] % 32."""

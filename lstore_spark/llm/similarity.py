@@ -18,7 +18,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, table_rows
+from ..catalog import EMBEDDING_DIM, load_table, table_rows
 from ..registry import pin, query
 
 # ---- shared Spark-side vector expressions (HOFs — no UDF, JVM-side) ----
@@ -117,22 +117,18 @@ def read_query_slice(sf_dir: str, bound: int = 10):
     """Query batch (vec_id < bound) via a driver-side pyarrow read, not
     a Spark job: it is a handful of rows of a local parquet file, and
     at 100 TB the query batch arrives driver-side anyway.  float32 →
-    float64 is exact (same as the JVM CAST).  Sorted by vec_id."""
+    float64 is exact (same as the JVM CAST).  Well-formed queries only
+    (``well_formed_rows``): every oracle restricts its query side the
+    same way, so a dropped row is absent from BOTH engines.  Sorted by
+    vec_id."""
     import os
 
-    import numpy as np
     import pyarrow.parquet as pq
     qt = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"),
                        columns=["vec_id", "embedding"],
                        filters=[("vec_id", "<", bound)]).to_pandas()
-    # well-formed queries only (review r12): a NULL/ragged/NULL-element
-    # query vector crashed np.stack in the downstream UDF factories —
-    # every oracle now restricts its query side the same way, so the
-    # dropped rows are absent from BOTH engines
-    keep = qt.embedding.map(
-        lambda v: v is not None and len(v) == 64
-        and not np.isnan(np.asarray(v, dtype=np.float64)).any())
-    return qt[keep].sort_values("vec_id")
+    pos, _ = well_formed_rows(qt.embedding, EMBEDDING_DIM)
+    return qt.iloc[pos].sort_values("vec_id")
 
 
 def all_pairs_cosine_udf(M):
@@ -166,34 +162,25 @@ def all_pairs_cosine_udf(M):
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def cos_all(vec):
-        vals = vec.to_numpy()
-        # NULL-element vectors drop whole (None row → posexplode emits
-        # nothing), matching the oracles' well-formed restriction — the
-        # nan path previously emitted all-NULL cos rows (review r12)
-        ok = np.array([
-            v is not None and len(v) == dim
-            and not np.isnan(np.asarray(v, dtype=np.float64)).any()
-            for v in vals])
-        out = [None] * len(vals)
-        if ok.any():
-            V = np.stack(vals[ok]).astype(np.float64)
-            dots = np.zeros((len(V), n_t))
-            nacc = np.zeros(len(V))
-            for d in range(dim):
-                col = V[:, d]
-                nacc = nacc + col * col
-                dots = dots + col[:, None] * M[None, :, d]
-            denom = np.sqrt(nacc)[:, None] * tn[None, :]
-            cos = np.divide(dots, denom,
-                            out=np.full_like(dots, np.nan),
-                            where=denom != 0)
-            for i, j in zip(np.nonzero(ok)[0], range(len(cos))):
-                row = cos[j]
-                if np.isnan(row).any():  # zero-norm pair(s): NULL them
-                    out[i] = [None if np.isnan(x) else float(x)
-                              for x in row]
-                else:
-                    out[i] = row
+        # a degenerate row maps to NULL (posexplode emits nothing),
+        # matching the oracles' well-formed restriction
+        pos, V = well_formed_rows(vec, dim)
+        dots = np.zeros((len(V), n_t))
+        nacc = np.zeros(len(V))
+        for d in range(dim):
+            col = V[:, d]
+            nacc = nacc + col * col
+            dots = dots + col[:, None] * M[None, :, d]
+        denom = np.sqrt(nacc)[:, None] * tn[None, :]
+        cos = np.divide(dots, denom,
+                        out=np.full_like(dots, np.nan),
+                        where=denom != 0)
+        out = [None] * len(vec)
+        for i, row in zip(pos, cos):
+            if np.isnan(row).any():  # zero-norm pair(s): NULL them
+                out[i] = [None if np.isnan(x) else float(x) for x in row]
+            else:
+                out[i] = row
         return pd.Series(out)
 
     return cos_all
@@ -225,16 +212,53 @@ _DUCK_PAIRS = f"""
   GROUP BY a.vec_id, b.vec_id
 """
 
-# Well-formed-vector CTE prepended to every _DUCK_PAIRS oracle (review
-# r12): the SUM-based dot silently SKIPS NULL terms, so a ragged or
-# NULL-element vector got a real partial-dot cosine from DuckDB while
-# every Spark path drops it — restricting both engines to well-formed
-# vectors makes 'degenerate rows drop' the single shared contract.
+# ---- the well-formed-vector rule: oracle, JVM and numpy forms ----
+
+# Oracle form, prepended to every _DUCK_PAIRS oracle (review r12): the
+# SUM-based dot silently SKIPS NULL terms, so a ragged or NULL-element
+# vector got a real partial-dot cosine from DuckDB while every Spark
+# path drops it — restricting both engines to well-formed vectors makes
+# 'degenerate rows drop' the single shared contract.
 _WF_CTE = """wf_embeddings AS (
   SELECT * FROM embeddings
   WHERE len(embedding) = 64
     AND len(list_filter(embedding, x -> x IS NULL)) = 0
 )"""
+
+
+def wf_vectors(df: DataFrame) -> DataFrame:
+    """JVM form: well-formed corpus vectors only — non-NULL, exactly
+    ``EMBEDDING_DIM`` elements, no NULL element.  The degenerate rest
+    degrades to DROPPED (the matryoshka/pq_encode contract, review r12)
+    — the SQL twin of this guard is the two-line WHERE every assignment
+    oracle's vec CTE carries (review r13).  A NaN element is not NULL,
+    so a NaN-element vector is kept."""
+    return df.filter(
+        F.col("embedding").isNotNull()
+        & (F.size("embedding") == EMBEDDING_DIM)
+        & (F.size(F.filter("embedding", lambda x: x.isNull())) == 0))
+
+
+def well_formed_rows(vals, dim: int):
+    """Numpy form: ``(positions, matrix)`` for the well-formed rows of
+    ``vals`` (any sequence of vectors, e.g. an Arrow batch's pandas
+    Series): their ascending indices in ``vals`` and their float64
+    stack, shape ``(len(positions), dim)``.  Every Arrow-batched vector
+    kernel takes its batch through here and scatters its results back
+    by position; every other row's output is NULL.
+
+    A NaN element counts as NULL here, because Arrow hands a NULL
+    element to pandas as NaN.  So a NaN-element vector that
+    ``wf_vectors`` keeps is dropped here: ``assign_nearest`` gives it
+    NULL cosines (``test_ivf_assign_nan_element_vector_gets_null_cosine``)."""
+    import numpy as np
+
+    rows = [(i, v) for i, v in enumerate(vals)
+            if v is not None and len(v) == dim
+            and not np.isnan(np.asarray(v, dtype=np.float64)).any()]
+    pos = np.array([i for i, _ in rows], dtype=np.intp)
+    return pos, np.asarray([v for _, v in rows],
+                           dtype=np.float64).reshape(len(rows), dim)
 
 
 @query(
@@ -603,10 +627,10 @@ def hyperplane_band_rows(df: DataFrame, id_col: str, vec_col: str,
     differently across BLAS builds (the measure of at-risk inputs is
     the same as the old near-zero caveat).  LSH callers are rows-only/
     approximate; the bit-reproducible alternative remains the old
-    left-to-right fold at ~16× the wall.  Rows with a NULL
-    or wrong-length vector get a NULL bucket array (the explode then
-    emits nothing for them — same degraded-output behavior as the old
-    NULL-propagating HOF form, instead of a task crash).
+    left-to-right fold at ~16× the wall.  A row that
+    ``well_formed_rows`` drops gets a NULL bucket array (the explode
+    then emits nothing for it — same degraded-output behavior as the
+    old NULL-propagating HOF form, instead of a task crash).
     The explode emits ``bands`` narrow rows per vector.
 
     Plan construction runs NO Spark job (VERDICT r8 #7): the plane
@@ -631,17 +655,7 @@ def hyperplane_band_rows(df: DataFrame, id_col: str, vec_col: str,
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def band_buckets(vec):
-        vals = vec.to_numpy()
-        # NULL-element vectors get the NULL bucket array the docstring
-        # promises: nan dots compare False against 0, which previously
-        # minted a concrete all-zero-bits signature (review r12)
-        ok = np.array([
-            v is not None and len(v) == dim
-            and not np.isnan(np.asarray(v, dtype=np.float64)).any()
-            for v in vals])
-        if not ok.any():
-            return pd.Series([None] * len(vals))
-        V = np.stack(vals[ok]).astype(np.float64)            # (m_ok, dim)
+        pos, V = well_formed_rows(vec, dim)                  # (m_ok, dim)
         # Round at the 1e-6 grain (same as the IVF argmax) before the
         # sign threshold so a plane dot within ~1 ulp of zero cannot
         # flip a bucket across BLAS builds or Arrow batch compositions.
@@ -649,9 +663,9 @@ def hyperplane_band_rows(df: DataFrame, id_col: str, vec_col: str,
         B = np.stack(
             [S[:, b * bits:(b + 1) * bits] @ pow2 for b in range(bands)],
             axis=1).astype(np.int32)                         # (m_ok, bands)
-        out = [None] * len(vals)
-        for i, j in zip(np.nonzero(ok)[0], range(len(B))):
-            out[i] = B[j]
+        out = [None] * len(vec)
+        for i, b in zip(pos, B):
+            out[i] = b
         return pd.Series(out)
 
     return (
@@ -945,12 +959,18 @@ def q_llm_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     earlier crossJoin+max_by form pushed corpus×n_lists rows through an
     exchange).  Scores round at 1e-6 before argmax so routing keeps the
     old ROUND-6 cosine's tie semantics (first index = smallest list_id)
-    and stays independent of BLAS/batch accumulation order; NULL or
-    ragged vectors route to NULL and drop out of the join (degraded
-    output, not a worker crash); a zero centroid scores 0 everywhere
-    instead of NaN-poisoning argmax.  NOTE: building this DataFrame
-    eagerly runs the centroid job (the collect) — plan-only callers pay
-    one small aggregation.  Cost drops from O(|corpus|·|queries|) to
+    and stays independent of BLAS/batch accumulation order; a vector
+    that ``well_formed_rows`` drops (NULL, ragged, NULL- or NaN-element)
+    routes to NULL and drops out of the join (degraded output, not a
+    worker crash); a zero centroid scores 0 everywhere instead of
+    NaN-poisoning argmax.  The key keeps these float means and this
+    one-matmul router rather than ``centroid_vectors`` (exact-decimal
+    means) and ``assign_nearest`` (bit-parity cosine fold, array
+    output): with those two the key ran 1.61 s against 0.93 s at sf0.1
+    and 4.73 s against 1.81 s at the 10× fixture (medians of 3, 4
+    cores).  NOTE: building this DataFrame eagerly runs the centroid
+    job (the collect) — plan-only callers pay one small aggregation.
+    Cost drops from O(|corpus|·|queries|) to
     O(|corpus|·nprobe/n_lists·|queries|).  Recall vs the exact top-k is
     asserted in pytest (rows-only for the driver)."""
     nprobe, k = 3, 5
@@ -987,23 +1007,17 @@ def q_llm_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     @evaluate_once
     @F.pandas_udf("int")
     def nearest_list(vec):
-        vals = vec.to_numpy()
-        # NULL-element vectors must route to NULL, not list_ids[0]:
+        # a degenerate vector must route to NULL, not list_ids[0]:
         # np.argmax over an all-nan score row returns 0 (review r12)
-        ok = np.array([
-            v is not None and len(v) == dim
-            and not np.isnan(np.asarray(v, dtype=np.float64)).any()
-            for v in vals])
-        out = [None] * len(vals)
-        if ok.any():
-            V = np.stack(vals[ok]).astype(np.float64)
-            # |v| is constant per row — argmax of V @ Cn ranks by cosine
-            # without normalizing the query side; round at the old
-            # ROUND-6 grain so ties break to the smallest list_id and
-            # BLAS/batch accumulation order cannot flip the pick.
-            pick = list_ids[np.argmax(np.round(V @ Cn, 6), axis=1)]
-            for i, j in zip(np.nonzero(ok)[0], range(len(pick))):
-                out[i] = int(pick[j])
+        pos, V = well_formed_rows(vec, dim)
+        # |v| is constant per row — argmax of V @ Cn ranks by cosine
+        # without normalizing the query side; round at the old ROUND-6
+        # grain so ties break to the smallest list_id and BLAS/batch
+        # accumulation order cannot flip the pick.
+        pick = list_ids[np.argmax(np.round(V @ Cn, 6), axis=1)]
+        out = [None] * len(vec)
+        for i, p in zip(pos, pick):
+            out[i] = int(p)
         return pd.Series(out, dtype="Int32")
 
     assigned = corpus.select(

@@ -15,7 +15,7 @@ are per-query; the overarching 100 TB rules:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import fits_broadcast, load_table
@@ -298,57 +298,6 @@ def q_join_interval_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def asof_join_timeline(ev: DataFrame, od: DataFrame) -> DataFrame:
-    """General-case as-of shape (VERDICT r1 item 3): UNION the two slim
-    inputs tagged by side, sort each user's timeline once, carry the
-    latest order forward with one ``last(struct, ignoreNulls)`` over a
-    running-rows frame.  One shuffle on ``user_id``, no broadcast of
-    either fact table, **zero row multiplication** — every event stays
-    exactly one row no matter how many prior orders the user has.  This
-    is the shape for large-probe × large-build at 100 TB.
-
-    Within a user's timeline, orders sort before events at equal
-    timestamp (``is_event`` 0 < 1) so an order placed exactly at the
-    event time is visible (the ``<=`` bound), and equal-date orders sort
-    by ``o_orderkey`` ascending so ``last()`` picks the max key — the
-    same total tie-break as the oracle's ROW_NUMBER ``DESC, DESC``.
-    """
-    ev_u = ev.select(
-        "user_id", F.col("ts").alias("t"), F.lit(1).alias("is_event"),
-        "event_id", "value",
-        F.lit(None).cast("long").alias("ord_key"),
-        F.lit(None).cast("timestamp_ntz").alias("ord_date"),
-    )
-    od_u = od.select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").alias("t"), F.lit(0).alias("is_event"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast("double").alias("value"),
-        F.col("o_orderkey").alias("ord_key"),
-        F.col("o_orderdate").alias("ord_date"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("t", "is_event", "ord_key")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # One window function, not two: last() over a struct that is NULL on
-    # event rows (a bare struct of NULLs is non-null, so wrap in when()).
-    ord_struct = F.when(
-        F.col("ord_key").isNotNull(),
-        F.struct(F.col("ord_key"), F.col("ord_date")))
-    return (
-        od_u.unionByName(ev_u)
-        .withColumn("asof", F.last(ord_struct, ignorenulls=True).over(w))
-        .filter(F.col("is_event") == 1)
-        .select(
-            "event_id", "user_id", "value",
-            F.col("asof.ord_key").alias("o_orderkey"),
-            F.col("asof.ord_date").cast("date").alias("asof_date"),
-        )
-    )
-
-
 def asof_join_broadcast_agg(ev: DataFrame, od: DataFrame) -> DataFrame:
     """Small-probe as-of shape: broadcast the (small) event side into an
     inner range join against orders, immediately collapse the match
@@ -400,10 +349,10 @@ FROM matched WHERE rn = 1
 def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each event → latest order of that user at-or-before the
     event time (lstore consumers do this against reference tables; SURVEY
-    §2.3).  Two physical shapes, picked by probe-side size:
-    ``asof_join_broadcast_agg`` when the probe side is bounded-small (as
-    here — the query filters to event_id < 2000), ``asof_join_timeline``
-    for large×large (kept under test + plan assertions)."""
+    §2.3).  Always ``asof_join_broadcast_agg``: the query's own
+    ``event_id < 2000`` predicate bounds the probe side.  The large×large
+    union + running-``last()`` shape lives in tests/reference_forms.py
+    as the parity and plan reference."""
     ev = (load_table(spark, sf_dir, "events")
           .filter(F.col("event_id") < 2000)
           .select("event_id", "user_id", "value", "ts"))

@@ -15,8 +15,9 @@ checkout's package, whatever $PYTHONPATH says):
     PYTHONPATH=<tree> python <checkout>/scripts/dump_plans.py <out_dir> <suffix>
 
 Normalised: expression ids (`#123`, `#123L`), `plan_id=`, RDD ids
-(`MapPartitionsRDD[23]`) and the per-process `_p<pid>` suffix of
-scratch tables and dirs.  These count objects the session has created
+(`MapPartitionsRDD[23]`), the numbered lambda variables of Python
+lambdas in `F.filter`/`F.transform` (`lambda x_9`) and the per-process
+`_p<pid>` suffix of scratch tables and dirs.  These count objects the session has created
 so far, so they differ between runs of identical plans.  Exchange
 ordering by expression-id hashing can still make a plan depend on
 session history; dump such a key alone in a fresh session.
@@ -40,6 +41,7 @@ _COUNTERS = (
     (re.compile(r"#\d+L?\b"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"\b(lambda [A-Za-z]+)_\d+\b"), r"\1_N"),
     (re.compile(r"_p\d+\b"), "_pPID"),
 )
 

@@ -122,6 +122,7 @@ PROBES: list[tuple[str, tuple[str, ...], int]] = [
     ("q_llm_sim_cosine_topk", STD, 2),
     ("q_llm_sim_hamming_topk", STD, 2),
     ("q_llm_sim_lsh_topk", STD, 2),
+    ("q_llm_sim_ivf_topk", STD, 2),
     ("q_llm_emb_pq_adc", STD, 2),
     ("q_llm_sample_importance", STD, 2),
     ("q_llm_pipeline_e2e", STD, 2),

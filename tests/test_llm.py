@@ -266,7 +266,7 @@ def test_trimmed_mean_matches_numpy(spark, sf_dir):
 
 
 def test_multimodal_features_deterministic(spark, sf_dir):
-    from lstore_spark.llm.multimodal import _blob_len
+    from tests.reference_forms import blob_len
 
     a = QUERIES["q_llm_multimodal_features"](spark, sf_dir).collect()
     b = QUERIES["q_llm_multimodal_features"](spark, sf_dir).collect()
@@ -275,7 +275,7 @@ def test_multimodal_features_deterministic(spark, sf_dir):
         assert r.format in {"png", "bmp", "gif"}
         assert 8 <= r.width < 40 and 8 <= r.height < 40
         # n_bytes is the real container size, not a fixed stand-in
-        assert r.n_bytes == _blob_len(r.format, r.width, r.height)
+        assert r.n_bytes == blob_len(r.format, r.width, r.height)
 
 
 def test_multimodal_containers_are_real_and_parse_back():
@@ -289,15 +289,15 @@ def test_multimodal_containers_are_real_and_parse_back():
     import zlib
 
     from lstore_spark.llm.multimodal import (
-        _blob_len, _make_bmp, _make_gif, _make_png, decode_image_header,
-        synth_media)
+        _make_bmp, _make_gif, _make_png, decode_image_header, synth_media)
+    from tests.reference_forms import blob_len
 
     for w, h in [(8, 8), (8, 39), (39, 8), (39, 39), (17, 23)]:
         for fmt, make in (("png", _make_png), ("bmp", _make_bmp),
                           ("gif", _make_gif)):
             blob = make(w, h)
             assert decode_image_header(blob) == (fmt, w, h)
-            assert len(blob) == _blob_len(fmt, w, h)
+            assert len(blob) == blob_len(fmt, w, h)
         png = _make_png(w, h)
         # independent PNG validation: walk chunks, CRC each, inflate
         pos, chunks = 8, {}
@@ -1737,6 +1737,95 @@ def test_ivf_assign_nan_element_vector_gets_null_cosine(spark, tmp_path):
     assert rows[12].cos_sim is None and rows[12].ivf_label == 1
     assert all(rows[i].cos_sim is not None for i in range(12))
 
+
+def test_well_formed_rows_keeps_only_well_formed_vectors():
+    """similarity.well_formed_rows on one batch of every degenerate
+    kind: only the good and the zero vector come back, as float64 rows
+    at their positions.  An Arrow batch hands a NULL element to pandas
+    as NaN, and the helper drops both the same way."""
+    import pyarrow as pa
+
+    from lstore_spark.llm.similarity import well_formed_rows
+
+    good = [float(i) - 1.5 for i in range(4)]
+    batch = [good, None, [], good[:3], good + [1.0],
+             good[:1] + [None] + good[2:], good[:1] + [float("nan")] + good[2:],
+             [0.0] * 4]
+    for vals in (batch, pa.array(batch, pa.list_(pa.float32())).to_pandas()):
+        pos, V = well_formed_rows(vals, 4)
+        assert pos.tolist() == [0, 7]
+        assert V.dtype == np.float64 and V.tolist() == [good, [0.0] * 4]
+    for vals in ([None, [], [float("nan")] * 4], []):
+        pos, V = well_formed_rows(vals, 4)
+        assert pos.tolist() == [] and V.shape == (0, 4)
+
+
+def test_well_formed_predicate_lives_only_in_well_formed_rows():
+    """The per-row well-formed predicate (``np.isnan(np.asarray(``) is
+    written once in lstore_spark, inside similarity.well_formed_rows:
+    every numpy vector kernel takes its batch through that helper."""
+    import ast
+    import os
+
+    import lstore_spark
+
+    pkg = os.path.dirname(os.path.abspath(lstore_spark.__file__))
+    found = []
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as fh:
+                src = fh.read()
+            hits = [n for n, ln in enumerate(src.splitlines(), 1)
+                    if "np.isnan(np.asarray(" in ln]
+            defs = [d for d in ast.walk(ast.parse(src))
+                    if isinstance(d, ast.FunctionDef)]
+            for n in hits:
+                inner = min((d for d in defs
+                             if d.lineno <= n <= d.end_lineno),
+                            key=lambda d: d.end_lineno - d.lineno,
+                            default=None)
+                found.append((os.path.relpath(path, pkg),
+                              inner and inner.name))
+    assert found == [("llm/similarity.py", "well_formed_rows")], found
+
+
+def test_ivf_topk_never_returns_degenerate_corpus_vectors(spark, tmp_path):
+    """q_llm_sim_ivf_topk over a corpus with one vector of each
+    degenerate kind: NULL, empty, ragged, NULL-element and NaN-element
+    vectors never come back as a candidate (a NaN re-rank cosine would
+    rank above every real one).  With 3 lists and nprobe 3 every list
+    is probed, so each query gets the 3 good candidates, then the
+    zero-norm vector at rank 4 with a NULL cosine."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    good = [[float(i % 7) - 3.0 + j * 0.01 + (i == j) for i in range(64)]
+            for j in range(13)]
+    bad = [None, [], [1.0, 2.0], good[0][:32] + [None] + good[0][33:],
+           good[0][:5] + [float("nan")] + good[0][6:]]
+    emb = good + [[0.0] * 64] + bad
+    fx = tmp_path / "fx"
+    fx.mkdir()
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(len(emb)), pa.int64()),
+        "embedding": pa.array(emb, pa.list_(pa.float32())),
+        "label": pa.array([i % 3 for i in range(len(emb))], pa.int32()),
+    }), str(fx / "embeddings.parquet"))
+    rows = QUERIES["q_llm_sim_ivf_topk"](spark, str(fx)).collect()
+    assert {r.cand_id for r in rows} == {10, 11, 12, 13}, rows
+    by_query = {}
+    for r in rows:
+        by_query.setdefault(r.query_id, []).append(r)
+    assert set(by_query) == set(range(10))
+    for q, got in by_query.items():
+        got.sort(key=lambda r: r.rank)
+        assert [r.rank for r in got] == [1, 2, 3, 4], got
+        assert sorted(r.cand_id for r in got[:3]) == [10, 11, 12], got
+        assert all(r.cos_sim is not None for r in got[:3]), got
+        assert (got[3].cand_id, got[3].cos_sim) == (13, None), got
 
 def test_degenerate_documents_oracle_parity(spark, tmp_path):
     """review r13: a systematic degenerate-documents probe (NULL text,

@@ -74,7 +74,7 @@ def test_asof_timeline_is_union_window_no_join(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from lstore_spark.catalog import load_table
-    from lstore_spark.operators.joins import asof_join_timeline
+    from tests.reference_forms import asof_join_timeline
     ev = (load_table(spark, sf_dir, "events")
           .filter(F.col("event_id") < 2000)
           .select("event_id", "user_id", "value", "ts"))
@@ -91,7 +91,7 @@ def test_asof_shapes_agree(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from lstore_spark.catalog import load_table
-    from lstore_spark.operators.joins import asof_join_timeline
+    from tests.reference_forms import asof_join_timeline
     from lstore_spark.registry import QUERIES
     ev = (load_table(spark, sf_dir, "events")
           .filter(F.col("event_id") < 2000)
